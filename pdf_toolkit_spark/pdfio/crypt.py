@@ -1,11 +1,14 @@
-"""Standard security handler (PDF 32000-1 §7.6.3): RC4 and AES-128.
+"""Standard security handler (PDF 32000-1 §7.6.3, ISO 32000-2 §7.6.4):
+RC4, AES-128 and AES-256.
 
 The reference opens encrypted PDFs through PyMuPDF; here the engine
 implements the public-spec algorithms directly. Scope: encryption
-dictionary V 1/2 (RC4-40/128, R 2/3) and V 4 / R 4 crypt filters with
-/CFM V2 (RC4) or AESV2 (AES-128-CBC, pdfio/aes.py), empty-or-known
-user password, /EncryptMetadata both ways. AES-256 (V5/R6) is detected
-and rejected with a clear error so such docs take the per-document
+dictionary V 1/2 (RC4-40/128, R 2/3), V 4 / R 4 crypt filters with
+/CFM V2 (RC4) or AESV2 (AES-128-CBC), and V 5 / R 6 with /CFM AESV3
+(AES-256-CBC, file key unwrapped from /UE or /OE after the Algorithm
+2.B password hash); empty-or-known user password, /EncryptMetadata
+both ways. The AES cipher is pdfio/aes.py. Other handlers and filter
+layouts raise UserError, so such docs take the per-document
 error-lineage path.
 """
 
@@ -201,21 +204,27 @@ def verify_r6_password(
 
 class StandardDecryptor:
     """Holds the verified file key; decrypts strings/streams per object
-    (aes=True -> AESV2: CBC, IV-prefixed, padded; else RC4)."""
+    (aes=True -> AESV2: CBC, IV-prefixed, padded; aes256=True -> AESV3,
+    the same wire format under the file key; else RC4)."""
 
     def __init__(self, file_key: bytes, aes: bool = False,
                  aes256: bool = False) -> None:
         self.file_key = file_key
         self.aes = aes
         self.aes256 = aes256
+        if aes256:
+            # V5: the FILE key encrypts every object directly (no
+            # per-object derivation, §7.6.3.3 in ISO 32000-2), so its
+            # key schedule is expanded once per document.
+            from .aes import decrypt_schedule
+
+            self._schedule = decrypt_schedule(file_key)
 
     def decrypt(self, data: bytes, num: int, gen: int) -> bytes:
         if self.aes256:
-            # V5: the FILE key encrypts every object directly (no
-            # per-object derivation, §7.6.3.3 in ISO 32000-2).
             from .aes import cbc_decrypt
 
-            return cbc_decrypt(self.file_key, data)
+            return cbc_decrypt(self._schedule, data)
         key = object_key(self.file_key, num, gen, aes=self.aes)
         if self.aes:
             from .aes import cbc_decrypt

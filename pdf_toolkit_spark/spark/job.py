@@ -306,7 +306,8 @@ def run_extraction(
     Outputs under ``out_dir``: ``spans`` (bucketed by doc_id), ``media``
     (content-addressed PNG blobs — written BEFORE spans so a committed
     doc always has resolvable media_refs), ``lineage`` (timestamped
-    per-page action log), ``metrics`` (one row per run with ISO
+    per-page action log, also written before spans, so a committed doc
+    always has its lineage), ``metrics`` (one row per run with ISO
     timestamps and the reconstructed ``command``, the reference's
     manifest metadata, manifest.py:90-106 / cli.py:434-438).
 
@@ -410,13 +411,11 @@ def run_extraction(
                         raise
             media_tbl.write.mode(write_mode).parquet(media_path)
         if spans_path:
-            out_spans = spans.withColumn(
-                "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-            )
-            # Iceberg analog: partitionedBy(bucket(N, doc_id)) + snapshot
-            # commit; parquet append keeps the same layout locally.
-            out_spans.write.mode(write_mode).partitionBy("bucket").parquet(spans_path)
-
+            # Lineage is written BEFORE the spans commit: the records'
+            # plan reads spans_path through the resume anti-join, and
+            # writing that path re-caches them, so anything computed
+            # from records afterwards would see only the docs that are
+            # still uncommitted.
             lineage_out = lineage_rows.select(
                 F.lit(run_id).alias("run_id"),
                 "doc_id",
@@ -426,6 +425,13 @@ def run_extraction(
                 F.current_timestamp().alias("recorded_at"),
             )
             lineage_out.write.mode(write_mode).parquet(f"{out_dir}/lineage")
+
+            out_spans = spans.withColumn(
+                "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+            )
+            # Iceberg analog: partitionedBy(bucket(N, doc_id)) + snapshot
+            # commit; parquet append keeps the same layout locally.
+            out_spans.write.mode(write_mode).partitionBy("bucket").parquet(spans_path)
 
         metrics = {
             "run_id": run_id,

@@ -126,6 +126,69 @@ def test_aes128_matches_fips197_vector():
         assert cbc_decrypt(key, cbc_encrypt(key, b"\x07" * 16, msg)) == msg
 
 
+def test_aes256_matches_fips197_vector():
+    from pdf_toolkit_spark.pdfio.aes import _decrypt_block, _encrypt_block, expand_key
+
+    rks = expand_key(bytes(range(32)))
+    pt = bytes.fromhex("00112233445566778899aabbccddeeff")
+    ct = _encrypt_block(pt, rks)
+    assert ct.hex() == "8ea2b7ca516745bfeafc49904b496089"  # FIPS-197 C.3
+    assert _decrypt_block(ct, rks) == pt
+
+
+#: SP 800-38A F.2 CBC example: IV and the four plaintext blocks.
+_SP800_38A_IV = bytes(range(16))
+_SP800_38A_PT = bytes.fromhex(
+    "6bc1bee22e409f96e93d7e117393172a" "ae2d8a571e03ac9c9eb76fac45af8e51"
+    "30c81c46a35ce411e5fbc1191a0a52ef" "f69f2445df4f9b17ad2b417be66c3710"
+)
+
+
+@pytest.mark.parametrize("key_hex, ct_hex", [
+    # F.2.1 CBC-AES128.Encrypt
+    ("2b7e151628aed2a6abf7158809cf4f3c",
+     "7649abac8119b246cee98e9b12e9197d" "5086cb9b507219ee95db113a917678b2"
+     "73bed6b8e3c1743b7116e69e22229516" "3ff1caa1681fac09120eca307586e1a7"),
+    # F.2.5 CBC-AES256.Encrypt
+    ("603deb1015ca71be2b73aef0857d77811f352c073b6108d72d9810a30914dff4",
+     "f58c4c04d6e5f1ba779eabfb5f7bfbd6" "9cfc4e967edb808d679f777bc6702c7d"
+     "39f23369a9d9bacfa530e26304231461" "b2eb05e2c39be9fcda6c19078c6a9d1b"),
+])
+def test_aes_cbc_matches_sp800_38a_vectors(key_hex, ct_hex):
+    from pdf_toolkit_spark.pdfio.aes import (
+        cbc_decrypt,
+        cbc_decrypt_nopad,
+        cbc_encrypt,
+        cbc_encrypt_nopad,
+        decrypt_schedule,
+    )
+
+    key, ct = bytes.fromhex(key_hex), bytes.fromhex(ct_hex)
+    assert cbc_encrypt_nopad(key, _SP800_38A_IV, _SP800_38A_PT) == ct
+    assert cbc_decrypt_nopad(key, _SP800_38A_IV, ct) == _SP800_38A_PT
+    # The padded wire format adds one block of padding after the same
+    # ciphertext, and a precomputed schedule decrypts like the raw key.
+    wire = cbc_encrypt(key, _SP800_38A_IV, _SP800_38A_PT)
+    assert wire[:16 + len(ct)] == _SP800_38A_IV + ct and len(wire) == 16 + len(ct) + 16
+    assert cbc_decrypt(key, wire) == _SP800_38A_PT
+    assert cbc_decrypt(decrypt_schedule(key), wire) == _SP800_38A_PT
+
+
+def test_aes_cbc_decrypt_rejects_malformed_input():
+    from pdf_toolkit_spark.pdfio.aes import cbc_decrypt, cbc_encrypt_nopad
+
+    key = bytes(range(16))
+    with pytest.raises(UserError, match="whole number of blocks"):
+        cbc_decrypt(key, bytes(40))  # not block-aligned
+    with pytest.raises(UserError, match="whole number of blocks"):
+        cbc_decrypt(key, bytes(16))  # IV only, shorter than 32 bytes
+    # A last plaintext byte of 0 or above 16 is not PKCS#7 padding.
+    for last in (0, 17, 255):
+        ct = cbc_encrypt_nopad(key, bytes(16), bytes(15) + bytes([last]))
+        with pytest.raises(UserError, match="Bad AES padding"):
+            cbc_decrypt(key, bytes(16) + ct)
+
+
 def test_aes_object_key_appends_salt():
     plain = object_key(b"\x00" * 16, 3, 0)
     salted = object_key(b"\x00" * 16, 3, 0, aes=True)

@@ -9,7 +9,7 @@ import pytest
 from pdf_toolkit_spark.corpus import corpus_config, make_document
 from pdf_toolkit_spark.extract import extract_document
 from pdf_toolkit_spark.spark.input import corpus_dataframe
-from pdf_toolkit_spark.spark.job import build_pipeline, run_extraction
+from pdf_toolkit_spark.spark.job import build_pipeline, read_lineage, run_extraction
 
 CFG = dict(corpus_config(), pages_per_chunk=32)  # force chunking on megas
 N_DOCS = 24
@@ -153,6 +153,17 @@ def test_resume_skips_committed_docs(spark, tmp_path):
     # Third run: nothing left to do.
     r3 = run_extraction(spark, superset, CFG, out_dir=out, run_id="r3")
     assert r3.metrics["docs_processed"] == 0
+
+    # Each run's lineage names exactly the docs that run processed.
+    def lineage_docs(run_id):
+        rows = read_lineage(spark, out).filter(f"run_id = '{run_id}'")
+        return {r["doc_id"] for r in rows.select("doc_id").distinct().collect()}
+
+    first_ids = {r["doc_id"] for r in first.select("doc_id").collect()}
+    all_ids = {r["doc_id"] for r in superset.select("doc_id").collect()}
+    assert lineage_docs("r1") == first_ids
+    assert lineage_docs("r2") == all_ids - first_ids and len(all_ids - first_ids) == 4
+    assert lineage_docs("r3") == set()
 
     # Committed output covers all 10 docs exactly once, matching serial.
     final = spark.read.parquet(f"{out}/spans")
