@@ -151,15 +151,13 @@ def main() -> None:
         queries[name](spark, sf_dir).count()
         timings[name] = time.monotonic() - t0
 
-    # Dedup/similarity ops persist shared relations (shingles,
+    # Ops queries persist shared relations (shingles, trigram counts,
     # signatures, fingerprints, buckets, centroids) for cross-branch
     # reuse; release them explicitly so a long-lived session doesn't
     # accumulate cached corpora.
-    from pdf_toolkit_spark.ops import common, dedup, similarity
+    from pdf_toolkit_spark.ops import common
 
     common.release_caches()
-    dedup.release_caches()
-    similarity.release_caches()
 
     total = sum(timings.values())
     out = {

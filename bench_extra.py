@@ -47,7 +47,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from pdf_toolkit_spark.corpus import corpus_config
-    from pdf_toolkit_spark.ops import all_queries, common, dedup, similarity
+    from pdf_toolkit_spark.ops import all_queries, common
     from pdf_toolkit_spark.ops.extraction_queries import documents_as_pdfs
     from pdf_toolkit_spark.spark.job import build_pipeline
     from pdf_toolkit_spark.spark.session import explain_str, get_spark
@@ -56,11 +56,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
     timings: dict[str, list[float]] = {}
-
-    def release() -> None:
-        common.release_caches()
-        dedup.release_caches()
-        similarity.release_caches()
 
     def run_one(name: str) -> float:
         spark.sparkContext.setJobDescription(f"bench_extra: {name}")
@@ -96,9 +91,9 @@ def main() -> None:
         for _ in range(args.repeat):
             timings.setdefault(name, []).append(round(run_one(name), 3))
         if args.isolate:
-            release()
+            common.release_caches()
 
-    release()
+    common.release_caches()
     print(json.dumps({"sf_dir": sf_dir, "cores": cores,
                       "noop": args.noop, "isolate": args.isolate,
                       "timings": timings}))

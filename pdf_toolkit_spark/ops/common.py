@@ -52,36 +52,39 @@ SQL_HASH32 = "(('0x' || substr(md5({e}),1,8))::BIGINT)"
 SQL_HASH60 = "(('0x' || substr(md5({e}),1,15))::BIGINT)"
 SQL_NORM = "trim(regexp_replace(lower({e}), '[^a-z0-9]+', ' ', 'g'))"
 
-#: Per-invocation persisted relations (prefix_scan intermediates and
-#: the ad-hoc cross-branch pins in text.py/sketches.py), tracked so a
-#: long-lived session can reclaim the cached storage. Mirrors
-#: dedup.py's registry, but keyless: these pins are plan-internal and
-#: never reused across calls, so a flat list suffices.
-_PERSISTED: list[DataFrame] = []
-
-#: Keyed cross-QUERY persists (mirrors dedup.py's registry): relations
-#: several queries() entries rebuild from scratch — e.g. the trigram
-#: count relation shared by trigram_lm_score / the perplexity tiering
-#: pair / dsir_weight — keyed by (kind, sf_dir) so one bench session
-#: computes the explode+aggregate once. Released with everything else
-#: by :func:`release_caches`.
-_KEYED: dict[tuple, DataFrame] = {}
+#: The ops cache registry, the only one: relations persisted for reuse
+#: and memoized scalars (row counts, embedding width), keyed by
+#: (kind, sf_dir), plus keyless per-query pins. Spark has no
+#: cross-branch subplan sharing, so a relation feeding N plan branches
+#: (or N queries) would otherwise be recomputed N times.
+#: :func:`release_caches` drops everything in it.
+_CACHE: dict[tuple, object] = {}
 
 
-def cached(key: tuple, build) -> DataFrame:
-    """Persist-once registry for relations shared ACROSS queries (the
-    dedup/similarity module-cache pattern, hosted here for ops that
-    live in modules without their own registry)."""
+def cached(key: tuple, build):
+    """Build once per ``key`` and hold the result until
+    :func:`release_caches`: a relation is persisted, a scalar is
+    stored as-is."""
 
-    df = _KEYED.get(key)
-    if df is None:
-        df = build().persist()
-        _KEYED[key] = df
+    if key not in _CACHE:
+        value = build()
+        _CACHE[key] = value.persist() if isinstance(value, DataFrame) else value
+    return _CACHE[key]
+
+
+def replace_cached(key: tuple, df: DataFrame) -> DataFrame:
+    """Hold the already-persisted ``df`` under ``key``, unpersisting the
+    relation it replaces (for results a repeat call recomputes)."""
+
+    old = _CACHE.pop(key, None)
+    if old is not None:
+        old.unpersist()
+    _CACHE[key] = df
     return df
 
 
 def register_persist(df: DataFrame) -> DataFrame:
-    """Persist ``df`` and track it for :func:`release_caches`.
+    """Persist ``df`` and hold it, keyless, until :func:`release_caches`.
 
     Release timing caveat: for most relations a late unpersist only
     costs a recompute, but :func:`prefix_scan`'s intermediate is
@@ -91,20 +94,18 @@ def register_persist(df: DataFrame) -> DataFrame:
     never the process-global :func:`release_caches`, which would
     yank every other in-flight query's pins too."""
 
-    _PERSISTED.append(df.persist())
+    _CACHE[("pin", id(df))] = df.persist()
     return df
 
 
 def release_caches() -> None:
-    """Unpersist every relation registered via :func:`register_persist`.
+    """Unpersist every held relation and forget every memoized scalar.
     Call between corpora (or per bench entry) in a long-lived session."""
 
-    for df in _PERSISTED:
-        df.unpersist()
-    _PERSISTED.clear()
-    for df in _KEYED.values():
-        df.unpersist()
-    _KEYED.clear()
+    for value in _CACHE.values():
+        if isinstance(value, DataFrame):
+            value.unpersist()
+    _CACHE.clear()
 
 
 def prefix_scan(
@@ -133,8 +134,8 @@ def prefix_scan(
     The intermediate relation is persisted: the range partitioner
     samples its boundaries, so the pid→base map from pass 2 is only
     valid for the exact partitioning pass 1 produced — a recompute
-    could re-sample different boundaries. Persisting pins it (tracked
-    in the module registry; :func:`release_caches` reclaims it).
+    could re-sample different boundaries. Persisting pins it (held in
+    the ops cache registry; :func:`release_caches` reclaims it).
     """
 
     from pyspark.sql import Window

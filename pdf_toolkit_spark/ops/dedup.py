@@ -28,8 +28,10 @@ has an exact DuckDB oracle (verified value-for-value in
 tests/test_ops.py).
 
 Cache lifecycle: relations that feed several plan branches (shingles,
-wide signatures, fingerprints) are persisted through a module registry;
-call :func:`release_caches` between corpora in a long-lived session.
+wide signatures, LSH pairs, fingerprints, component labels) and the
+document count are held in the one ops cache registry
+(ops/common.py); :func:`release_caches` (bound here from there) drops
+them between corpora in a long-lived session.
 """
 
 from __future__ import annotations
@@ -42,11 +44,14 @@ from .common import (
     SQL_HASH32,
     SQL_HASH60,
     SQL_NORM,
+    cached,
     hash32,
     hash60,
     norm_text,
+    replace_cached,
     table,
 )
+from .common import release_caches  # noqa: F401  (re-exported: the ops-wide release)
 
 N_HASHES = 16
 BAND_ROWS = 4  # 4 bands x 4 rows
@@ -54,31 +59,6 @@ SIM_BITS = 60
 NEARDUP_COS = 0.4
 NEARDUP_BLOCKS = 8
 MAX_DF = 50  # stop-shingle cap for the Jaccard inverted index
-
-#: Relations persisted for cross-branch reuse, keyed by (kind, sf_dir).
-#: Spark has no cross-branch subplan sharing, so a relation feeding
-#: N plan branches would otherwise be recomputed N times.
-_PERSISTED: dict[tuple[str, str], DataFrame] = {}
-
-
-def release_caches() -> None:
-    """Unpersist every relation this module cached. Call between
-    corpora (or per bench entry) in a long-lived session — persisted
-    relations otherwise accumulate across sf_dirs."""
-
-    for df in _PERSISTED.values():
-        df.unpersist()
-    _PERSISTED.clear()
-    _DOC_COUNTS.clear()
-
-
-def _cached(key: tuple[str, str], build) -> DataFrame:
-    df = _PERSISTED.get(key)
-    if df is None:
-        df = build().persist()
-        _PERSISTED[key] = df
-    return df
-
 
 def shingle_relation(docs: DataFrame) -> DataFrame:
     """(doc_id, shingle) from any (doc_id, text) relation: distinct
@@ -118,7 +98,7 @@ def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return shingle_relation(docs)
 
-    return _cached(("shingles", sf_dir), build)
+    return cached(("shingles", sf_dir), build)
 
 
 def signature_wide_relation(shingles: DataFrame) -> DataFrame:
@@ -141,7 +121,7 @@ def _signatures_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         return signature_wide_relation(_shingles(spark, sf_dir))
 
-    return _cached(("minhash_wide", sf_dir), build)
+    return cached(("minhash_wide", sf_dir), build)
 
 
 def _signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -186,7 +166,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         return _lsh_pairs_plan(spark, sf_dir)
 
-    return _cached(("lsh_pairs", sf_dir), build)
+    return cached(("lsh_pairs", sf_dir), build)
 
 
 def band_relation(wide: DataFrame, with_sigs: bool = False) -> DataFrame:
@@ -421,7 +401,7 @@ def _simhash_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("bigint").alias("fp")
         )
 
-    return _cached(("simhash_fp", sf_dir), build)
+    return cached(("simhash_fp", sf_dir), build)
 
 
 def simhash_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -445,8 +425,6 @@ SIM_BAND_CUTOVER = 100_000
 #: pair-block salt width for the banded join (see simhash_pairs)
 SIM_SALT_G = 8
 
-_DOC_COUNTS: dict[str, int] = {}
-
 
 def sim_band_bits_for(n_docs: int) -> int:
     """SimHash band width derived from corpus size: 20-bit bands (3
@@ -459,11 +437,7 @@ def sim_band_bits_for(n_docs: int) -> int:
 
 
 def _n_docs(spark: SparkSession, sf_dir: str) -> int:
-    n = _DOC_COUNTS.get(sf_dir)
-    if n is None:
-        n = table(spark, sf_dir, "documents").count()
-        _DOC_COUNTS[sf_dir] = n
-    return n
+    return cached(("n_docs", sf_dir), lambda: table(spark, sf_dir, "documents").count())
 
 
 def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -604,12 +578,9 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             labels = new_labels
             if changed == 0:
                 # Hand the converged (materialized) relation to the
-                # module cache so release_caches() reclaims it.
-                old = _PERSISTED.get(("cc_labels", sf_dir))
-                if old is not None:
-                    old.unpersist()
-                _PERSISTED[("cc_labels", sf_dir)] = labels
-                return labels
+                # registry so release_caches() reclaims it; a repeat
+                # call replaces the earlier one.
+                return replace_cached(("cc_labels", sf_dir), labels)
         raise RuntimeError(
             f"connected components did not converge in {CC_MAX_ITERS} iterations"
         )

@@ -17,7 +17,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .common import SQL_HASH32, table
+from .common import SQL_HASH32, cached, table
+from .common import release_caches  # noqa: F401  (re-exported: the ops-wide release)
 
 TOP_K = 10
 QUERY_VEC_ID = 0
@@ -61,19 +62,12 @@ SQL_EPARAMS = f"""
     )
 """
 
-_COUNTS: dict[str, int] = {}
-_DIMS: dict[str, int] = {}
-
 
 def _n_vecs(spark: SparkSession, sf_dir: str) -> int:
     """Corpus size for parameter derivation — a parquet-metadata count,
     cached per sf_dir (cheap even at fleet scale)."""
 
-    n = _COUNTS.get(sf_dir)
-    if n is None:
-        n = table(spark, sf_dir, "embeddings").count()
-        _COUNTS[sf_dir] = n
-    return n
+    return cached(("n_vecs", sf_dir), lambda: table(spark, sf_dir, "embeddings").count())
 
 
 def _dim(spark: SparkSession, sf_dir: str) -> int:
@@ -82,13 +76,12 @@ def _dim(spark: SparkSession, sf_dir: str) -> int:
     unroll into flat codegen arithmetic instead of interpreted
     higher-order folds (same additions in the same order)."""
 
-    d = _DIMS.get(sf_dir)
-    if d is None:
-        d = table(spark, sf_dir, "embeddings").select(
+    def probe() -> int:
+        return table(spark, sf_dir, "embeddings").select(
             F.size("embedding").alias("d")
         ).first()["d"]
-        _DIMS[sf_dir] = d
-    return d
+
+    return cached(("dim", sf_dir), probe)
 
 
 def _dot_expr(va, vb, dim: int):
@@ -213,29 +206,12 @@ def _l2_scores_np(parts: DataFrame, book_rows: list) -> DataFrame:
         score, "vec_id long, sub int, code int, d2_raw double"
     )
 
-#: Relations feeding several plan branches (buckets: candidate join +
-#: query bucket; centroids: probe list + cell assignment). Spark has no
-#: cross-branch subplan sharing, so without a persist the whole subtree
-#: (k-means chain / hyperplane aggregation) executes once per branch.
-_PERSISTED: dict[tuple[str, str], "DataFrame"] = {}
-
-
-def release_caches() -> None:
-    """Unpersist every relation this module cached (call between
-    corpora in a long-lived session)."""
-
-    for df in _PERSISTED.values():
-        df.unpersist()
-    _PERSISTED.clear()
-    _COUNTS.clear()
-
-
-def _cached(key: tuple[str, str], build) -> "DataFrame":
-    df = _PERSISTED.get(key)
-    if df is None:
-        df = build().persist()
-        _PERSISTED[key] = df
-    return df
+# Relations feeding several plan branches (buckets: candidate join +
+# query bucket; centroids: probe list + cell assignment) are held in
+# the ops cache registry (ops/common.py ``cached``), as are the vector
+# count and width. Spark has no cross-branch subplan sharing, so
+# without a persist the whole subtree (k-means chain / hyperplane
+# aggregation) executes once per branch.
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -280,7 +256,7 @@ def _buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     hyperplanes, packed into an int. Persisted: the ANN queries (and
     the LSH near-dup) reference it from two plan branches."""
 
-    return _cached(("buckets", sf_dir), lambda: _buckets_build(spark, sf_dir))
+    return cached(("buckets", sf_dir), lambda: _buckets_build(spark, sf_dir))
 
 
 def _buckets_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -373,7 +349,7 @@ def _centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, and the refreshed centroids broadcast to the assignment
     pass. Replaces the round-1 'first 16 vectors' seeding."""
 
-    return _cached(("centroids", sf_dir), lambda: _centroids_build(spark, sf_dir))
+    return cached(("centroids", sf_dir), lambda: _centroids_build(spark, sf_dir))
 
 
 def _centroids_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -436,7 +412,7 @@ def _ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     Persisted: the assignment crossJoin is the expensive part and both
     ivf_cell_sizes and ivf_topk consume it."""
 
-    return _cached(("ivf_cells", sf_dir), lambda: _ivf_cells_build(spark, sf_dir))
+    return cached(("ivf_cells", sf_dir), lambda: _ivf_cells_build(spark, sf_dir))
 
 
 def cell_assign_relation(e: DataFrame, cents: DataFrame) -> DataFrame:
@@ -656,7 +632,7 @@ def _pq_books(spark: SparkSession, sf_dir: str) -> DataFrame:
     means. Persisted: the index build (encoding) and every query's
     LUT both read it."""
 
-    return _cached(("pq_books", sf_dir), lambda: _pq_books_build(spark, sf_dir))
+    return cached(("pq_books", sf_dir), lambda: _pq_books_build(spark, sf_dir))
 
 
 def _pq_books_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -718,7 +694,7 @@ def _pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle (codes |><| cell assignment) is paid ONCE at (offline)
     index-build time."""
 
-    return _cached(("pq_index", sf_dir), lambda: _pq_index_build(spark, sf_dir))
+    return cached(("pq_index", sf_dir), lambda: _pq_index_build(spark, sf_dir))
 
 
 def _pq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:

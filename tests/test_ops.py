@@ -18,10 +18,10 @@ QUERIES = all_queries()
 ORACLES = all_oracles()
 
 
-def _duck(sql: str):
+def _duck(sql: str, sf_dir: str = SF_DIR, tables=TABLES):
     con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    for t in tables:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return con.execute(sql).fetchdf()
 
 
@@ -50,16 +50,20 @@ def _canon(df):
     return cols, out
 
 
-@pytest.mark.parametrize("name", sorted(ORACLES))
-def test_query_matches_oracle(name, spark):
-    spark_df = QUERIES[name](spark, SF_DIR).toPandas()
-    duck_df = _duck(ORACLES[name])
+def _assert_matches_oracle(spark, name, sf_dir=SF_DIR, tables=TABLES):
+    spark_df = QUERIES[name](spark, sf_dir).toPandas()
+    duck_df = _duck(ORACLES[name], sf_dir, tables)
     s_cols, s_rows = _canon(spark_df)
     d_cols, d_rows = _canon(duck_df)
     assert s_cols == d_cols, f"{name}: column mismatch {s_cols} vs {d_cols}"
     assert len(s_rows) == len(d_rows), f"{name}: {len(s_rows)} vs {len(d_rows)} rows"
     mismatches = [(a, b) for a, b in zip(s_rows, d_rows) if a != b]
     assert not mismatches, f"{name}: first mismatches {mismatches[:3]}"
+
+
+@pytest.mark.parametrize("name", sorted(ORACLES))
+def test_query_matches_oracle(name, spark):
+    _assert_matches_oracle(spark, name)
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
@@ -237,3 +241,67 @@ def test_dsir_log2_quantization_agrees_across_engines_at_boundaries(spark):
 
     assert got_spark == expected
     assert got_duck == expected
+
+
+def test_release_caches_forgets_embedding_width(spark, tmp_path):
+    """The embedding width is memoized per sf_dir to unroll the vector
+    math; release_caches() must forget it with the relations. Rewrite
+    one directory from 8-wide to 64-wide embeddings, releasing in
+    between: both widths must still hash like the oracle."""
+
+    from pdf_toolkit_spark.ops import similarity
+
+    src, dst = f"{SF_DIR}/embeddings.parquet", tmp_path / "embeddings.parquet"
+    con = duckdb.connect()
+    for width in (8, 64):
+        con.execute(
+            f"COPY (SELECT vec_id, embedding[1:{width}] AS embedding, label "
+            f"FROM '{src}') TO '{dst}' (FORMAT parquet)"
+        )
+        _assert_matches_oracle(spark, "sim_ann_lsh_buckets", str(tmp_path), ["embeddings"])
+        similarity.release_caches()
+
+
+def _storage_bytes(spark) -> int:
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return sum(i.memSize() + i.diskSize() for i in infos)
+
+
+def test_release_caches_leaves_nothing_resident(spark):
+    """Every ops cache lives in the one registry in ops/common.py:
+    after the queries that fill it (keyed relations, dedup and
+    similarity relations, counts, a keyless pin) release_caches()
+    leaves the registry empty and the cached storage where it was, and
+    the queries still rebuild correctly. Repeat connected-components
+    calls hold one labels relation, not one per call."""
+
+    import time
+
+    from pyspark import StorageLevel
+
+    from pdf_toolkit_spark.ops import common, dedup
+
+    common.release_caches()
+    before = _storage_bytes(spark)
+    for name in ("text_trigram_lm_score", "dedup_minhash_lsh_pairs",
+                 "sim_ivf_topk", "mm_phash_pairs"):
+        QUERIES[name](spark, SF_DIR).toPandas()
+    kinds = {key[0] for key in common._CACHE}
+    assert {"lm_doc_tri", "shingles", "centroids", "n_vecs", "pin"} <= kinds, kinds
+    deadline = time.monotonic() + 30  # storage figures arrive via the listener bus
+    while _storage_bytes(spark) == before and time.monotonic() < deadline:
+        time.sleep(0.2)
+    assert _storage_bytes(spark) > before
+
+    common.release_caches()
+    assert common._CACHE == {}
+    assert _storage_bytes(spark) == before
+    _assert_matches_oracle(spark, "sim_ivf_topk")
+
+    first = dedup.dedup_components(spark, SF_DIR)
+    second = dedup.dedup_components(spark, SF_DIR)
+    labels = [key for key in common._CACHE if key[0] == "cc_labels"]
+    assert labels == [("cc_labels", SF_DIR)]
+    assert common._CACHE[labels[0]] is second
+    assert first.storageLevel == StorageLevel.NONE
+    common.release_caches()
