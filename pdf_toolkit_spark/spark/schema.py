@@ -16,6 +16,24 @@ DOCUMENTS_RAW_SCHEMA = T.StructType([
     T.StructField("n_pages", T.IntegerType(), False),
 ])
 
+#: Streaming documents feed: the input of the dedup, near-dup,
+#: canonical-pick, quota, sample, packing and tiering stream operators.
+DOCUMENTS_FEED_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.LongType(), False),
+    T.StructField("text", T.StringType(), True),
+    T.StructField("lang", T.StringType(), True),
+    T.StructField("source", T.StringType(), True),
+    T.StructField("n_chars", T.LongType(), True),
+])
+
+#: Streaming embeddings feed: the input of the IVF, IVF-PQ and
+#: semantic-dedup stream operators.
+EMBEDDINGS_FEED_SCHEMA = T.StructType([
+    T.StructField("vec_id", T.LongType(), False),
+    T.StructField("embedding", T.ArrayType(T.FloatType()), True),
+    T.StructField("label", T.IntegerType(), True),
+])
+
 #: Locator-mode input: documents stay in object storage and only a
 #: path travels through the plan. This is the 100-TB mega-PDF shape —
 #: chunk salting replicates the input row per chunk, and replicating a

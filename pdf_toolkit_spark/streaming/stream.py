@@ -21,7 +21,29 @@ from pyspark.sql import functions as F
 
 from ..errors import UserError
 from ..spark.job import run_extraction
-from ..spark.schema import DOCUMENTS_RAW_SCHEMA
+from ..spark.schema import (
+    DOCUMENTS_FEED_SCHEMA,
+    DOCUMENTS_RAW_SCHEMA,
+    EMBEDDINGS_FEED_SCHEMA,
+)
+from .epochs import epoch_dir, epochs_before, read_before, read_committed, write_epoch
+
+
+def _start(spark, schema, input_dir, body, checkpoint_dir, available_now, max_files):
+    """Run ``body`` as the foreachBatch sink of a parquet file-source
+    stream over ``input_dir``, at most ``max_files`` landed files per
+    micro-batch, and return the StreamingQuery."""
+
+    writer = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", str(max_files))
+        .parquet(input_dir)
+        .writeStream.foreachBatch(body)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_extraction(
@@ -38,12 +60,6 @@ def stream_extraction(
     everything currently available and stops (test/batch-catchup mode).
     """
 
-    stream = (
-        spark.readStream.schema(DOCUMENTS_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", "64")
-        .parquet(input_dir)
-    )
-
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         run_extraction(
             spark,
@@ -54,13 +70,10 @@ def stream_extraction(
             resume=True,  # doc-level idempotence on micro-batch replay
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start(
+        spark, DOCUMENTS_RAW_SCHEMA, input_dir, process_batch, checkpoint_dir,
+        available_now, 64,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 SESSION_SCHEMA = (
@@ -194,8 +207,6 @@ def stream_html_extraction(
     appends duplicates).
     """
 
-    import glob as _glob
-
     from pyspark.sql import types as T
 
     from ..htmlx import BOILER_MIN_DOCS
@@ -205,21 +216,7 @@ def stream_html_extraction(
         T.StructField("doc_id", T.LongType(), False),
         T.StructField("text", T.StringType(), True),
     ])
-    stream = (
-        spark.readStream.schema(in_schema)
-        .option("maxFilesPerTrigger", "64")
-        .parquet(input_dir)
-    )
     state_root = f"{out_dir}/boiler_state"
-
-    def _prev_state(epoch_id: int) -> "DataFrame | None":
-        epochs = sorted(
-            e for e in _glob.glob(f"{state_root}/epoch=*")
-            if int(e.rsplit("=", 1)[1]) < epoch_id
-        )
-        if not epochs:
-            return None
-        return spark.read.parquet(epochs[-1])
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         records = html_records_df(batch_df.select("doc_id", "text")).persist()
@@ -229,7 +226,7 @@ def stream_html_extraction(
                 .groupBy("site", "norm_text")
                 .agg(F.countDistinct("doc_id").alias("n_docs"))
             )
-            prev = _prev_state(epoch_id)
+            prev = read_before(spark, state_root, epoch_id, latest=True)
             merged = (
                 batch_counts if prev is None
                 else prev.unionByName(batch_counts)
@@ -238,9 +235,9 @@ def stream_html_extraction(
             )
             # epoch-versioned write: atomic per batch, replayable on
             # restart (same epoch overwrites the same directory).
-            merged.write.mode("overwrite").parquet(f"{state_root}/epoch={epoch_id:012d}")
+            write_epoch(merged, state_root, epoch_id)
             boiler = (
-                spark.read.parquet(f"{state_root}/epoch={epoch_id:012d}")
+                spark.read.parquet(epoch_dir(state_root, epoch_id))
                 .filter(F.col("n_docs") >= BOILER_MIN_DOCS)
                 .select("site", "norm_text")
             )
@@ -248,19 +245,13 @@ def stream_html_extraction(
                 boiler, ["site", "norm_text"], "left_anti"
             )
             stripped = text.unionByName(records.filter(F.col("kind") != "text"))
-            assemble_spans(stripped).write.mode("overwrite").parquet(
-                f"{out_dir}/spans/epoch={epoch_id:012d}"
-            )
+            write_epoch(assemble_spans(stripped), f"{out_dir}/spans", epoch_id)
         finally:
             records.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start(
+        spark, in_schema, input_dir, process_batch, checkpoint_dir, available_now, 64
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def reconcile_html_spans(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -279,13 +270,11 @@ def reconcile_html_spans(spark: SparkSession, out_dir: str) -> DataFrame:
     epoch-partitioned spans directory.
     """
 
-    import glob as _glob
-
     from ..htmlx import BOILER_MIN_DOCS, N_SITES
     from ..ops.common import norm_text as sql_norm
     from ..spark.html_job import assemble_spans
 
-    state_dirs = sorted(_glob.glob(f"{out_dir}/boiler_state/epoch=*"))
+    state_dirs = epochs_before(f"{out_dir}/boiler_state")
     spans = spark.read.parquet(f"{out_dir}/spans")
     records = spans.select(
         "doc_id", F.posexplode("spans").alias("pos", "s")
@@ -333,17 +322,8 @@ def dedup_process_batch(spark: SparkSession, out_dir: str):
     — a billion-doc history is a few GB of parquet riding an anti-join
     that AQE keeps broadcast-or-sort-merge as appropriate."""
 
-    import glob as _glob
-
     docs_root = f"{out_dir}/docs"
     hash_root = f"{out_dir}/hashes"
-
-    def _seen_before(epoch_id: int):
-        dirs = [
-            e for e in _glob.glob(f"{hash_root}/epoch=*")
-            if int(e.rsplit("=", 1)[1]) < epoch_id
-        ]
-        return spark.read.parquet(*dirs).select("h") if dirs else None
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         from pyspark.sql import Window
@@ -355,16 +335,12 @@ def dedup_process_batch(spark: SparkSession, out_dir: str):
             .filter(F.col("rn") == 1)
             .drop("rn")
         )
-        seen = _seen_before(epoch_id)
+        seen = read_before(spark, hash_root, epoch_id)
         fresh = first if seen is None else first.join(seen, "h", "left_anti")
         fresh = fresh.persist()
         try:
-            fresh.drop("h").write.mode("overwrite").parquet(
-                f"{docs_root}/epoch={epoch_id:012d}"
-            )
-            fresh.select("h").write.mode("overwrite").parquet(
-                f"{hash_root}/epoch={epoch_id:012d}"
-            )
+            write_epoch(fresh.drop("h"), docs_root, epoch_id)
+            write_epoch(fresh.select("h"), hash_root, epoch_id)
         finally:
             fresh.unpersist()
 
@@ -382,36 +358,16 @@ def stream_dedup_documents(
     FIRST occurrence of every content hash across micro-batches,
     restarts, and replays. Returns the StreamingQuery."""
 
-    from pyspark.sql import types as T
-
-    in_schema = T.StructType([
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ])
-    stream = (
-        spark.readStream.schema(in_schema)
-        .option("maxFilesPerTrigger", "64")
-        .parquet(input_dir)
+    return _start(
+        spark, DOCUMENTS_FEED_SCHEMA, input_dir, dedup_process_batch(spark, out_dir),
+        checkpoint_dir, available_now, 64,
     )
-    writer = (
-        stream.writeStream
-        .foreachBatch(dedup_process_batch(spark, out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_deduped(spark: SparkSession, out_dir: str) -> DataFrame:
     """All surviving documents across epochs."""
 
-    return spark.read.option("basePath", f"{out_dir}/docs").parquet(
-        f"{out_dir}/docs/epoch=*"
-    ).drop("epoch")
+    return read_committed(spark, f"{out_dir}/docs", "stream_dedup_documents")
 
 
 # ---------------------------------------------------------------------------
@@ -442,19 +398,10 @@ def neardup_process_batch(spark: SparkSession, out_dir: str):
     docs both commit their buckets: the batch semantics suppress on ANY
     earlier doc sharing a bucket, not just earlier survivors."""
 
-    import glob as _glob
-
     from ..ops.dedup import band_relation, shingle_relation, signature_wide_relation
 
     docs_root = f"{out_dir}/docs"
     bucket_root = f"{out_dir}/buckets"
-
-    def _seen_before(epoch_id: int):
-        dirs = [
-            e for e in _glob.glob(f"{bucket_root}/epoch=*")
-            if int(e.rsplit("=", 1)[1]) < epoch_id
-        ]
-        return spark.read.parquet(*dirs) if dirs else None
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         bands = band_relation(
@@ -465,7 +412,7 @@ def neardup_process_batch(spark: SparkSession, out_dir: str):
                 F.min("doc_id").alias("bucket_min")
             )
             scored = bands.join(bmin, ["band", "band_key"])
-            seen = _seen_before(epoch_id)
+            seen = read_before(spark, bucket_root, epoch_id)
             if seen is not None:
                 prior = seen.distinct().withColumn("prior", F.lit(1))
                 scored = scored.join(prior, ["band", "band_key"], "left")
@@ -480,12 +427,8 @@ def neardup_process_batch(spark: SparkSession, out_dir: str):
                 .filter((F.col("bmin") == F.col("doc_id")) & (F.col("hit_prior") == 0))
                 .select("doc_id")
             )
-            batch_df.join(keep, "doc_id").write.mode("overwrite").parquet(
-                f"{docs_root}/epoch={epoch_id:012d}"
-            )
-            bands.select("band", "band_key").write.mode("overwrite").parquet(
-                f"{bucket_root}/epoch={epoch_id:012d}"
-            )
+            write_epoch(batch_df.join(keep, "doc_id"), docs_root, epoch_id)
+            write_epoch(bands.select("band", "band_key"), bucket_root, epoch_id)
         finally:
             bands.unpersist()
 
@@ -503,36 +446,16 @@ def stream_neardup_documents(
     the first document of every LSH neighborhood across micro-batches,
     restarts, and replays. Returns the StreamingQuery."""
 
-    from pyspark.sql import types as T
-
-    in_schema = T.StructType([
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ])
-    stream = (
-        spark.readStream.schema(in_schema)
-        .option("maxFilesPerTrigger", "64")
-        .parquet(input_dir)
+    return _start(
+        spark, DOCUMENTS_FEED_SCHEMA, input_dir, neardup_process_batch(spark, out_dir),
+        checkpoint_dir, available_now, 64,
     )
-    writer = (
-        stream.writeStream
-        .foreachBatch(neardup_process_batch(spark, out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_neardup_survivors(spark: SparkSession, out_dir: str) -> DataFrame:
     """All near-dup survivors across epochs."""
 
-    return spark.read.option("basePath", f"{out_dir}/docs").parquet(
-        f"{out_dir}/docs/epoch=*"
-    ).drop("epoch")
+    return read_committed(spark, f"{out_dir}/docs", "stream_neardup_documents")
 
 
 # ---------------------------------------------------------------------------
@@ -556,9 +479,7 @@ def ivf_assign_process_batch(centroids: DataFrame, out_dir: str):
         e = batch_df.select(
             "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
         )
-        cell_assign_relation(e, centroids).write.mode("overwrite").parquet(
-            f"{out_dir}/cells/epoch={epoch_id:012d}"
-        )
+        write_epoch(cell_assign_relation(e, centroids), f"{out_dir}/cells", epoch_id)
 
     return process
 
@@ -574,34 +495,17 @@ def stream_ivf_assign(
     """Streaming IVF cell assignment of an embeddings feed against a
     frozen centroid relation. Returns the StreamingQuery."""
 
-    from pyspark.sql import types as T
-
-    in_schema = T.StructType([
-        T.StructField("vec_id", T.LongType(), False),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), True),
-        T.StructField("label", T.IntegerType(), True),
-    ])
-    stream = (
-        spark.readStream.schema(in_schema)
-        .option("maxFilesPerTrigger", "64")
-        .parquet(input_dir)
+    return _start(
+        spark, EMBEDDINGS_FEED_SCHEMA, input_dir,
+        ivf_assign_process_batch(centroids, out_dir),
+        checkpoint_dir, available_now, 64,
     )
-    writer = (
-        stream.writeStream
-        .foreachBatch(ivf_assign_process_batch(centroids, out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_ivf_assignments(spark: SparkSession, out_dir: str) -> DataFrame:
     """(vec_id, cell) across all committed epochs."""
 
-    return spark.read.option("basePath", f"{out_dir}/cells").parquet(
-        f"{out_dir}/cells/epoch=*"
-    ).drop("epoch")
+    return read_committed(spark, f"{out_dir}/cells", "stream_ivf_assign")
 
 
 # ---------------------------------------------------------------------------
@@ -627,21 +531,9 @@ def cluster_best_process_batch(spark: SparkSession, clusters: DataFrame, out_dir
     frozen centroids of stream_ivf_assign), or each epoch re-runs the
     full connected-components build."""
 
-    import glob as _glob
-
     from ..ops.text import quality_relation
 
     state_root = f"{out_dir}/state"
-
-    def _state_before(epoch_id: int):
-        dirs = [
-            e for e in _glob.glob(f"{state_root}/epoch=*")
-            if int(e.rsplit("=", 1)[1]) < epoch_id
-        ]
-        if not dirs:
-            return None
-        latest = max(dirs, key=lambda e: int(e.rsplit("=", 1)[1]))
-        return spark.read.parquet(latest)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         # Left join against the frozen assignment: a doc_id absent from
@@ -661,7 +553,7 @@ def cluster_best_process_batch(spark: SparkSession, clusters: DataFrame, out_dir
                 F.lit(1).cast("bigint").alias("n_members"),
             )
         )
-        prior = _state_before(epoch_id)
+        prior = read_before(spark, state_root, epoch_id, latest=True)
         if prior is not None:
             scored = scored.unionByName(prior)
         merged = (
@@ -680,9 +572,7 @@ def cluster_best_process_batch(spark: SparkSession, clusters: DataFrame, out_dir
                 "n_members",
             )
         )
-        merged.write.mode("overwrite").parquet(
-            f"{state_root}/epoch={epoch_id:012d}"
-        )
+        write_epoch(merged, state_root, epoch_id)
 
     return process
 
@@ -703,41 +593,18 @@ def stream_cluster_best(
     The streaming twin of ``curate_cluster_best``. Returns the
     StreamingQuery."""
 
-    from pyspark.sql import types as T
-
-    in_schema = T.StructType([
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ])
-    stream = (
-        spark.readStream.schema(in_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(input_dir)
+    return _start(
+        spark, DOCUMENTS_FEED_SCHEMA, input_dir,
+        cluster_best_process_batch(spark, clusters, out_dir),
+        checkpoint_dir, available_now, 1,
     )
-    writer = (
-        stream.writeStream
-        .foreachBatch(cluster_best_process_batch(spark, clusters, out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_cluster_best(spark: SparkSession, out_dir: str) -> DataFrame:
     """(cluster, kept_doc_id, best_quality, n_members): the latest
     committed state."""
 
-    import glob as _glob
-
-    dirs = _glob.glob(f"{out_dir}/state/epoch=*")
-    if not dirs:
-        raise UserError("stream_cluster_best: no state epochs yet.")
-    latest = max(dirs, key=lambda e: int(e.rsplit("=", 1)[1]))
-    return spark.read.parquet(latest)
+    return read_committed(spark, f"{out_dir}/state", "stream_cluster_best", latest=True)
 
 
 # ---------------------------------------------------------------------------
@@ -772,9 +639,13 @@ def pq_ingest_process_batch(centroids: DataFrame, books: DataFrame, out_dir: str
             codes = scored.groupBy("vec_id", "sub").agg(
                 F.min_by("code", F.struct(F.col("d2"), F.col("code"))).alias("code")
             )
-            codes.join(cell_assign_relation(e, centroids), "vec_id").select(
-                "cell", "vec_id", "sub", "code"
-            ).write.mode("overwrite").parquet(f"{out_dir}/pq/epoch={epoch_id:012d}")
+            write_epoch(
+                codes.join(cell_assign_relation(e, centroids), "vec_id").select(
+                    "cell", "vec_id", "sub", "code"
+                ),
+                f"{out_dir}/pq",
+                epoch_id,
+            )
         finally:
             e.unpersist()
 
@@ -793,38 +664,17 @@ def stream_pq_ingest(
     """Streaming IVF-PQ encoding of an embeddings feed against frozen
     centroids + codebooks. Returns the StreamingQuery."""
 
-    from pyspark.sql import types as T
-
-    in_schema = T.StructType([
-        T.StructField("vec_id", T.LongType(), False),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), True),
-        T.StructField("label", T.IntegerType(), True),
-    ])
-    stream = (
-        spark.readStream.schema(in_schema)
-        .option("maxFilesPerTrigger", "64")
-        .parquet(input_dir)
+    return _start(
+        spark, EMBEDDINGS_FEED_SCHEMA, input_dir,
+        pq_ingest_process_batch(centroids, books, out_dir),
+        checkpoint_dir, available_now, 64,
     )
-    writer = (
-        stream.writeStream
-        .foreachBatch(pq_ingest_process_batch(centroids, books, out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_pq_index(spark: SparkSession, out_dir: str) -> DataFrame:
     """(cell, vec_id, sub, code) across all committed epochs."""
 
-    import glob as _glob
-
-    if not _glob.glob(f"{out_dir}/pq/epoch=*"):
-        raise UserError("stream_pq_ingest: no state epochs yet.")
-    return spark.read.option("basePath", f"{out_dir}/pq").parquet(
-        f"{out_dir}/pq/epoch=*"
-    ).drop("epoch")
+    return read_committed(spark, f"{out_dir}/pq", "stream_pq_ingest")
 
 
 # ---------------------------------------------------------------------------
@@ -855,26 +705,17 @@ def semantic_dedup_process_batch(
     log too: the batch rule suppresses on ANY smaller-id neighbor,
     kept or not."""
 
-    import glob as _glob
-
     from ..ops.dedup import SEMDEDUP_COS
     from ..ops.similarity import _cosine, cell_assign_relation
 
     sem_root = f"{out_dir}/sem"
     log_root = f"{out_dir}/vectors"
 
-    def _history(epoch_id: int):
-        dirs = [
-            d for d in _glob.glob(f"{log_root}/epoch=*")
-            if int(d.rsplit("=", 1)[1]) < epoch_id
-        ]
-        return spark.read.parquet(*dirs) if dirs else None
-
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         e = batch_df.select(
             "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
         )
-        hist = _history(epoch_id)
+        hist = read_before(spark, log_root, epoch_id)
         if hist is not None:
             # Fail-fast guard for the documented id-order precondition:
             # a committed keep bit is final, so a smaller-id vector
@@ -884,18 +725,10 @@ def semantic_dedup_process_batch(
             # replayed epoch, so the replayed ids stay above it.)
             # The high-watermark reads ONLY the newest committed epoch:
             # this guard has enforced id order on every prior commit,
-            # so the global max vec_id lives there — no O(total-history)
-            # aggregate per micro-batch.
-            newest = max(
-                (
-                    d for d in _glob.glob(f"{log_root}/epoch=*")
-                    if int(d.rsplit("=", 1)[1]) < epoch_id
-                ),
-                key=lambda d: int(d.rsplit("=", 1)[1]),
-            )
-            committed_max = (
-                spark.read.parquet(newest).agg(F.max("vec_id")).collect()[0][0]
-            )
+            # so the largest committed vec_id lives there — no
+            # O(total-history) aggregate per micro-batch.
+            newest = read_before(spark, log_root, epoch_id, latest=True)
+            committed_max = newest.agg(F.max("vec_id")).collect()[0][0]
             batch_min = e.agg(F.min("vec_id")).collect()[0][0]
             if (
                 committed_max is not None
@@ -930,12 +763,11 @@ def semantic_dedup_process_batch(
                 .distinct()
                 .withColumn("dropped", F.lit(True))
             )
-            withv.join(dropped, "vec_id", "left").select(
+            keep = withv.join(dropped, "vec_id", "left").select(
                 "vec_id", "cell", F.col("dropped").isNull().alias("keep")
-            ).write.mode("overwrite").parquet(f"{sem_root}/epoch={epoch_id:012d}")
-            withv.select("cell", "vec_id", "v").write.mode("overwrite").parquet(
-                f"{log_root}/epoch={epoch_id:012d}"
             )
+            write_epoch(keep, sem_root, epoch_id)
+            write_epoch(withv.select("cell", "vec_id", "v"), log_root, epoch_id)
         finally:
             withv.unpersist()
 
@@ -955,38 +787,17 @@ def stream_semantic_dedup(
     new vectors dedup against the committed per-cell history without
     re-scoring it). Returns the StreamingQuery."""
 
-    from pyspark.sql import types as T
-
-    in_schema = T.StructType([
-        T.StructField("vec_id", T.LongType(), False),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), True),
-        T.StructField("label", T.IntegerType(), True),
-    ])
-    stream = (
-        spark.readStream.schema(in_schema)
-        .option("maxFilesPerTrigger", "64")
-        .parquet(input_dir)
+    return _start(
+        spark, EMBEDDINGS_FEED_SCHEMA, input_dir,
+        semantic_dedup_process_batch(spark, centroids, out_dir),
+        checkpoint_dir, available_now, 64,
     )
-    writer = (
-        stream.writeStream
-        .foreachBatch(semantic_dedup_process_batch(spark, centroids, out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_semantic_keep(spark: SparkSession, out_dir: str) -> DataFrame:
     """(vec_id, cell, keep) across all committed epochs."""
 
-    import glob as _glob
-
-    if not _glob.glob(f"{out_dir}/sem/epoch=*"):
-        raise UserError("stream_semantic_dedup: no state epochs yet.")
-    return spark.read.option("basePath", f"{out_dir}/sem").parquet(
-        f"{out_dir}/sem/epoch=*"
-    ).drop("epoch")
+    return read_committed(spark, f"{out_dir}/sem", "stream_semantic_dedup")
 
 
 # ---------------------------------------------------------------------------
@@ -999,7 +810,7 @@ def domain_quota_process_batch(spark: SparkSession, out_dir: str, k: int):
     source by the SAME deterministic hash key the batch operator uses
     (hash32 of 'quota:' + doc_id, doc_id tiebreak), add the counts
     already admitted by STRICTLY EARLIER epochs, keep docs whose
-    global per-source position is <= k, and write both the kept docs
+    feed-wide per-source position is <= k, and write both the kept docs
     and this epoch's per-source admission counts into epoch-keyed
     directories with mode=overwrite (replay-idempotent).
 
@@ -1010,25 +821,10 @@ def domain_quota_process_batch(spark: SparkSession, out_dir: str, k: int):
     in hash-key order the admitted set equals the batch operator's
     rank <= k set exactly (pinned in test_streaming)."""
 
-    import glob as _glob
-
     from pyspark.sql import Window
 
     docs_root = f"{out_dir}/docs"
     counts_root = f"{out_dir}/counts"
-
-    def _admitted_before(epoch_id: int):
-        dirs = [
-            e for e in _glob.glob(f"{counts_root}/epoch=*")
-            if int(e.rsplit("=", 1)[1]) < epoch_id
-        ]
-        if not dirs:
-            return None
-        return (
-            spark.read.parquet(*dirs)
-            .groupBy("source")
-            .agg(F.sum("n_admitted").alias("prior"))
-        )
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         h = F.conv(
@@ -1042,8 +838,9 @@ def domain_quota_process_batch(spark: SparkSession, out_dir: str, k: int):
             batch_df.withColumn("h", h)
             .withColumn("rn", F.row_number().over(w))
         )
-        prior = _admitted_before(epoch_id)
+        prior = read_before(spark, counts_root, epoch_id)
         if prior is not None:
+            prior = prior.groupBy("source").agg(F.sum("n_admitted").alias("prior"))
             ranked = ranked.join(F.broadcast(prior), "source", "left").withColumn(
                 "pos", F.col("rn") + F.coalesce(F.col("prior"), F.lit(0))
             )
@@ -1051,13 +848,11 @@ def domain_quota_process_batch(spark: SparkSession, out_dir: str, k: int):
             ranked = ranked.withColumn("pos", F.col("rn"))
         kept = ranked.filter(F.col("pos") <= k).persist()
         try:
-            kept.drop("h", "rn", "prior", "pos").write.mode("overwrite").parquet(
-                f"{docs_root}/epoch={epoch_id:012d}"
-            )
-            kept.groupBy("source").agg(
-                F.count("*").alias("n_admitted")
-            ).write.mode("overwrite").parquet(
-                f"{counts_root}/epoch={epoch_id:012d}"
+            write_epoch(kept.drop("h", "rn", "prior", "pos"), docs_root, epoch_id)
+            write_epoch(
+                kept.groupBy("source").agg(F.count("*").alias("n_admitted")),
+                counts_root,
+                epoch_id,
             )
         finally:
             kept.unpersist()
@@ -1078,36 +873,17 @@ def stream_domain_quota(
     replays — the streaming twin of ``curate_domain_quota``. Returns
     the StreamingQuery."""
 
-    from pyspark.sql import types as T
-
-    in_schema = T.StructType([
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ])
-    stream = (
-        spark.readStream.schema(in_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(input_dir)
+    return _start(
+        spark, DOCUMENTS_FEED_SCHEMA, input_dir,
+        domain_quota_process_batch(spark, out_dir, k),
+        checkpoint_dir, available_now, 1,
     )
-    writer = (
-        stream.writeStream
-        .foreachBatch(domain_quota_process_batch(spark, out_dir, k))
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_quota_admitted(spark: SparkSession, out_dir: str) -> DataFrame:
     """All admitted documents across epochs."""
 
-    return spark.read.option("basePath", f"{out_dir}/docs").parquet(
-        f"{out_dir}/docs/epoch=*"
-    ).drop("epoch")
+    return read_committed(spark, f"{out_dir}/docs", "stream_domain_quota")
 
 
 # ---------------------------------------------------------------------------
@@ -1128,31 +904,16 @@ def weighted_sample_process_batch(spark: SparkSession, out_dir: str, k: int):
     TakeOrdered cut for ANY feed order and any micro-batch split
     (stronger than the in-order guarantee quota admission needs)."""
 
-    import glob as _glob
-
     from ..ops.curation import ws_candidates
 
     state_root = f"{out_dir}/state"
 
-    def _state_before(epoch_id: int):
-        dirs = [
-            e for e in _glob.glob(f"{state_root}/epoch=*")
-            if int(e.rsplit("=", 1)[1]) < epoch_id
-        ]
-        if not dirs:
-            return None
-        latest = max(dirs, key=lambda e: int(e.rsplit("=", 1)[1]))
-        return spark.read.parquet(latest)
-
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         cand = ws_candidates(batch_df)
-        prior = _state_before(epoch_id)
+        prior = read_before(spark, state_root, epoch_id, latest=True)
         if prior is not None:
             cand = cand.unionByName(prior)
-        top = cand.orderBy("priority", "doc_id").limit(k)
-        top.write.mode("overwrite").parquet(
-            f"{state_root}/epoch={epoch_id:012d}"
-        )
+        write_epoch(cand.orderBy("priority", "doc_id").limit(k), state_root, epoch_id)
 
     return process
 
@@ -1170,40 +931,17 @@ def stream_weighted_sample(
     micro-batches, restarts, and replays — the streaming twin of
     ``curate_weighted_sample``. Returns the StreamingQuery."""
 
-    from pyspark.sql import types as T
-
-    in_schema = T.StructType([
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ])
-    stream = (
-        spark.readStream.schema(in_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(input_dir)
+    return _start(
+        spark, DOCUMENTS_FEED_SCHEMA, input_dir,
+        weighted_sample_process_batch(spark, out_dir, k),
+        checkpoint_dir, available_now, 1,
     )
-    writer = (
-        stream.writeStream
-        .foreachBatch(weighted_sample_process_batch(spark, out_dir, k))
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_weighted_sample(spark: SparkSession, out_dir: str) -> DataFrame:
     """The current sample: the LATEST epoch's bottom-K state."""
 
-    import glob as _glob
-
-    dirs = _glob.glob(f"{out_dir}/state/epoch=*")
-    if not dirs:
-        raise UserError("stream_weighted_sample: no state epochs yet.")
-    latest = max(dirs, key=lambda e: int(e.rsplit("=", 1)[1]))
-    return spark.read.parquet(latest)
+    return read_committed(spark, f"{out_dir}/state", "stream_weighted_sample", latest=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1216,30 +954,18 @@ def pack_process_batch(spark: SparkSession, out_dir: str):
     computes its batch-local exclusive token prefix (the same two-pass
     distributed prefix scan as the batch operator — no SinglePartition
     window) and shifts it by the RUNNING TOTAL carried from strictly
-    earlier epochs, so offsets and training-window ids are globally
-    consistent across micro-batches and restarts. State is one bigint
-    per epoch (the cumulative token count) in an epoch-keyed parquet —
+    earlier epochs, so offsets and training-window ids are consistent
+    across micro-batches and restarts. State is one bigint per epoch
+    (the cumulative token count) in an epoch-keyed parquet —
     replay of epoch N rereads the state of N-1 and rewrites its own
     directories idempotently. For a feed delivered in doc_id order the
     result equals the batch ``text_pack_sequences`` exactly (pinned in
     tests)."""
 
-    import glob as _glob
-
     from ..ops.common import prefix_scan
     from ..ops.text import PACK_BUDGET
 
     state_root = f"{out_dir}/state"
-
-    def _carry(epoch_id: int) -> int:
-        dirs = [
-            e for e in _glob.glob(f"{state_root}/epoch=*")
-            if int(e.rsplit("=", 1)[1]) < epoch_id
-        ]
-        if not dirs:
-            return 0
-        latest = max(dirs, key=lambda e: int(e.rsplit("=", 1)[1]))
-        return spark.read.parquet(latest).collect()[0]["total"]
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         from ..ops.common import norm_text
@@ -1249,9 +975,10 @@ def pack_process_batch(spark: SparkSession, out_dir: str):
             F.size(F.split(norm, " "))
         )
         toks = batch_df.select("doc_id", n_tokens.alias("n_tokens"))
-        carry = _carry(epoch_id)
+        state = read_before(spark, state_root, epoch_id, latest=True)
+        carry = 0 if state is None else state.collect()[0]["total"]
         # scope the prefix scan's pin to THIS batch: unpersisting via
-        # the process-global release_caches() would also yank any
+        # the process-wide release_caches() would also yank any
         # concurrent query's pins (whose pid->base maps are
         # non-recomputable — see prefix_scan)
         pins: list = []
@@ -1265,18 +992,16 @@ def pack_process_batch(spark: SparkSession, out_dir: str):
             .alias("window_id"),
         ).persist()
         try:
-            out.write.mode("overwrite").parquet(
-                f"{out_dir}/packed/epoch={epoch_id:012d}"
-            )
+            write_epoch(out, f"{out_dir}/packed", epoch_id)
             total = carry + (
                 out.agg(F.sum("n_tokens").cast("bigint").alias("s"))
                 .collect()[0]["s"]
                 or 0
             )
-            spark.createDataFrame(
-                [(int(total),)], schema="total bigint"
-            ).coalesce(1).write.mode("overwrite").parquet(
-                f"{state_root}/epoch={epoch_id:012d}"
+            write_epoch(
+                spark.createDataFrame([(int(total),)], schema="total bigint").coalesce(1),
+                state_root,
+                epoch_id,
             )
         finally:
             out.unpersist()
@@ -1294,38 +1019,18 @@ def stream_pack_sequences(
     available_now: bool = True,
 ):
     """Streaming sequence packing of a documents feed with a carried
-    global token offset. Returns the StreamingQuery."""
+    feed-wide token offset. Returns the StreamingQuery."""
 
-    from pyspark.sql import types as T
-
-    in_schema = T.StructType([
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ])
-    stream = (
-        spark.readStream.schema(in_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(input_dir)
+    return _start(
+        spark, DOCUMENTS_FEED_SCHEMA, input_dir, pack_process_batch(spark, out_dir),
+        checkpoint_dir, available_now, 1,
     )
-    writer = (
-        stream.writeStream
-        .foreachBatch(pack_process_batch(spark, out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_packed_sequences(spark: SparkSession, out_dir: str) -> DataFrame:
     """(doc_id, n_tokens, start_offset, window_id) across epochs."""
 
-    return spark.read.option("basePath", f"{out_dir}/packed").parquet(
-        f"{out_dir}/packed/epoch=*"
-    ).drop("epoch")
+    return read_committed(spark, f"{out_dir}/packed", "stream_pack_sequences")
 
 
 # ---------------------------------------------------------------------------
@@ -1348,11 +1053,10 @@ def tier_process_batch(model: DataFrame, thresholds: DataFrame, out_dir: str):
     from ..ops.text import tier_assign_relation
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        tier_assign_relation(
+        tiers = tier_assign_relation(
             batch_df.select("doc_id", "text", "lang"), model, thresholds
-        ).write.mode("overwrite").parquet(
-            f"{out_dir}/tiers/epoch={epoch_id:012d}"
         )
+        write_epoch(tiers, f"{out_dir}/tiers", epoch_id)
 
     return process
 
@@ -1370,108 +1074,17 @@ def stream_perplexity_tiers(
     trigram model + frozen per-language tier cutoffs. Returns the
     StreamingQuery."""
 
-    from pyspark.sql import types as T
-
-    in_schema = T.StructType([
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ])
-    stream = (
-        spark.readStream.schema(in_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(input_dir)
+    return _start(
+        spark, DOCUMENTS_FEED_SCHEMA, input_dir,
+        tier_process_batch(model, thresholds, out_dir),
+        checkpoint_dir, available_now, 1,
     )
-    writer = (
-        stream.writeStream
-        .foreachBatch(tier_process_batch(model, thresholds, out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_tier_assignments(spark: SparkSession, out_dir: str) -> DataFrame:
     """(doc_id, lang, avg_logp, bucket) across all committed epochs."""
 
-    return spark.read.option("basePath", f"{out_dir}/tiers").parquet(
-        f"{out_dir}/tiers/epoch=*"
-    ).drop("epoch")
-
-
-# ---------------------------------------------------------------------------
-# Epoch compaction (streaming-sink maintenance)
-# ---------------------------------------------------------------------------
-
-def compact_epochs(spark: SparkSession, root: str, target_files: int = 8) -> int:
-    """Merge all committed ``epoch=*`` directories under ``root`` into
-    the highest epoch directory, rewritten as ``target_files`` parquet
-    files. The streaming sinks append one directory per micro-batch;
-    at fleet scale that is the classic small-files problem (a year of
-    5-minute triggers is ~100k directories whose listing alone
-    dominates query planning). Run this between stream restarts — the
-    surviving directory keeps the max epoch id, so the engine's next
-    epochs sort after it and readers see identical rows.
-
-    Crash-safe swap: the merged copy lands in a sibling
-    ``.compacting`` directory with a ``_compaction_inputs.json``
-    manifest (underscore-prefixed, so parquet readers ignore it)
-    before any input is removed, and the manifest RIDES INSIDE the
-    directory through the rename — the compacted copy is never on
-    disk without its manifest, so every crash point is recoverable:
-    a crash before the manifest discards the partial copy; a crash
-    mid-swap re-runs the input removals (idempotent) and the rename;
-    a crash after the rename but before the in-place manifest removal
-    leaves a committed epoch dir whose stray manifest the next call
-    finishes deleting. Returns the number of epoch directories
-    compacted (0 = nothing to do)."""
-
-    import glob as _glob
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-
-    tmp = f"{root}.compacting"
-    manifest = f"{tmp}/_compaction_inputs.json"
-
-    def _swap() -> int:
-        inputs = _json.load(open(manifest))
-        target = inputs[-1]
-        for d in inputs:
-            if _os.path.isdir(d):
-                _shutil.rmtree(d)
-        _os.rename(tmp, target)
-        _os.remove(f"{target}/_compaction_inputs.json")
-        return len(inputs)
-
-    if _os.path.isdir(tmp):
-        if _os.path.exists(manifest):  # recover an interrupted swap
-            return _swap()
-        _shutil.rmtree(tmp)  # interrupted BEFORE the manifest: discard
-    # crash AFTER the rename, BEFORE the manifest removal: the swap is
-    # complete (all inputs gone); finish by clearing the stray
-    # manifest so it never reads as this compaction's input list
-    for m in _glob.glob(f"{root}/epoch=*/_compaction_inputs.json"):
-        for d in _json.load(open(m)):
-            if d != _os.path.dirname(m) and _os.path.isdir(d):
-                _shutil.rmtree(d)
-        _os.remove(m)
-
-    dirs = sorted(_glob.glob(f"{root}/epoch=*"))
-    if len(dirs) < 2:
-        return 0
-    (
-        spark.read.option("basePath", root).parquet(f"{root}/epoch=*")
-        .drop("epoch")
-        .coalesce(target_files)
-        .write.mode("overwrite").parquet(tmp)
-    )
-    with open(manifest, "w") as fh:
-        _json.dump(dirs, fh)
-    return _swap()
+    return read_committed(spark, f"{out_dir}/tiers", "stream_perplexity_tiers")
 
 
 # ---------------------------------------------------------------------------

@@ -659,9 +659,9 @@ def test_compact_epochs_preserves_rows_and_recovers(spark, tmp_path):
     assert len(glob.glob(f"{out}/docs/epoch=*")) == 3
 
     n = compact_epochs(spark, f"{out}/docs", target_files=2)
-    assert n == 3
+    assert n == 2
     dirs = glob.glob(f"{out}/docs/epoch=*")
-    assert [os.path.basename(d) for d in dirs] == ["epoch=000000000002"]
+    assert sorted(os.path.basename(d) for d in dirs) == ["epoch=000000000001", "epoch=000000000002"]
     after = {tuple(r) for r in read_neardup_survivors(spark, out).collect()}
     assert after == before
 
@@ -695,6 +695,62 @@ def test_compact_epochs_preserves_rows_and_recovers(spark, tmp_path):
     assert compact_epochs(spark, comp) == 0  # nothing left to merge
     assert not os.path.exists(f"{survivor}/_compaction_inputs.json")
     assert spark.read.parquet(f"{comp}/epoch=*").count() == bucket_rows
+
+
+def test_compaction_then_replay_of_newest_epoch_keeps_history(spark, tmp_path):
+    """A crash after epoch 2's write but before its checkpoint commit
+    makes foreachBatch replay epoch 2. Compacting the sinks before the
+    restart must leave that replay's strictly-below history complete,
+    so the replay rewrites the same survivors."""
+
+    from pdf_toolkit_spark.streaming import (
+        compact_epochs,
+        dedup_process_batch,
+        read_deduped,
+    )
+
+    out = str(tmp_path / "out")
+    process = dedup_process_batch(spark, out)
+    cols = ["doc_id", "text", "lang", "source", "n_chars"]
+    batches = [
+        spark.createDataFrame(
+            [(epoch * 10 + i, f"body {epoch} {i}", "en", "s", 8) for i in range(3)], cols
+        )
+        for epoch in range(3)
+    ]
+    for epoch, batch in enumerate(batches):
+        process(batch, epoch)
+    before = {tuple(r) for r in read_deduped(spark, out).collect()}
+    assert len(before) == 9
+
+    compact_epochs(spark, f"{out}/docs")
+    compact_epochs(spark, f"{out}/hashes")
+    process(batches[2], 2)  # replay of the newest epoch
+
+    assert {tuple(r) for r in read_deduped(spark, out).collect()} == before
+
+
+@pytest.mark.parametrize("reader, operator", [
+    ("read_cluster_best", "stream_cluster_best"),
+    ("read_deduped", "stream_dedup_documents"),
+    ("read_ivf_assignments", "stream_ivf_assign"),
+    ("read_neardup_survivors", "stream_neardup_documents"),
+    ("read_packed_sequences", "stream_pack_sequences"),
+    ("read_pq_index", "stream_pq_ingest"),
+    ("read_quota_admitted", "stream_domain_quota"),
+    ("read_semantic_keep", "stream_semantic_dedup"),
+    ("read_tier_assignments", "stream_perplexity_tiers"),
+    ("read_weighted_sample", "stream_weighted_sample"),
+])
+def test_readers_raise_user_error_on_empty_output(spark, tmp_path, reader, operator):
+    """Every result reader reports an output with no committed epoch
+    as a UserError naming its operator, not a Spark analysis error."""
+
+    import pdf_toolkit_spark.streaming as streaming
+    from pdf_toolkit_spark.errors import UserError
+
+    with pytest.raises(UserError, match=f"^{operator}: "):
+        getattr(streaming, reader)(spark, str(tmp_path))
 
 
 def test_stream_domain_quota_caps_per_source(spark, tmp_path):
