@@ -20,7 +20,7 @@ instruction). Two corpus profiles are measured:
 Methodology: corpus generated once to parquet (both measurements read
 byte-identical input); each measurement is a fresh subprocess; Python
 workers warmed before timing (executor warm-up is not a scaling
-property); timed section = scan -> salt -> repartition -> mapInPandas
+property); timed section = scan -> salt -> repartition -> mapInArrow
 -> strip -> assemble -> count.
 
 Usage:

@@ -18,7 +18,7 @@ Architecture (see SURVEY.md for the full mapping):
                   real PDF reader: xref walk, object parser,
                   content-stream tokenizer (the north rule's parse path).
 - ``extract``   — the per-document kernel pipeline (serial oracle).
-- ``spark``     — the distributed job: one Arrow-batched ``mapInPandas``
+- ``spark``     — the distributed job: one Arrow-batched ``mapInArrow``
                   stage, relational boilerplate strip (window + filter),
                   anti-join checkpoint resume, skew salting for mega
                   PDFs, lineage + metrics sinks.

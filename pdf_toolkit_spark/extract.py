@@ -1,6 +1,6 @@
 """Per-document extraction pipeline (pure Python + NumPy; no Spark).
 
-This is the kernel the distributed job wraps in ``mapInPandas`` — and,
+This is the kernel the distributed job wraps in ``mapInArrow`` — and,
 run serially over a whole document, the per-doc oracle for the
 span-sequence-equality gate (distributed output must match this
 byte-for-byte).

@@ -20,9 +20,10 @@ engine-owned, built from the public specs:
   OCTET STRING, NULL, PrintableString, context tags).
 
 RSA keys are deterministic fixtures (Miller-Rabin primes from a seeded
-PRNG): this sandbox has no certificate store, so the engine owns both
-ends — the writer envelopes for the fixture public key and the parser
-opens with the fixture private key unless the caller supplies one.
+PRNG; the default key is stored as constants): there is no certificate
+store, so the engine owns both ends — the writer envelopes for the
+fixture public key and the parser opens with the fixture private key
+unless the caller supplies one.
 PKCS#1 v1.5 padding bytes are likewise derived deterministically from
 the message (fixtures must be byte-stable across runs); a production
 encryptor would draw them from a CSPRNG.
@@ -171,13 +172,23 @@ def rsa_keypair(seed: int = 0x50DF, bits: int = 1024) -> "tuple[int, int, int]":
             return p * q, e, d
 
 
-_FIXTURE_KEY: "Optional[tuple[int, int, int]]" = None
+#: The fixture keypair (n, e, d): ``rsa_keypair()`` with its defaults,
+#: stored so that no process repeats the prime search (about 0.45 s) to
+#: open a PubSec document.
+_FIXTURE_KEY = (
+    int("a63db3be9fe5605a36ccfbdc92749a3f9faac8966a48278b3368dfdc45ee0a86"
+        "9c5ff35be531751f542dbf23b5cb5bc0ea4e359adeeb70273660f1d09ac90f17"
+        "104a45322f1ae4dca815576d646a63f8589edb811f7ce92266c4a4ddf86f36dd"
+        "e2274fded3d6ab32dae5d208261acbff6a21db160539a7ea91d8ef38cd5c80bf", 16),
+    65537,
+    int("24e46c8f514cc6253f241e80c4bfbbbb82e393c04db5d590bec7f7661adec8d7"
+        "36bcd47500580975fa686c92b03581173ee83c5d323b6d9846291d80fdd8c0d0"
+        "316570557e276527b56b616fef7a61c9db5e782d65e293592e6ec4f047d67b27"
+        "cf211b49d87b914698ec53a17ffae6296f88ec21ef88e45be7553472b30d2481", 16),
+)
 
 
 def fixture_keypair() -> "tuple[int, int, int]":
-    global _FIXTURE_KEY
-    if _FIXTURE_KEY is None:
-        _FIXTURE_KEY = rsa_keypair()
     return _FIXTURE_KEY
 
 

@@ -1,2 +1,3 @@
 """Distributed execution layer: SparkSession factory, schemas, and the
-extraction job topology (mapInPandas + relational strip + resume)."""
+extraction job topology (pandas-free mapInArrow + relational strip +
+resume)."""

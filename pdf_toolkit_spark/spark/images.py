@@ -17,15 +17,16 @@ kernel pipeline. This module is their distributed twin:
   rotate.py:178-307): clockwise right-angle rotation of every raster,
   returned as (image_id, png) rows for a media-table write.
 
-All Python work is Arrow-batched ``mapInPandas`` over binary columns —
-no per-row UDFs, same boundary discipline as the PDF job.
+All Python work is Arrow-batched ``mapInArrow`` over binary columns —
+no per-row UDFs and no pandas, same boundary discipline as the PDF job
+(output batches built by spark/records.py).
 """
 
 from __future__ import annotations
 
 from typing import Any, Iterator, Optional
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -54,49 +55,25 @@ def read_image_folder(spark: SparkSession, path: str, pattern: str = "*.png") ->
 
 
 def _make_image_extract_batch(cfg: dict[str, Any]):
-    cols = [f.name for f in RECORDS_SCHEMA.fields]
-
-    def image_extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def image_extract_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ..extract import extract_page
         from ..pdfio.parser import ParsedPage
         from ..pdfio.png import decode_png
+        from .records import RECORDS_ARROW, error_row, page_rows, record_batch
 
-        import json as _json
+        def image_rows(image_id, png) -> list[tuple]:
+            try:
+                arr = decode_png(png.as_py())  # gray or RGB
+                h, w = arr.shape[:2]
+                page = ParsedPage(index=0, width=w, height=h, rotate=0, scan=arr, items=[])
+                return page_rows(image_id, 1, 0, extract_page(page, 0, cfg), set())
+            except Exception as exc:
+                return [error_row(image_id, 1, 0, exc)]
 
         for batch in batches:
-            rows: list[tuple] = []
-            for image_id, png in zip(batch["image_id"], batch["png"]):
-                try:
-                    arr = decode_png(bytes(png))  # gray or RGB
-                    h, w = arr.shape[:2]
-                    page = ParsedPage(index=0, width=w, height=h, rotate=0,
-                                      scan=arr, items=[])
-                    result = extract_page(page, 0, cfg)
-                    c = result.counters
-                    payload = (
-                        result.lineage.get("detail_json"),
-                        result.lineage.get("status", "ok"),
-                        c.get("pages_parsed", 1),
-                        c.get("rotations_fixed", 0),
-                        c.get("spreads_split", 0),
-                        c.get("crop_only", 0),
-                    )
-                    for ref, blob in result.media.items():
-                        rows.append((image_id, 1, 0, 0, 0, "media", None, None,
-                                     None, None, ref, blob, *(None,) * 6))
-                    for i, cand in enumerate(result.candidates):
-                        pl = payload if i == 0 else (None,) * 6
-                        rows.append((image_id, 1, cand.page_no, cand.region_idx,
-                                     cand.item_idx, cand.kind, cand.text,
-                                     cand.norm_text, cand.y_band,
-                                     cand.is_page_number, cand.media_ref, None, *pl))
-                except Exception as exc:
-                    detail = _json.dumps(
-                        {"error": f"{type(exc).__name__}: {exc}"}, sort_keys=True
-                    )
-                    rows.append((image_id, 1, 0, 0, 0, "none", None, None, None,
-                                 None, None, None, detail, "error", 0, 0, 0, 0))
-            yield pd.DataFrame(rows, columns=cols)
+            pngs = batch.column("png")
+            for i, image_id in enumerate(batch.column("image_id").to_pylist()):
+                yield record_batch(image_rows(image_id, pngs[i]), RECORDS_ARROW)
 
     return image_extract_batch
 
@@ -110,7 +87,7 @@ def extract_image_folder(
     cfg = validate_config(dict(DEFAULTS, **(cfg or {})))
     n_parts = spark.sparkContext.defaultParallelism * 4
     repart = images.repartition(n_parts, F.col("image_id"))
-    records = repart.mapInPandas(_make_image_extract_batch(cfg), schema=RECORDS_SCHEMA)
+    records = repart.mapInArrow(_make_image_extract_batch(cfg), schema=RECORDS_SCHEMA)
     # Same narrow-exchange discipline as the PDF pipeline: media rows
     # and lineage payload columns never enter the strip/assembly
     # shuffles (they're consumed from the records branch only).
@@ -131,16 +108,18 @@ def rotate_image_folder(images: DataFrame, degrees: int) -> DataFrame:
 
         raise UserError("Degrees must be one of 90, 180, 270 (clockwise).")
 
-    def rotate_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def rotate_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from .. import kernels as K
         from ..pdfio.png import decode_png, encode_png
+        from .records import record_batch
 
+        schema = pa.schema([("image_id", pa.string()), ("png", pa.binary())])
         for batch in batches:
-            out_ids, out_pngs = [], []
-            for image_id, png in zip(batch["image_id"], batch["png"]):
-                arr = K.rotate_image_cw(decode_png(bytes(png)), degrees % 360)
-                out_ids.append(image_id)
-                out_pngs.append(encode_png(arr))
-            yield pd.DataFrame({"image_id": out_ids, "png": out_pngs})
+            pngs = batch.column("png")
+            rows = []
+            for i, image_id in enumerate(batch.column("image_id").to_pylist()):
+                arr = K.rotate_image_cw(decode_png(pngs[i].as_py()), degrees % 360)
+                rows.append((image_id, encode_png(arr)))
+            yield record_batch(rows, schema)
 
-    return images.mapInPandas(rotate_batch, "image_id string, png binary")
+    return images.mapInArrow(rotate_batch, "image_id string, png binary")

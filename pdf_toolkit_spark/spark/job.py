@@ -6,7 +6,8 @@ Topology (SURVEY.md §3.4) — one Python boundary, everything else JVM:
       -> anti-join committed doc_ids            [checkpoint resume, P4]
       -> explode page-range chunks              [mega-PDF skew salt, C2]
       -> repartition(doc_id, chunk_start)       [spread chunks across executors]
-      -> mapInPandas(extract_batch)             [Arrow-batched kernel pipeline]
+      -> mapInArrow(extract_batch)              [Arrow-batched kernel pipeline,
+                                                 one output batch per chunk]
       -> window count over (doc_id, norm_text, y_band)
          + filter                               [boilerplate strip, relational]
       -> groupBy(doc_id).collect_list + array_sort + transform
@@ -14,7 +15,10 @@ Topology (SURVEY.md §3.4) — one Python boundary, everything else JVM:
       -> parquet append partitioned by bucket(doc_id) + lineage + metrics
 
 Zero per-row Python UDFs; the strip and the final ordering are Catalyst
-aggregates/windows so they scale with the shuffle, not with Python.
+aggregates/windows so they scale with the shuffle, not with Python. The
+one boundary is pandas-free: Arrow batches in, Arrow batches built from
+buffers out (spark/records.py), so a forked Python worker never imports
+pandas.
 At 100 TB the parquet sink becomes an Iceberg table partitioned by
 ``bucket(N, doc_id)`` with snapshot commits; the resume anti-join and
 bucket layout are identical.
@@ -26,7 +30,7 @@ import time
 from dataclasses import dataclass
 from typing import Any, Iterator, Optional
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -35,92 +39,60 @@ from .schema import RECORDS_SCHEMA, SPANS_SCHEMA
 
 
 def make_extract_batch(cfg: dict[str, Any]):
-    """Build the Arrow-batched extraction function for mapInPandas.
+    """Build the Arrow-batched extraction function for mapInArrow.
 
-    Input rows: (doc_id, pdf_bytes, n_pages, chunk_start, chunk_end).
-    Output rows: RECORDS_SCHEMA — one row per span candidate; the first
-    row of each page carries lineage + counter increments.
+    Input rows: (doc_id, pdf_bytes | pdf_locator, n_pages, chunk_start,
+    chunk_end). Output: one RECORDS_SCHEMA batch per input row (document
+    chunk) — one row per span candidate, the first row of each page
+    carrying lineage + counter increments. The carrier column is read
+    one row at a time, so a worker holds one PDF copy, and one chunk's
+    PNG blobs, at a time. No pandas on this path (spark/records.py).
     """
 
-    cols = [f.name for f in RECORDS_SCHEMA.fields]
-
-    def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def extract_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # Imports inside the UDF body: executors pay them lazily
         # (X8 in SURVEY.md §4).
         from ..extract import extract_page
         from ..pdfio.parser import PdfDocument
+        from .records import RECORDS_ARROW, error_row, page_rows, record_batch
 
-        import json as _json
+        def chunk_rows(doc_id, payload, by_locator, n_pages, lo, hi) -> list[tuple]:
+            # Per-document error isolation: at 10^12-doc scale one
+            # malformed PDF must become an 'error' lineage row, not a
+            # stage failure. Failed docs emit no spans, stay
+            # uncommitted, and are retried by the next resume run.
+            try:
+                # Locator mode: the exchange carried only a path; fetch
+                # the bytes executor-side (local file here; object-store
+                # GET on a cluster). Fetch failures take the same per-doc
+                # error path as parse failures.
+                if by_locator:
+                    with open(payload.as_py(), "rb") as fh:
+                        pdf_bytes = fh.read()
+                else:
+                    pdf_bytes = payload.as_py()
+                doc = PdfDocument(pdf_bytes)
+                rows: list[tuple] = []
+                seen_refs: set[str] = set()
+                for page_no in range(lo, hi + 1):
+                    result = extract_page(doc.load_page(page_no), page_no, cfg)
+                    rows += page_rows(doc_id, n_pages, page_no, result, seen_refs)
+                return rows
+            except Exception as exc:  # fetch/parse/codec errors
+                return [error_row(doc_id, n_pages, lo, exc)]
 
         for batch in batches:
-            # Locator mode: the exchange carried only a path; fetch the
-            # bytes executor-side (local file here; object-store GET on
-            # a cluster). Fetch failures take the same per-doc error
-            # path as parse failures.
-            by_locator = "pdf_locator" in batch.columns
-            carrier = batch["pdf_locator"] if by_locator else batch["pdf_bytes"]
-            rows: list[tuple] = []
-            for doc_id, payload, n_pages, lo, hi in zip(
-                batch["doc_id"], carrier, batch["n_pages"],
-                batch["chunk_start"], batch["chunk_end"],
-            ):
-                # Per-document error isolation: at 10^12-doc scale one
-                # malformed PDF must become an 'error' lineage row, not a
-                # stage failure. Failed docs emit no spans, stay
-                # uncommitted, and are retried by the next resume run.
-                doc_rows: list[tuple] = []
-                seen_refs: set[str] = set()
-                try:
-                    if by_locator:
-                        with open(payload, "rb") as fh:
-                            pdf_bytes = fh.read()
-                    else:
-                        pdf_bytes = payload
-                    doc = PdfDocument(bytes(pdf_bytes))
-                    for page_no in range(int(lo), int(hi) + 1):
-                        result = extract_page(doc.load_page(page_no), page_no, cfg)
-                        c = result.counters
-                        lineage_payload = (
-                            result.lineage.get("detail_json"),
-                            result.lineage.get("status", "ok"),
-                            c.get("pages_parsed", 1),
-                            c.get("rotations_fixed", 0),
-                            c.get("spreads_split", 0),
-                            c.get("crop_only", 0),
-                        )
-                        # Media blobs ride as dedicated kind='media' rows
-                        # (one per distinct ref per doc chunk); they feed
-                        # the content-addressed media sink and never
-                        # become spans.
-                        for ref, png in result.media.items():
-                            if ref in seen_refs:
-                                continue
-                            seen_refs.add(ref)
-                            doc_rows.append((doc_id, int(n_pages), page_no, 0, 0,
-                                             "media", None, None, None, None,
-                                             ref, png, *(None,) * 6))
-                        if not result.candidates:
-                            doc_rows.append((doc_id, int(n_pages), page_no, 0, 0, "none",
-                                             None, None, None, None, None, None,
-                                             *lineage_payload))
-                            continue
-                        for i, cand in enumerate(result.candidates):
-                            payload = lineage_payload if i == 0 else (None,) * 6
-                            doc_rows.append((
-                                doc_id, int(n_pages), cand.page_no, cand.region_idx,
-                                cand.item_idx, cand.kind, cand.text, cand.norm_text,
-                                cand.y_band, cand.is_page_number, cand.media_ref, None,
-                                *payload,
-                            ))
-                except Exception as exc:  # parse/codec errors
-                    detail = _json.dumps(
-                        {"error": f"{type(exc).__name__}: {exc}"}, sort_keys=True
-                    )
-                    doc_rows = [(doc_id, int(n_pages), int(lo), 0, 0, "none",
-                                 None, None, None, None, None, None,
-                                 detail, "error", 0, 0, 0, 0)]
-                rows.extend(doc_rows)
-            yield pd.DataFrame(rows, columns=cols)
+            by_locator = "pdf_locator" in batch.schema.names
+            carrier = batch.column("pdf_locator" if by_locator else "pdf_bytes")
+            keys = zip(*(batch.column(c).to_pylist()
+                         for c in ("doc_id", "n_pages", "chunk_start", "chunk_end")))
+            for i, (doc_id, n_pages, lo, hi) in enumerate(keys):
+                # Nothing in this frame keeps a chunk's rows or PDF
+                # alive while the next chunk runs.
+                yield record_batch(
+                    chunk_rows(doc_id, carrier[i], by_locator, n_pages, lo, hi),
+                    RECORDS_ARROW,
+                )
 
     return extract_batch
 
@@ -177,7 +149,7 @@ def strip_boilerplate(records: DataFrame, cfg: dict[str, Any]) -> DataFrame:
     # collect_set skips nulls, so non-text rows contribute nothing to
     # their group's page count; a single window pass keeps the plan to
     # ONE extraction stage (a filter+union here would duplicate the
-    # whole mapInPandas subtree in the physical plan).
+    # whole mapInArrow subtree in the physical plan).
     pages_with_key = F.size(
         F.collect_set(F.when(is_text, F.col("page_no"))).over(w)
     )
@@ -256,7 +228,7 @@ def build_pipeline(
         # explode) are bounded stragglers absorbed by the wave count.
         n_parts = spark.sparkContext.defaultParallelism * 4
         salted = salted.repartition(n_parts, F.col("doc_id"), F.col("chunk_start"))
-    records = salted.mapInPandas(make_extract_batch(cfg), schema=RECORDS_SCHEMA)
+    records = salted.mapInArrow(make_extract_batch(cfg), schema=RECORDS_SCHEMA)
     # The spans branch shuffles twice (strip window, assembly groupBy) —
     # keep those exchanges narrow: media rows (and their PNG blobs)
     # never enter them, and the lineage payload columns (fat JSON +

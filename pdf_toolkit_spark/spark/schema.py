@@ -59,7 +59,7 @@ SPANS_SCHEMA = T.StructType([
     T.StructField("spans", T.ArrayType(SPAN_STRUCT, False), False),
 ])
 
-#: Stage-1 (mapInPandas) output: one row per span candidate; the first
+#: Stage-1 (mapInArrow) output: one row per span candidate; the first
 #: candidate row of each page additionally carries the page's lineage
 #: and counter increments (null elsewhere). kind='none' rows exist only
 #: to carry lineage for pages that produced no candidates; kind='media'

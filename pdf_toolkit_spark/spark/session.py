@@ -59,9 +59,12 @@ def get_spark(
         # eliminating the race. The price is a fork from pyspark.daemon
         # per task: about 0.25 s of core time per task, measured on a
         # 4-core host at local[4] over 64 trivial mapInPandas tasks
-        # (6.5-9.4 s without reuse against 3.1-3.8 s with it). The idle
-        # watchdog below turns any residual stall into a log line
-        # instead of a silent hang.
+        # (6.5-9.4 s without reuse against 3.1-3.8 s with it). Most of
+        # that is each fresh worker's pandas import (about 0.33 s and
+        # 38 MB on the same host); the extraction UDFs are mapInArrow
+        # stages that never import pandas (spark/records.py), so their
+        # tasks pay only the fork. The idle watchdog below turns any
+        # residual stall into a log line instead of a silent hang.
         .config("spark.python.worker.reuse", "false")
         .config("spark.python.worker.idleTimeoutSeconds", "600")
         # Local mode: the driver JVM IS the executor, so size its heap

@@ -2,7 +2,7 @@
 
 ``stream_extraction`` is the incremental-ingest form of the batch job:
 a parquet file-source stream over a landing directory; each micro-batch
-runs the SAME pipeline (salt -> mapInPandas -> strip -> assemble) via
+runs the SAME pipeline (salt -> mapInArrow -> strip -> assemble) via
 ``foreachBatch`` and appends atomically. Exactly-once at the doc level
 comes from two layers: the streaming checkpoint (file-source progress)
 and the batch resume anti-join (doc-level idempotence even if a batch

@@ -89,6 +89,16 @@ def test_rsa_keypair_is_deterministic_and_valid():
     assert pow(pow(m, e1, n1), d1, n1) == m
 
 
+def test_fixture_keypair_constants_are_the_default_derivation():
+    """The stored fixture key is exactly what rsa_keypair() derives
+    with its defaults (seed 0x50DF, 1024 bits)."""
+
+    assert fixture_keypair() == rsa_keypair()
+    n, e, d = fixture_keypair()
+    assert n.bit_length() == 1024 and e == 65537
+    assert pow(pow(0xC0FFEE, e, n), d, n) == 0xC0FFEE
+
+
 def test_rsa_v15_roundtrip_and_wrong_key():
     n, e, d = rsa_keypair(seed=3, bits=512)
     msg = b"\x01\x02" + bytes(range(14))

@@ -267,8 +267,8 @@ def test_corrupt_documents_are_isolated_not_fatal(spark):
 
 def test_plan_has_single_python_stage(spark):
     """Plan hygiene: exactly one Python boundary (mapInPandas for the
-    corpus gen is input-side; extraction adds one more), no per-row
-    PythonUDF nodes."""
+    corpus gen is input-side; extraction adds one mapInArrow), no
+    per-row PythonUDF nodes."""
 
     from pdf_toolkit_spark.spark.session import explain_str
 
@@ -278,7 +278,8 @@ def test_plan_has_single_python_stage(spark):
     assert "BatchEvalPython" not in plan        # no row-at-a-time Python
     # exactly two Python stages: corpus generation (input-side) and the
     # extraction UDF — crucially NOT duplicated by the strip stage
-    assert plan.count("MapInPandas") == 2
+    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
     assert "Aggregate" in plan
 
 

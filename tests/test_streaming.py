@@ -665,7 +665,7 @@ def test_compact_epochs_preserves_rows_and_recovers(spark, tmp_path):
     after = {tuple(r) for r in read_neardup_survivors(spark, out).collect()}
     assert after == before
 
-    assert compact_epochs(spark, f"{out}/docs") == 0  # single dir: no-op
+    assert compact_epochs(spark, f"{out}/docs") == 0  # two epoch dirs (< 3): no-op
 
     # simulate a crash AFTER the manifest was written, BEFORE the swap:
     # move the compacted dir back to .compacting with a manifest naming
