@@ -74,10 +74,12 @@ def main(argv: list[str] | None = None, _spark=None) -> int:
         if args.command == "rotate":
             rotated = rotate_image_folder(images, args.degrees)
             rotated.write.mode("overwrite").parquet(args.output)
-            n = spark.read.parquet(args.output).count()
+            n = {r["status"]: r["count"] for r in
+                 spark.read.parquet(args.output).groupBy("status").count().collect()}
             metrics = {
                 "command": command,
-                "images_rotated": n,
+                "images_rotated": n.get("written", 0),
+                "images_failed": n.get("error", 0),
                 "degrees": args.degrees,
                 "elapsed_sec": time.monotonic() - started,
             }

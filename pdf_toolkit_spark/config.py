@@ -79,7 +79,6 @@ DEFAULTS: dict[str, Any] = {
                                            # pair with files.maxPartitionBytes
                                            # sized to ~4 waves/core).
     "output_buckets": 32,                  # bucket(doc_id) partition count
-    "arrow_batch_rows": 16,                # small batches: PDF payloads are MBs
     "dry_run": False,
     "overwrite": False,
 }
@@ -136,7 +135,6 @@ _RULES: dict[str, tuple[Callable[[Any], bool], str]] = {
     "pages_per_chunk": (lambda v: v >= 1, "a positive integer"),
     "chunk_spread": (lambda v: v in ("shuffle", "input"), "one of: shuffle, input"),
     "output_buckets": (lambda v: v >= 1, "a positive integer"),
-    "arrow_batch_rows": (lambda v: v >= 1, "a positive integer"),
 }
 
 _BOOL_KEYS = {"dry_run", "overwrite", "strip_page_numbers", "persist_media", "debug"}

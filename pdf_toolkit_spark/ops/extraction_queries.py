@@ -6,14 +6,12 @@ covered by tests/test_spark_job.py against the serial oracle."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..corpus import corpus_config
 from ..spark.job import build_pipeline
+from ..spark.records import row_stage
 from ..spark.schema import DOCUMENTS_RAW_SCHEMA
 from .common import table
 
@@ -24,25 +22,18 @@ def documents_as_pdfs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def wrap(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def wrap(doc_id, text):
         from ..corpus import document_from_text
 
-        for batch in batches:
-            made = [document_from_text(int(i), t) for i, t in zip(batch["doc_id"], batch["text"])]
-            yield pd.DataFrame(
-                {
-                    "doc_id": [m["doc_id"] for m in made],
-                    "pdf_bytes": [m["pdf_bytes"] for m in made],
-                    "n_pages": [m["n_pages"] for m in made],
-                }
-            )
+        m = document_from_text(int(doc_id), text)
+        yield (m["doc_id"], m["pdf_bytes"], m["n_pages"])
 
     # 4 waves per core: the wrap UDF (and, under chunk_spread="input",
     # the downstream extraction UDF that inherits this partitioning) is
     # CPU-bound per doc, so multiple waves absorb stragglers without a
     # second byte-moving exchange.
-    return docs.repartition(spark.sparkContext.defaultParallelism * 4).mapInPandas(
-        wrap, schema=DOCUMENTS_RAW_SCHEMA
+    return docs.repartition(spark.sparkContext.defaultParallelism * 4).mapInArrow(
+        row_stage(wrap, DOCUMENTS_RAW_SCHEMA), schema=DOCUMENTS_RAW_SCHEMA
     )
 
 

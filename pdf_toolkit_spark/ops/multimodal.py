@@ -1,5 +1,6 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata,
-processed with Arrow-batched ``mapInPandas``.
+processed by per-row ``mapInArrow`` stages (spark/records.py
+``row_stage``; no pandas in the workers).
 
 The decode dispatch is REAL for every format the engine owns a codec
 for — PNG and JPEG (pdfio/), PCM WAV, YUV4MPEG2 and uncompressed-DIB
@@ -19,14 +20,14 @@ bytes), plus the local re-implementation check in tests/test_ops.py.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
+from typing import Callable, Iterable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..errors import UserError
+from ..spark.records import row_stage
 from .common import register_persist, table
 
 MEDIA_META_SCHEMA = T.StructType([
@@ -140,41 +141,37 @@ def _decode_header_impl(payload: bytes) -> dict:
     return fake_decode_header(payload)
 
 
-def _doc_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, payload) for every decode-shaped op, repartitioned to
-    the session parallelism BEFORE the mapInPandas stage: the testdata
-    tables are single-row-group parquet files, so without the explicit
-    repartition the whole decode pipeline runs as ONE task (the same
-    CPU-bound-stage gotcha documents_as_pdfs already guards against;
-    at fleet scale the shuffle is a few bytes per doc and the decode
-    stage it feeds dominates by orders of magnitude)."""
+def _per_doc(
+    spark: SparkSession, sf_dir: str, fn: Callable[[int, bytes], Iterable[tuple]],
+    schema: T.StructType,
+) -> DataFrame:
+    """One per-row stage ``fn(doc_id, payload)`` over every document's
+    text bytes, repartitioned to the session parallelism BEFORE the
+    stage: the testdata tables are single-row-group parquet files, so
+    without the explicit repartition the whole decode pipeline runs as
+    ONE task (the same CPU-bound-stage gotcha documents_as_pdfs already
+    guards against; at fleet scale the shuffle is a few bytes per doc
+    and the decode stage it feeds dominates by orders of magnitude)."""
 
     return (
         table(spark, sf_dir, "documents")
         .select("doc_id", F.encode("text", "utf-8").alias("payload"))
         .repartition(spark.sparkContext.defaultParallelism)
+        .mapInArrow(row_stage(fn, schema), schema=schema)
     )
+
+
+def _decode_row(doc_id: int, payload: bytes):
+    meta = decode_header(payload)
+    yield (doc_id, len(payload), meta["format"], meta["width"], meta["height"],
+           meta["thumb_ref"])
 
 
 def media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Treat each document's text bytes as an opaque media payload and
-    extract typed metadata via one mapInPandas stage."""
+    extract typed metadata via one per-row stage."""
 
-    docs = _doc_payloads(spark, sf_dir)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {k: [] for k in ("doc_id", "n_bytes", "format", "width", "height", "thumb_ref")}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                raw = bytes(payload)
-                meta = decode_header(raw)
-                out["doc_id"].append(int(doc_id))
-                out["n_bytes"].append(len(raw))
-                for k in ("format", "width", "height", "thumb_ref"):
-                    out[k].append(meta[k])
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(decode, schema=MEDIA_META_SCHEMA)
+    return _per_doc(spark, sf_dir, _decode_row, MEDIA_META_SCHEMA)
 
 
 def media_format_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -197,6 +194,20 @@ PNG_META_SCHEMA = T.StructType([
 ])
 
 
+def _png_roundtrip_row(doc_id: int, payload: bytes):
+    import numpy as np
+
+    from ..pdfio.png import decode_png, encode_png
+
+    d = hashlib.sha256(payload).digest()
+    w, h, fill = 16 + d[1] % 32, 16 + d[2] % 32, d[3]
+    shape = (h, w, 3) if d[0] % 2 else (h, w)
+    png = encode_png(np.full(shape, fill, np.uint8))
+    meta = decode_header(png)          # the REAL decode
+    arr = decode_png(png)
+    yield (doc_id, meta["format"], meta["width"], meta["height"], int(arr.mean()))
+
+
 def png_decode_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL-codec media path: per doc, a deterministic PNG payload
     (dims/mode/fill derived from sha256(text), encoded with the
@@ -208,32 +219,21 @@ def png_decode_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean have an exact DuckDB oracle even though the decode itself is a
     real pixel decode (the part a SQL engine cannot express)."""
 
+    return _per_doc(spark, sf_dir, _png_roundtrip_row, PNG_META_SCHEMA)
+
+
+def _jpeg_roundtrip_row(doc_id: int, payload: bytes):
     import numpy as np
 
-    from ..pdfio.png import encode_png
+    from ..pdfio.jpeg import decode_jpeg, encode_jpeg
 
-    docs = _doc_payloads(spark, sf_dir)
-
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {k: [] for k in ("doc_id", "format", "width", "height", "mean_px")}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                d = hashlib.sha256(bytes(payload)).digest()
-                w, h, fill = 16 + d[1] % 32, 16 + d[2] % 32, d[3]
-                shape = (h, w, 3) if d[0] % 2 else (h, w)
-                png = encode_png(np.full(shape, fill, np.uint8))
-                meta = decode_header(png)          # the REAL decode
-                from ..pdfio.png import decode_png
-
-                arr = decode_png(png)
-                out["doc_id"].append(int(doc_id))
-                out["format"].append(meta["format"])
-                out["width"].append(meta["width"])
-                out["height"].append(meta["height"])
-                out["mean_px"].append(int(arr.mean()))
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(roundtrip, schema=PNG_META_SCHEMA)
+    d = hashlib.sha256(payload).digest()
+    w, h, fill = 16 + d[1] % 32, 16 + d[2] % 32, d[3]
+    shape = (h, w, 3) if d[0] % 2 else (h, w)
+    jpg = encode_jpeg(np.full(shape, fill, np.uint8))
+    meta = decode_header(jpg)          # dispatches to decode_jpeg
+    arr = decode_jpeg(jpg)
+    yield (doc_id, meta["format"], meta["width"], meta["height"], int(arr.mean()))
 
 
 def jpeg_decode_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -244,32 +244,7 @@ def jpeg_decode_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     digest-derived fill byte and the DuckDB oracle stays exact even
     though JPEG is lossy in general."""
 
-    import numpy as np
-
-    from ..pdfio.jpeg import encode_jpeg
-
-    docs = _doc_payloads(spark, sf_dir)
-
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..pdfio.jpeg import decode_jpeg
-
-        for batch in batches:
-            out = {k: [] for k in ("doc_id", "format", "width", "height", "mean_px")}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                d = hashlib.sha256(bytes(payload)).digest()
-                w, h, fill = 16 + d[1] % 32, 16 + d[2] % 32, d[3]
-                shape = (h, w, 3) if d[0] % 2 else (h, w)
-                jpg = encode_jpeg(np.full(shape, fill, np.uint8))
-                meta = decode_header(jpg)          # dispatches to decode_jpeg
-                arr = decode_jpeg(jpg)
-                out["doc_id"].append(int(doc_id))
-                out["format"].append(meta["format"])
-                out["width"].append(meta["width"])
-                out["height"].append(meta["height"])
-                out["mean_px"].append(int(arr.mean()))
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(roundtrip, schema=PNG_META_SCHEMA)
+    return _per_doc(spark, sf_dir, _jpeg_roundtrip_row, PNG_META_SCHEMA)
 
 
 THUMB = 8  # thumbnail edge (the feature-extract stage's output dims)
@@ -300,6 +275,20 @@ def _pixel_center_thumb(arr, w: int, h: int):
     return arr[rows][:, cols]
 
 
+def _thumbnail_row(doc_id: int, payload: bytes):
+    import numpy as np
+
+    from ..pdfio.png import decode_png, encode_png
+
+    d = hashlib.sha256(payload).digest()
+    a, b, c = d[0], 1 + d[1] % 7, 1 + d[2] % 7
+    w, h = 24 + d[3] % 40, 24 + d[4] % 40
+    grad = (a + b * np.arange(w)[None, :] + c * np.arange(h)[:, None]) % 256
+    arr = decode_png(encode_png(grad.astype(np.uint8)))  # the REAL decode
+    tiny = _pixel_center_thumb(arr, w, h)
+    yield (doc_id, int(w), int(h), int(tiny.sum()), tiny.tobytes().hex())
+
+
 def image_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-extract stage over the real-codec media path: a
     deterministic GRADIENT PNG per doc (structure, not flat fill — the
@@ -313,33 +302,7 @@ def image_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
     64 thumbnail bytes have an exact DuckDB oracle even though the
     Spark side round-trips real PNG encode->decode to produce them."""
 
-    import numpy as np
-
-    from ..pdfio.png import decode_png, encode_png
-
-    docs = _doc_payloads(spark, sf_dir)
-
-    def thumb(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {k: [] for k in ("doc_id", "width", "height", "thumb_sum", "thumb_hex")}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                d = hashlib.sha256(bytes(payload)).digest()
-                a, b, c = d[0], 1 + d[1] % 7, 1 + d[2] % 7
-                w, h = 24 + d[3] % 40, 24 + d[4] % 40
-                grad = (
-                    a + b * np.arange(w)[None, :] + c * np.arange(h)[:, None]
-                ) % 256
-                png = encode_png(grad.astype(np.uint8))
-                arr = decode_png(png)  # the REAL decode
-                tiny = _pixel_center_thumb(arr, w, h)
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(int(w))
-                out["height"].append(int(h))
-                out["thumb_sum"].append(int(tiny.sum()))
-                out["thumb_hex"].append(tiny.tobytes().hex())
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(thumb, schema=THUMB_SCHEMA)
+    return _per_doc(spark, sf_dir, _thumbnail_row, THUMB_SCHEMA)
 
 
 AUDIO_SCHEMA = T.StructType([
@@ -354,6 +317,22 @@ AUDIO_SCHEMA = T.StructType([
 _RATES = (8000, 16000, 22050, 44100)
 
 
+def _audio_row(doc_id: int, payload: bytes):
+    import numpy as np
+
+    from ..media_codecs import decode_wav, encode_wav
+
+    d = hashlib.sha256(payload).digest()
+    rate = _RATES[d[0] % 4]
+    n = 500 + d[1] * 7
+    a, b = d[2], 1 + d[3]
+    wave = ((a + b * np.arange(n, dtype=np.int64)) % 2003 - 1001).astype(np.int16)
+    got_rate, arr = decode_wav(encode_wav(wave, rate))  # REAL parse
+    s = arr[:, 0].astype(np.int64)
+    yield (doc_id, int(got_rate), int(len(s)), int(len(s) * 1000 // got_rate),
+           int(np.abs(s).max()), int((s * s).sum()))
+
+
 def audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio path: a deterministic integer waveform per doc is
     encoded to PCM WAV and parsed back with the engine's RIFF parser
@@ -363,34 +342,7 @@ def audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes every stat without an audio stack. Output: (doc_id,
     sample_rate, n_samples, duration_ms, peak, sum_sq)."""
 
-    import numpy as np
-
-    from ..media_codecs import decode_wav, encode_wav
-
-    docs = _doc_payloads(spark, sf_dir)
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {k: [] for k in (
-                "doc_id", "sample_rate", "n_samples", "duration_ms", "peak", "sum_sq")}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                d = hashlib.sha256(bytes(payload)).digest()
-                rate = _RATES[d[0] % 4]
-                n = 500 + d[1] * 7
-                a, b = d[2], 1 + d[3]
-                wave = ((a + b * np.arange(n, dtype=np.int64)) % 2003 - 1001
-                        ).astype(np.int16)
-                got_rate, arr = decode_wav(encode_wav(wave, rate))  # REAL parse
-                s = arr[:, 0].astype(np.int64)
-                out["doc_id"].append(int(doc_id))
-                out["sample_rate"].append(int(got_rate))
-                out["n_samples"].append(int(len(s)))
-                out["duration_ms"].append(int(len(s) * 1000 // got_rate))
-                out["peak"].append(int(np.abs(s).max()))
-                out["sum_sq"].append(int((s * s).sum()))
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(stats, schema=AUDIO_SCHEMA)
+    return _per_doc(spark, sf_dir, _audio_row, AUDIO_SCHEMA)
 
 
 VIDEO_SCHEMA = T.StructType([
@@ -403,6 +355,34 @@ VIDEO_SCHEMA = T.StructType([
 FRAME_EVERY = 3  # frame-sampling stride
 
 
+def _sampled_frames(doc_id: int, fps: int, frames):
+    """(doc_id, frame_no, fps, frame_sum) of every FRAME_EVERY-th frame."""
+
+    import numpy as np
+
+    for f in range(0, len(frames), FRAME_EVERY):
+        yield (doc_id, f, int(fps), int(frames[f].astype(np.int64).sum()))
+
+
+def _y4m_row(doc_id: int, payload: bytes):
+    import numpy as np
+
+    from ..media_codecs import decode_y4m, encode_y4m
+
+    d = hashlib.sha256(payload).digest()
+    w, h = 8 + d[0] % 17, 8 + d[1] % 17
+    nf = 4 + d[2] % 9
+    a, b, c, e = d[3], 1 + d[4] % 7, 1 + d[5] % 7, 1 + d[6] % 11
+    grid = (
+        a
+        + b * np.arange(w)[None, None, :]
+        + c * np.arange(h)[None, :, None]
+        + e * np.arange(nf)[:, None, None]
+    ) % 256
+    fps, frames = decode_y4m(encode_y4m(grid.astype(np.uint8), fps=24))  # REAL parse
+    return _sampled_frames(doc_id, fps, frames)
+
+
 def video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL video path: a deterministic gradient y4m clip per doc
     (Cmono Y planes, pixel (a + b*x + c*y + e*f) % 256) round-trips
@@ -412,37 +392,27 @@ def video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (doc_id, frame_no, fps, frame_sum), one row per sampled
     frame."""
 
+    return _per_doc(spark, sf_dir, _y4m_row, VIDEO_SCHEMA)
+
+
+def _avi_row(doc_id: int, payload: bytes):
     import numpy as np
 
-    from ..media_codecs import decode_y4m, encode_y4m
+    from ..media_codecs import decode_avi, encode_avi
 
-    docs = _doc_payloads(spark, sf_dir)
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {k: [] for k in ("doc_id", "frame_no", "fps", "frame_sum")}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                d = hashlib.sha256(bytes(payload)).digest()
-                w, h = 8 + d[0] % 17, 8 + d[1] % 17
-                nf = 4 + d[2] % 9
-                a, b, c, e = d[3], 1 + d[4] % 7, 1 + d[5] % 7, 1 + d[6] % 11
-                grid = (
-                    a
-                    + b * np.arange(w)[None, None, :]
-                    + c * np.arange(h)[None, :, None]
-                    + e * np.arange(nf)[:, None, None]
-                ) % 256
-                fps, frames = decode_y4m(
-                    encode_y4m(grid.astype(np.uint8), fps=24)
-                )  # REAL parse
-                for f in range(0, len(frames), FRAME_EVERY):
-                    out["doc_id"].append(int(doc_id))
-                    out["frame_no"].append(f)
-                    out["fps"].append(int(fps))
-                    out["frame_sum"].append(int(frames[f].astype(np.int64).sum()))
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(sample, schema=VIDEO_SCHEMA)
+    d = hashlib.sha256(payload).digest()
+    w, h = 5 + d[7] % 19, 6 + d[8] % 15
+    nf = 3 + d[9] % 8
+    a, b, c = d[10], 1 + d[11] % 7, 1 + d[12] % 7
+    e = 1 + d[13] % 11
+    grid = (
+        a
+        + b * np.arange(w)[None, None, :]
+        + c * np.arange(h)[None, :, None]
+        + e * np.arange(nf)[:, None, None]
+    ) % 256
+    fps, frames = decode_avi(encode_avi(grid.astype(np.uint8), fps=30))  # REAL parse
+    return _sampled_frames(doc_id, fps, frames)
 
 
 def avi_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -455,38 +425,7 @@ def avi_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic oracle form. Output: (doc_id, frame_no, fps,
     frame_sum)."""
 
-    import numpy as np
-
-    from ..media_codecs import decode_avi, encode_avi
-
-    docs = _doc_payloads(spark, sf_dir)
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {k: [] for k in ("doc_id", "frame_no", "fps", "frame_sum")}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                d = hashlib.sha256(bytes(payload)).digest()
-                w, h = 5 + d[7] % 19, 6 + d[8] % 15
-                nf = 3 + d[9] % 8
-                a, b, c = d[10], 1 + d[11] % 7, 1 + d[12] % 7
-                e = 1 + d[13] % 11
-                grid = (
-                    a
-                    + b * np.arange(w)[None, None, :]
-                    + c * np.arange(h)[None, :, None]
-                    + e * np.arange(nf)[:, None, None]
-                ) % 256
-                fps, frames = decode_avi(
-                    encode_avi(grid.astype(np.uint8), fps=30)
-                )  # REAL parse
-                for f in range(0, len(frames), FRAME_EVERY):
-                    out["doc_id"].append(int(doc_id))
-                    out["frame_no"].append(f)
-                    out["fps"].append(int(fps))
-                    out["frame_sum"].append(int(frames[f].astype(np.int64).sum()))
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(sample, schema=VIDEO_SCHEMA)
+    return _per_doc(spark, sf_dir, _avi_row, VIDEO_SCHEMA)
 
 
 #: aHash geometry: 8x8 thumbnail, 60 bits kept (cells 8*i+j < 60) so
@@ -506,6 +445,35 @@ PHASH_SCHEMA = T.StructType([
 ])
 
 
+def _phash_row(doc_id: int, payload: bytes):
+    import numpy as np
+
+    from ..pdfio.png import decode_png, encode_png
+
+    d = hashlib.sha256(payload).digest()
+    a, b, c = d[14] % 4, 1 + d[15] % 8, 1 + d[16] % 8
+    w, h = 10 + d[17] % 6, 10 + d[18] % 6
+    sx, sy = d[19] % 2, (d[19] // 2) % 2
+    # 256 structure classes (slopes x orientations); max pixel
+    # 3 + 8*14 + 8*14 = 227: no % 256 wrap, so the SQL twin's plain
+    # integer expression is exact
+    xs = np.arange(w)[None, :]
+    ys = np.arange(h)[:, None]
+    grad = (
+        a + b * ((w - 1 - xs) if sx else xs) + c * ((h - 1 - ys) if sy else ys)
+    ).astype(np.uint8)
+    arr = decode_png(encode_png(grad))      # the REAL decode
+    tiny = _pixel_center_thumb(arr, w, h).astype(np.int64)
+    s = int(tiny.sum())
+    fp64 = 0
+    for i in range(THUMB):
+        for j in range(THUMB):
+            bit = THUMB * i + j
+            if bit < PHASH_BITS and int(tiny[i, j]) * 64 > s:
+                fp64 |= 1 << bit
+    yield (doc_id, fp64)
+
+
 def _phash_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, phash): average-hash perceptual fingerprints over the
     REAL-codec image path — per doc, a deterministic low-cardinality
@@ -519,44 +487,7 @@ def _phash_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     offset (cancelled by the mean test) and in dims (a small sampling
     perturbation) — the image near-dups the pair query must find."""
 
-    import numpy as np
-
-    from ..pdfio.png import decode_png, encode_png
-
-    docs = _doc_payloads(spark, sf_dir)
-
-    def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"doc_id": [], "phash": []}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                d = hashlib.sha256(bytes(payload)).digest()
-                a, b, c = d[14] % 4, 1 + d[15] % 8, 1 + d[16] % 8
-                w, h = 10 + d[17] % 6, 10 + d[18] % 6
-                sx, sy = d[19] % 2, (d[19] // 2) % 2
-                # 256 structure classes (slopes x orientations); max
-                # pixel 3 + 8*14 + 8*14 = 227: no % 256 wrap, so the
-                # SQL twin's plain integer expression is exact
-                xs = np.arange(w)[None, :]
-                ys = np.arange(h)[:, None]
-                grad = (
-                    a
-                    + b * ((w - 1 - xs) if sx else xs)
-                    + c * ((h - 1 - ys) if sy else ys)
-                ).astype(np.uint8)
-                arr = decode_png(encode_png(grad))      # the REAL decode
-                tiny = _pixel_center_thumb(arr, w, h).astype(np.int64)
-                s = int(tiny.sum())
-                fp64 = 0
-                for i in range(THUMB):
-                    for j in range(THUMB):
-                        bit = THUMB * i + j
-                        if bit < PHASH_BITS and int(tiny[i, j]) * 64 > s:
-                            fp64 |= 1 << bit
-                out["doc_id"].append(int(doc_id))
-                out["phash"].append(fp64)
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(fp, schema=PHASH_SCHEMA)
+    return _per_doc(spark, sf_dir, _phash_row, PHASH_SCHEMA)
 
 
 def phash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -572,7 +503,7 @@ def phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hamming). Same LSH-banding shape as SimHash text near-dup —
     bucket equi-join on (band, band_val), never an all-pairs compare,
     one packed bigint per doc on every plan edge; the decode cost
-    rides one mapInPandas scan."""
+    rides one per-row scan."""
 
     fps = register_persist(_phash_fps(spark, sf_dir))
     n_bands = PHASH_BITS // PHASH_BAND_BITS

@@ -3,7 +3,7 @@ boilerplate strip ... DOM heuristics").
 
 Pipeline (all-declarative after the one Arrow-batched parse stage):
 
-  documents --repartition--> mapInPandas(html synth + DOM extract)
+  documents --repartition--> mapInArrow(html synth + DOM extract)
             --> corpus-level boilerplate strip (aggregate + anti-join
                 on (site, norm_text): spans repeated in >=
                 BOILER_MIN_DOCS distinct docs of a site are chrome)
@@ -20,14 +20,12 @@ anti-join; assembly shuffles one row per span, keyed by doc_id.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..htmlx import BOILER_MIN_DOCS, extract_html_document, site_of
+from .records import row_stage
 
 #: Accumulator counting documents fed through the DOM-parse UDF in the
 #: most recent `html_records_df` relation. Tests read it after an action
@@ -70,23 +68,15 @@ def html_records_df(docs: DataFrame) -> DataFrame:
     acc = spark.sparkContext.accumulator(0)
     parse_docs_acc = acc
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            acc.add(len(batch))
-            rows: list[tuple] = []
-            for i, t in zip(batch["doc_id"], batch["text"]):
-                did = int(i)
-                for pos, s in enumerate(extract_html_document(did, t)):
-                    rows.append(
-                        (f"doc{did:06d}", site_of(did), pos, s["kind"],
-                         s["text"], s["norm_text"], s["media_ref"])
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in HTML_RECORDS_SCHEMA.fields]
-            )
+    def run(doc_id, text, **_):
+        acc.add(1)
+        did = int(doc_id)
+        for pos, s in enumerate(extract_html_document(did, text)):
+            yield (f"doc{did:06d}", site_of(did), pos, s["kind"], s["text"],
+                   s["norm_text"], s["media_ref"])
 
-    return docs.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        run, schema=HTML_RECORDS_SCHEMA
+    return docs.repartition(spark.sparkContext.defaultParallelism).mapInArrow(
+        row_stage(run, HTML_RECORDS_SCHEMA), schema=HTML_RECORDS_SCHEMA
     )
 
 

@@ -15,23 +15,25 @@ kernel pipeline. This module is their distributed twin:
   page, so kernel semantics are pinned by the same tests.
 - :func:`rotate_image_folder` — ``rotate images`` (reference
   rotate.py:178-307): clockwise right-angle rotation of every raster,
-  returned as (image_id, png) rows for a media-table write.
+  returned as (image_id, png, status, error) rows for a media-table
+  write.
 
 All Python work is Arrow-batched ``mapInArrow`` over binary columns —
-no per-row UDFs and no pandas, same boundary discipline as the PDF job
-(output batches built by spark/records.py).
+no per-row UDFs and no pandas, same boundary as the PDF job
+(spark/records.py row_stage).
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Optional
+from typing import Any, Optional
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config import DEFAULTS, validate_config
-from .job import assemble_spans, strip_boilerplate
+from .job import span_branch
+from .records import error_row, error_text, page_rows, row_stage
 from .schema import RECORDS_SCHEMA
 
 
@@ -54,28 +56,24 @@ def read_image_folder(spark: SparkSession, path: str, pattern: str = "*.png") ->
     )
 
 
-def _make_image_extract_batch(cfg: dict[str, Any]):
-    def image_extract_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _image_records(cfg: dict[str, Any]):
+    """The page-images extraction function for mapInArrow: one image
+    file -> its RECORDS rows, a bad image -> its 'error' row."""
+
+    def image_rows(image_id, png, **_) -> list[tuple]:
         from ..extract import extract_page
         from ..pdfio.parser import ParsedPage
         from ..pdfio.png import decode_png
-        from .records import RECORDS_ARROW, error_row, page_rows, record_batch
 
-        def image_rows(image_id, png) -> list[tuple]:
-            try:
-                arr = decode_png(png.as_py())  # gray or RGB
-                h, w = arr.shape[:2]
-                page = ParsedPage(index=0, width=w, height=h, rotate=0, scan=arr, items=[])
-                return page_rows(image_id, 1, 0, extract_page(page, 0, cfg), set())
-            except Exception as exc:
-                return [error_row(image_id, 1, 0, exc)]
+        arr = decode_png(png)  # gray or RGB
+        h, w = arr.shape[:2]
+        page = ParsedPage(index=0, width=w, height=h, rotate=0, scan=arr, items=[])
+        return page_rows(image_id, 1, 0, extract_page(page, 0, cfg), set())
 
-        for batch in batches:
-            pngs = batch.column("png")
-            for i, image_id in enumerate(batch.column("image_id").to_pylist()):
-                yield record_batch(image_rows(image_id, pngs[i]), RECORDS_ARROW)
+    def image_error(row: dict[str, Any], exc: Exception) -> list[tuple]:
+        return [error_row(row["image_id"], 1, 0, exc)]
 
-    return image_extract_batch
+    return row_stage(image_rows, RECORDS_SCHEMA, on_error=image_error)
 
 
 def extract_image_folder(
@@ -87,39 +85,42 @@ def extract_image_folder(
     cfg = validate_config(dict(DEFAULTS, **(cfg or {})))
     n_parts = spark.sparkContext.defaultParallelism * 4
     repart = images.repartition(n_parts, F.col("image_id"))
-    records = repart.mapInArrow(_make_image_extract_batch(cfg), schema=RECORDS_SCHEMA)
-    # Same narrow-exchange discipline as the PDF pipeline: media rows
-    # and lineage payload columns never enter the strip/assembly
-    # shuffles (they're consumed from the records branch only).
-    span_rows = records.filter(F.col("kind") != "media").select(
-        "doc_id", "n_pages", "page_no", "region_idx", "item_idx", "kind",
-        "text", "norm_text", "y_band", "is_page_number", "media_ref", "status",
-    )
-    spans = assemble_spans(strip_boilerplate(span_rows, cfg))
-    return spans, records
+    records = repart.mapInArrow(_image_records(cfg), schema=RECORDS_SCHEMA)
+    return span_branch(records, cfg), records
+
+
+#: rotate_image_folder's output: a bad image becomes a status='error'
+#: row (the ROTATE_SCHEMA convention of spark/pdfjobs.py).
+ROTATE_IMAGES_SCHEMA = T.StructType([
+    T.StructField("image_id", T.StringType(), False),
+    T.StructField("png", T.BinaryType(), True),
+    T.StructField("status", T.StringType(), False),
+    T.StructField("error", T.StringType(), True),
+])
 
 
 def rotate_image_folder(images: DataFrame, degrees: int) -> DataFrame:
-    """(image_id, png): every raster rotated clockwise by 90/180/270
-    (reference rotate.py:274-278 semantics via kernels.rotate_image_cw)."""
+    """(image_id, png, status, error): every raster rotated clockwise by
+    90/180/270 (reference rotate.py:274-278 semantics via
+    kernels.rotate_image_cw); an image that fails to decode becomes an
+    'error' row instead of failing the stage."""
 
     if degrees % 360 not in (90, 180, 270):
         from ..errors import UserError
 
         raise UserError("Degrees must be one of 90, 180, 270 (clockwise).")
 
-    def rotate_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def rotate_row(image_id, png, **_):
         from .. import kernels as K
         from ..pdfio.png import decode_png, encode_png
-        from .records import record_batch
 
-        schema = pa.schema([("image_id", pa.string()), ("png", pa.binary())])
-        for batch in batches:
-            pngs = batch.column("png")
-            rows = []
-            for i, image_id in enumerate(batch.column("image_id").to_pylist()):
-                arr = K.rotate_image_cw(decode_png(pngs[i].as_py()), degrees % 360)
-                rows.append((image_id, encode_png(arr)))
-            yield record_batch(rows, schema)
+        arr = K.rotate_image_cw(decode_png(png), degrees % 360)
+        yield (image_id, encode_png(arr), "written", None)
 
-    return images.mapInArrow(rotate_batch, "image_id string, png binary")
+    def rotate_error(row: dict[str, Any], exc: Exception):
+        yield (row["image_id"], None, "error", error_text(exc))
+
+    return images.mapInArrow(
+        row_stage(rotate_row, ROTATE_IMAGES_SCHEMA, on_error=rotate_error),
+        schema=ROTATE_IMAGES_SCHEMA,
+    )

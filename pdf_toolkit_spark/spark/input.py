@@ -1,18 +1,16 @@
 """Input-side helpers: distributed corpus materialization and readers.
 
 The fixture corpus is generated ON the executors (spark.range ->
-mapInPandas over doc ids) — the generator is a pure function of
+a per-row mapInArrow stage over doc ids, spark/records.py row_stage) — the generator is a pure function of
 (seed, doc_id), so generation parallelizes like any other stage and the
 driver never holds PDF bytes.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from .records import row_stage
 from .schema import DOCUMENTS_RAW_SCHEMA
 
 
@@ -31,26 +29,17 @@ def corpus_dataframe(
 
     partitions = partitions or spark.sparkContext.defaultParallelism
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def gen(id):
         from ..corpus import make_document
 
-        for batch in batches:
-            docs = [make_document(int(i), seed=seed, mega_every=mega_every,
-                                  profile=profile, jpeg_every=jpeg_every,
-                                  encrypt_every=encrypt_every,
-                                  cid_every=cid_every)
-                    for i in batch["id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": [d["doc_id"] for d in docs],
-                    "pdf_bytes": [d["pdf_bytes"] for d in docs],
-                    "n_pages": [d["n_pages"] for d in docs],
-                }
-            )
+        d = make_document(id, seed=seed, mega_every=mega_every, profile=profile,
+                          jpeg_every=jpeg_every, encrypt_every=encrypt_every,
+                          cid_every=cid_every)
+        yield (d["doc_id"], d["pdf_bytes"], d["n_pages"])
 
     return (
         spark.range(0, n_docs, numPartitions=partitions)
-        .mapInPandas(gen, schema=DOCUMENTS_RAW_SCHEMA)
+        .mapInArrow(row_stage(gen, DOCUMENTS_RAW_SCHEMA), schema=DOCUMENTS_RAW_SCHEMA)
     )
 
 

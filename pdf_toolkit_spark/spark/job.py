@@ -28,13 +28,13 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass
-from typing import Any, Iterator, Optional
+from typing import Any, Optional
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import DEFAULTS, validate_config
+from .records import error_row, fetch_pdf, page_rows, row_stage
 from .schema import RECORDS_SCHEMA, SPANS_SCHEMA
 
 
@@ -44,57 +44,33 @@ def make_extract_batch(cfg: dict[str, Any]):
     Input rows: (doc_id, pdf_bytes | pdf_locator, n_pages, chunk_start,
     chunk_end). Output: one RECORDS_SCHEMA batch per input row (document
     chunk) — one row per span candidate, the first row of each page
-    carrying lineage + counter increments. The carrier column is read
-    one row at a time, so a worker holds one PDF copy, and one chunk's
-    PNG blobs, at a time. No pandas on this path (spark/records.py).
+    carrying lineage + counter increments. A worker holds one PDF copy,
+    and one chunk's PNG blobs, at a time (spark/records.py row_stage).
     """
 
-    def extract_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def chunk_rows(doc_id, n_pages, chunk_start, chunk_end, pdf_bytes=None,
+                   pdf_locator=None) -> list[tuple]:
         # Imports inside the UDF body: executors pay them lazily
         # (X8 in SURVEY.md §4).
         from ..extract import extract_page
         from ..pdfio.parser import PdfDocument
-        from .records import RECORDS_ARROW, error_row, page_rows, record_batch
 
-        def chunk_rows(doc_id, payload, by_locator, n_pages, lo, hi) -> list[tuple]:
-            # Per-document error isolation: at 10^12-doc scale one
-            # malformed PDF must become an 'error' lineage row, not a
-            # stage failure. Failed docs emit no spans, stay
-            # uncommitted, and are retried by the next resume run.
-            try:
-                # Locator mode: the exchange carried only a path; fetch
-                # the bytes executor-side (local file here; object-store
-                # GET on a cluster). Fetch failures take the same per-doc
-                # error path as parse failures.
-                if by_locator:
-                    with open(payload.as_py(), "rb") as fh:
-                        pdf_bytes = fh.read()
-                else:
-                    pdf_bytes = payload.as_py()
-                doc = PdfDocument(pdf_bytes)
-                rows: list[tuple] = []
-                seen_refs: set[str] = set()
-                for page_no in range(lo, hi + 1):
-                    result = extract_page(doc.load_page(page_no), page_no, cfg)
-                    rows += page_rows(doc_id, n_pages, page_no, result, seen_refs)
-                return rows
-            except Exception as exc:  # fetch/parse/codec errors
-                return [error_row(doc_id, n_pages, lo, exc)]
+        doc = PdfDocument(fetch_pdf(pdf_bytes, pdf_locator))
+        rows: list[tuple] = []
+        seen_refs: set[str] = set()
+        for page_no in range(chunk_start, chunk_end + 1):
+            result = extract_page(doc.load_page(page_no), page_no, cfg)
+            rows += page_rows(doc_id, n_pages, page_no, result, seen_refs)
+        return rows
 
-        for batch in batches:
-            by_locator = "pdf_locator" in batch.schema.names
-            carrier = batch.column("pdf_locator" if by_locator else "pdf_bytes")
-            keys = zip(*(batch.column(c).to_pylist()
-                         for c in ("doc_id", "n_pages", "chunk_start", "chunk_end")))
-            for i, (doc_id, n_pages, lo, hi) in enumerate(keys):
-                # Nothing in this frame keeps a chunk's rows or PDF
-                # alive while the next chunk runs.
-                yield record_batch(
-                    chunk_rows(doc_id, carrier[i], by_locator, n_pages, lo, hi),
-                    RECORDS_ARROW,
-                )
+    def chunk_error(row: dict[str, Any], exc: Exception) -> list[tuple]:
+        # Per-document error isolation: at 10^12-doc scale one malformed
+        # PDF (or failed fetch) must become an 'error' lineage row, not
+        # a stage failure. Failed docs emit no spans, stay uncommitted,
+        # and are retried by the next resume run.
+        return [error_row(row["doc_id"], row["n_pages"], row["chunk_start"], exc)]
 
-    return extract_batch
+    return row_stage(chunk_rows, RECORDS_SCHEMA, on_error=chunk_error)
 
 
 def salt_into_chunks(df: DataFrame, pages_per_chunk: int) -> DataFrame:
@@ -229,6 +205,13 @@ def build_pipeline(
         n_parts = spark.sparkContext.defaultParallelism * 4
         salted = salted.repartition(n_parts, F.col("doc_id"), F.col("chunk_start"))
     records = salted.mapInArrow(make_extract_batch(cfg), schema=RECORDS_SCHEMA)
+    return span_branch(records, cfg), records
+
+
+def span_branch(records: DataFrame, cfg: dict[str, Any]) -> DataFrame:
+    """Ordered spans of a RECORDS relation (PDF chunks or image files):
+    boilerplate strip, then assembly, behind one doc_id exchange."""
+
     # The spans branch shuffles twice (strip window, assembly groupBy) —
     # keep those exchanges narrow: media rows (and their PNG blobs)
     # never enter them, and the lineage payload columns (fat JSON +
@@ -248,8 +231,23 @@ def build_pipeline(
     # span relation a second time for assembly. At corpus scale that
     # is an entire extra pass of the span bytes through the wire.
     span_rows = span_rows.repartition(F.col("doc_id"))
-    spans = assemble_spans(strip_boilerplate(span_rows, cfg))
-    return spans, records
+    return assemble_spans(strip_boilerplate(span_rows, cfg))
+
+
+def _read_if_exists(spark: SparkSession, path: str) -> Optional[DataFrame]:
+    """The parquet relation at ``path``, or None when nothing has been
+    written there yet. Only a MISSING path means "first run"; any other
+    read failure raises — silently skipping a resume would append
+    duplicate rows for already-committed docs or blobs."""
+
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as exc:
+        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
+            raise
+        return None
 
 
 @dataclass
@@ -299,34 +297,21 @@ def run_extraction(
     cfg = validate_config(dict(DEFAULTS, **(cfg or {})))
     started = time.monotonic()
     started_at = datetime.now(timezone.utc).isoformat()
-    # arrow_batch_rows is a runtime conf: fat PDFs want small batches
-    spark.conf.set(
-        "spark.sql.execution.arrow.maxRecordsPerBatch", str(cfg["arrow_batch_rows"])
-    )
     write_mode = "overwrite" if cfg["overwrite"] else "append"
 
     todo = input_df
     spans_path = f"{out_dir}/spans" if out_dir else None
     if cfg["overwrite"]:
         resume = False
-    if resume and spans_path:
-        # Only a MISSING path means "first run"; any other read failure
-        # must abort — silently skipping resume here would append
-        # duplicate span rows for already-committed docs.
-        from pyspark.errors import AnalysisException
-
-        try:
-            committed = spark.read.parquet(spans_path).select("doc_id").distinct()
-            # NO broadcast hint: AQE runtime-converts the anti-join to a
-            # broadcast when the committed set is small, and falls back
-            # to sort-merge when it is not — at 10^9-10^12 committed
-            # doc_ids a hard-coded broadcast is a driver/executor OOM
-            # (SURVEY.md §2.3: "broadcast when committed set is small,
-            # else sort-merge").
-            todo = input_df.join(committed, "doc_id", "left_anti")
-        except AnalysisException as exc:
-            if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-                raise
+    committed = _read_if_exists(spark, spans_path) if resume and spans_path else None
+    if committed is not None:
+        # NO broadcast hint: AQE runtime-converts the anti-join to a
+        # broadcast when the committed set is small, and falls back to
+        # sort-merge when it is not — at 10^9-10^12 committed doc_ids a
+        # hard-coded broadcast is a driver/executor OOM (SURVEY.md
+        # §2.3: "broadcast when committed set is small, else
+        # sort-merge").
+        todo = input_df.join(committed.select("doc_id").distinct(), "doc_id", "left_anti")
 
     spans, records = build_pipeline(spark, todo, cfg)
 
@@ -366,21 +351,14 @@ def run_extraction(
                 .agg(F.first("media_png").alias("png_bytes"))
             )
             media_path = f"{out_dir}/media"
-            if not cfg["overwrite"]:
-                from pyspark.errors import AnalysisException
-
-                try:
-                    committed_refs = spark.read.parquet(media_path).select("media_ref")
-                    # Same as the spans resume join: no broadcast hint —
-                    # the committed media set grows unboundedly with the
-                    # corpus; AQE picks broadcast only while it is small.
-                    media_tbl = media_tbl.join(
-                        committed_refs, "media_ref", "left_anti"
-                    )
-                except AnalysisException as exc:
-                    if ("PATH_NOT_FOUND" not in str(exc)
-                            and "Path does not exist" not in str(exc)):
-                        raise
+            committed_refs = None if cfg["overwrite"] else _read_if_exists(spark, media_path)
+            if committed_refs is not None:
+                # Same as the spans resume join: no broadcast hint — the
+                # committed media set grows unboundedly with the corpus;
+                # AQE picks broadcast only while it is small.
+                media_tbl = media_tbl.join(
+                    committed_refs.select("media_ref"), "media_ref", "left_anti"
+                )
             media_tbl.write.mode(write_mode).parquet(media_path)
         if spans_path:
             # Lineage is written BEFORE the spans commit: the records'

@@ -16,11 +16,12 @@ never stage failures — the same isolation contract as extraction.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Any, Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from .records import error_text, fetch_pdf, row_stage
 
 SPLIT_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
@@ -41,13 +42,6 @@ ROTATE_SCHEMA = T.StructType([
     T.StructField("status", T.StringType(), False),
     T.StructField("error", T.StringType(), True),
 ])
-
-
-def _load_bytes(by_locator: bool, payload) -> bytes:
-    if by_locator:
-        with open(payload, "rb") as fh:
-            return fh.read()
-    return bytes(payload)
 
 
 def _rebuild_pages(doc, indices, rotate_override=None):
@@ -85,40 +79,28 @@ def split_pdfs(
 
         validate_positive_int(int(pages_per_file), "--pages_per_file")
 
-    def split_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def split_row(doc_id, pdf_bytes=None, pdf_locator=None, **_):
         from ..pagespec import chunk_ranges, compute_part_digits, parse_page_ranges
         from ..pdfio.parser import PdfDocument
         from ..pdfio.writer import write_pdf
 
-        cols = [f.name for f in SPLIT_SCHEMA.fields]
-        for batch in batches:
-            by_locator = "pdf_locator" in batch.columns
-            carrier = batch["pdf_locator"] if by_locator else batch["pdf_bytes"]
-            rows: list[tuple] = []
-            for doc_id, payload in zip(batch["doc_id"], carrier):
-                try:
-                    doc = PdfDocument(_load_bytes(by_locator, payload))
-                    total = doc.page_count
-                    if ranges_spec:
-                        ranges = parse_page_ranges(ranges_spec, total)
-                    else:
-                        ranges = chunk_ranges(total, int(pages_per_file))
-                    digits = compute_part_digits(len(ranges))
-                    for index, (start, end) in enumerate(ranges, start=1):
-                        specs = _rebuild_pages(doc, range(start, end + 1))
-                        part = write_pdf(specs)
-                        rows.append((
-                            doc_id, index,
-                            f"{prefix}_part{index:0{digits}d}.pdf",
-                            f"{start + 1}-{end + 1}",
-                            part, len(specs), "written", None,
-                        ))
-                except Exception as exc:
-                    rows.append((doc_id, None, None, None, None, None, "error",
-                                 f"{type(exc).__name__}: {exc}"))
-            yield pd.DataFrame(rows, columns=cols)
+        doc = PdfDocument(fetch_pdf(pdf_bytes, pdf_locator))
+        total = doc.page_count
+        if ranges_spec:
+            ranges = parse_page_ranges(ranges_spec, total)
+        else:
+            ranges = chunk_ranges(total, int(pages_per_file))
+        digits = compute_part_digits(len(ranges))
+        for index, (start, end) in enumerate(ranges, start=1):
+            specs = _rebuild_pages(doc, range(start, end + 1))
+            yield (doc_id, index, f"{prefix}_part{index:0{digits}d}.pdf",
+                   f"{start + 1}-{end + 1}", write_pdf(specs), len(specs), "written", None)
 
-    return docs.mapInPandas(split_batch, schema=SPLIT_SCHEMA)
+    def split_error(row: dict[str, Any], exc: Exception):
+        yield (row["doc_id"], None, None, None, None, None, "error", error_text(exc))
+
+    return docs.mapInArrow(row_stage(split_row, SPLIT_SCHEMA, on_error=split_error),
+                           schema=SPLIT_SCHEMA)
 
 
 def rotate_pdfs(docs: DataFrame, degrees: int, pages: str = "all") -> DataFrame:
@@ -130,30 +112,22 @@ def rotate_pdfs(docs: DataFrame, degrees: int, pages: str = "all") -> DataFrame:
 
     validate_degrees(int(degrees))
 
-    def rotate_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def rotate_row(doc_id, pdf_bytes=None, pdf_locator=None, **_):
         from ..pagespec import parse_page_spec
         from ..pdfio.parser import PdfDocument
         from ..pdfio.writer import write_pdf
 
-        cols = [f.name for f in ROTATE_SCHEMA.fields]
-        for batch in batches:
-            by_locator = "pdf_locator" in batch.columns
-            carrier = batch["pdf_locator"] if by_locator else batch["pdf_bytes"]
-            rows: list[tuple] = []
-            for doc_id, payload in zip(batch["doc_id"], carrier):
-                try:
-                    doc = PdfDocument(_load_bytes(by_locator, payload))
-                    selected = set(parse_page_spec(pages, doc.page_count))
+        doc = PdfDocument(fetch_pdf(pdf_bytes, pdf_locator))
+        selected = set(parse_page_spec(pages, doc.page_count))
 
-                    def override(idx: int, current: int) -> int:
-                        return current + degrees if idx in selected else current
+        def override(idx: int, current: int) -> int:
+            return current + degrees if idx in selected else current
 
-                    specs = _rebuild_pages(doc, range(doc.page_count), override)
-                    rows.append((doc_id, write_pdf(specs), len(specs),
-                                 len(selected), "written", None))
-                except Exception as exc:
-                    rows.append((doc_id, None, None, None, "error",
-                                 f"{type(exc).__name__}: {exc}"))
-            yield pd.DataFrame(rows, columns=cols)
+        specs = _rebuild_pages(doc, range(doc.page_count), override)
+        yield (doc_id, write_pdf(specs), len(specs), len(selected), "written", None)
 
-    return docs.mapInPandas(rotate_batch, schema=ROTATE_SCHEMA)
+    def rotate_error(row: dict[str, Any], exc: Exception):
+        yield (row["doc_id"], None, None, None, "error", error_text(exc))
+
+    return docs.mapInArrow(row_stage(rotate_row, ROTATE_SCHEMA, on_error=rotate_error),
+                           schema=ROTATE_SCHEMA)

@@ -1,6 +1,7 @@
-"""RECORDS rows and the Arrow batches that carry them out of the
-extraction UDFs (``spark/job.py`` over PDF chunks, ``spark/images.py``
-over image files), both ``mapInArrow`` stages.
+"""The engine's one Python boundary: per-row ``mapInArrow`` stages
+(:func:`row_stage`), the Arrow batches they emit (:func:`record_batch`),
+and the RECORDS rows of the extraction UDFs (``spark/job.py`` over PDF
+chunks, ``spark/images.py`` over image files).
 
 Batches are assembled from buffers (numpy offsets and validity bits
 wrapped by ``pa.py_buffer``, then ``pa.Array.from_buffers``). pyarrow's
@@ -12,10 +13,11 @@ pays that import (about 0.33 s and 38 MB per worker).
 from __future__ import annotations
 
 import json
-from typing import TYPE_CHECKING
+from typing import TYPE_CHECKING, Any, Callable, Iterable, Iterator, Optional
 
 import numpy as np
 import pyarrow as pa
+from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from .schema import RECORDS_SCHEMA
@@ -23,7 +25,7 @@ from .schema import RECORDS_SCHEMA
 if TYPE_CHECKING:
     from ..extract import PageResult
 
-#: RECORDS_SCHEMA as Arrow types (string, int32, bool and binary only).
+#: RECORDS_SCHEMA as Arrow types.
 RECORDS_ARROW = to_arrow_schema(RECORDS_SCHEMA)
 
 _NO_LINEAGE = (None,) * 6
@@ -71,9 +73,67 @@ def error_row(doc_id: str, n_pages: int, page_no: int, exc: Exception) -> tuple:
     """The one kind='none', status='error' row of a document (chunk)
     that failed to fetch, parse or decode."""
 
-    detail = json.dumps({"error": f"{type(exc).__name__}: {exc}"}, sort_keys=True)
+    detail = json.dumps({"error": error_text(exc)}, sort_keys=True)
     return (doc_id, n_pages, page_no, 0, 0, "none", None, None, None, None, None,
             None, detail, "error", 0, 0, 0, 0)
+
+
+def row_stage(
+    fn: Callable[..., Iterable[tuple]],
+    schema: T.StructType,
+    on_error: Optional[Callable[[dict[str, Any], Exception], Iterable[tuple]]] = None,
+) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
+    """A per-row function as a ``mapInArrow`` function.
+
+    Each input row is read on its own (``column[i].as_py()``, so a
+    worker holds one row's payload at a time) and passed to ``fn`` by
+    column name; ``fn`` returns or yields output tuples in ``schema``
+    field order, which become one batch per input row. With
+    ``on_error``, an exception in ``fn`` becomes the rows of
+    ``on_error(row, exc)``, after whatever ``fn`` had already yielded
+    (a ``fn`` that returns a list yields nothing before it fails);
+    without it the exception fails the task."""
+
+    def rows_of(row: dict[str, Any]) -> list[tuple]:
+        out: list[tuple] = []
+        try:
+            out.extend(fn(**row))
+        except Exception as exc:
+            if on_error is None:
+                raise
+            out.extend(on_error(row, exc))
+        return out
+
+    def stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        arrow = to_arrow_schema(schema)
+        for batch in batches:
+            names, columns = batch.schema.names, batch.columns
+            for i in range(batch.num_rows):
+                # Nothing in this frame keeps a row's payload or output
+                # rows alive while the next row runs.
+                yield record_batch(
+                    rows_of({name: col[i].as_py() for name, col in zip(names, columns)}),
+                    arrow,
+                )
+
+    return stage
+
+
+def fetch_pdf(pdf_bytes: Optional[bytes], pdf_locator: Optional[str]) -> bytes:
+    """A document's PDF from whichever carrier column its row has: the
+    inline bytes, or the file its locator names (an object-store GET on
+    a cluster), read executor-side."""
+
+    if pdf_locator is not None:
+        with open(pdf_locator, "rb") as fh:
+            return fh.read()
+    return pdf_bytes
+
+
+def error_text(exc: Exception) -> str:
+    """The ``error`` column of a row that failed."""
+
+    return f"{type(exc).__name__}: {exc}"
 
 
 def record_batch(rows: list[tuple], schema: pa.Schema) -> pa.RecordBatch:
@@ -85,6 +145,9 @@ def record_batch(rows: list[tuple], schema: pa.Schema) -> pa.RecordBatch:
         [_column(f.type, values, n) for f, values in zip(schema, columns)],
         schema=schema,
     )
+
+
+_INTS = {pa.int32(): np.int32, pa.int64(): np.int64}
 
 
 def _column(typ: pa.DataType, values: tuple, n: int) -> pa.Array:
@@ -103,8 +166,9 @@ def _column(typ: pa.DataType, values: tuple, n: int) -> pa.Array:
     elif typ == pa.bool_():
         bits = np.fromiter((bool(v) for v in values), dtype=bool, count=n)
         buffers = [validity, pa.py_buffer(np.packbits(bits, bitorder="little"))]
-    elif typ == pa.int32():
-        data = np.fromiter((0 if v is None else v for v in values), dtype=np.int32, count=n)
+    elif typ in _INTS:
+        data = np.fromiter((0 if v is None else v for v in values), dtype=_INTS[typ],
+                           count=n)
         buffers = [validity, pa.py_buffer(data)]
     else:
         raise TypeError(f"no buffer layout for Arrow type {typ}")

@@ -19,11 +19,12 @@ of stage failures.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from .records import error_text, fetch_pdf, row_stage
 
 RENDER_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
@@ -38,7 +39,7 @@ RENDER_SCHEMA = T.StructType([
 #: Accumulator counting pages PNG-encoded by the most recent
 #: `render_pages` relation (tests pin that metadata-only mode never
 #: pays the encode bill — column pruning cannot reach inside
-#: mapInPandas, so the flag is the pruning mechanism).
+#: mapInArrow, so the flag is the pruning mechanism).
 png_encode_acc = None
 
 
@@ -53,7 +54,7 @@ def render_pages(
     ``with_png=False`` is the metadata-only mode: statuses/names are
     computed identically but the PNG bytes are neither encoded nor
     carried (callers projecting only metadata must set it — Spark's
-    column pruning stops at the mapInPandas boundary)."""
+    column pruning stops at the mapInArrow boundary)."""
 
     from ..pagespec import validate_positive_int
 
@@ -63,57 +64,42 @@ def render_pages(
     acc = docs.sparkSession.sparkContext.accumulator(0)
     png_encode_acc = acc
 
-    def render_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def render_row(doc_id, pdf_bytes=None, pdf_locator=None, **_):
         from .. import kernels as K
         from ..pagespec import compute_page_digits, parse_page_spec
         from ..pdfio.parser import PdfDocument
         from ..pdfio.png import encode_png
 
-        cols = [f.name for f in RENDER_SCHEMA.fields]
-        for batch in batches:
-            by_locator = "pdf_locator" in batch.columns
-            carrier = batch["pdf_locator"] if by_locator else batch["pdf_bytes"]
-            rows: list[tuple] = []
-            for doc_id, payload in zip(batch["doc_id"], carrier):
-                try:
-                    if by_locator:
-                        with open(payload, "rb") as fh:
-                            data = fh.read()
-                    else:
-                        data = bytes(payload)
-                    doc = PdfDocument(data)
-                    indices = parse_page_spec(pages, doc.page_count)
-                    digits = compute_page_digits([i + 1 for i in indices])
-                    for idx in indices:
-                        page = doc.load_page(idx)
-                        raster = page.scan
-                        name = f"{prefix}_p{idx + 1:0{digits}d}.png"
-                        if with_png:
-                            if raster is not None:
-                                # fitz renders the page as DISPLAYED:
-                                # /Rotate applies before the zoom matrix.
-                                r = K.rotate_image_cw(raster, page.rotate % 360)
-                                out = K.resample_nearest(r, zoom)
-                            else:
-                                # scan-less page: deterministic microfont
-                                # rasterization (closes the F3 gap — the
-                                # reference rasterizes every page).
-                                from ..bitfont import rasterize_text_page
+        doc = PdfDocument(fetch_pdf(pdf_bytes, pdf_locator))
+        indices = parse_page_spec(pages, doc.page_count)
+        digits = compute_page_digits([i + 1 for i in indices])
+        for idx in indices:
+            page = doc.load_page(idx)
+            raster = page.scan
+            name = f"{prefix}_p{idx + 1:0{digits}d}.png"
+            if not with_png:
+                yield (doc_id, idx, name, None, "written", None)
+                continue
+            if raster is not None:
+                # fitz renders the page as DISPLAYED: /Rotate applies
+                # before the zoom matrix.
+                r = K.rotate_image_cw(raster, page.rotate % 360)
+                out = K.resample_nearest(r, zoom)
+            else:
+                # scan-less page: deterministic microfont rasterization
+                # (closes the F3 gap — the reference rasterizes every
+                # page).
+                from ..bitfont import rasterize_text_page
 
-                                out = K.rotate_image_cw(
-                                    rasterize_text_page(
-                                        page.width, page.height, page.items, zoom
-                                    ),
-                                    page.rotate % 360,
-                                )
-                            acc.add(1)
-                            png = encode_png(out)
-                        else:
-                            png = None
-                        rows.append((doc_id, idx, name, png, "written", None))
-                except Exception as exc:
-                    rows.append((doc_id, None, None, None, "error",
-                                 f"{type(exc).__name__}: {exc}"))
-            yield pd.DataFrame(rows, columns=cols)
+                out = K.rotate_image_cw(
+                    rasterize_text_page(page.width, page.height, page.items, zoom),
+                    page.rotate % 360,
+                )
+            acc.add(1)
+            yield (doc_id, idx, name, encode_png(out), "written", None)
 
-    return docs.mapInPandas(render_batch, schema=RENDER_SCHEMA)
+    def render_error(row: dict[str, Any], exc: Exception):
+        yield (row["doc_id"], None, None, None, "error", error_text(exc))
+
+    return docs.mapInArrow(row_stage(render_row, RENDER_SCHEMA, on_error=render_error),
+                           schema=RENDER_SCHEMA)

@@ -3,7 +3,7 @@
 Local mode stands in for a multi-executor cluster (the sandbox has no
 real one); the knobs below are the ones that matter at fleet scale:
 AQE (runtime re-planning + skew-join handling), Arrow batching for the
-pandas UDF boundary, and shuffle partitioning sized to the parallelism.
+Python stage boundary, and shuffle partitioning sized to the parallelism.
 """
 
 from __future__ import annotations
@@ -61,9 +61,10 @@ def get_spark(
         # 4-core host at local[4] over 64 trivial mapInPandas tasks
         # (6.5-9.4 s without reuse against 3.1-3.8 s with it). Most of
         # that is each fresh worker's pandas import (about 0.33 s and
-        # 38 MB on the same host); the extraction UDFs are mapInArrow
-        # stages that never import pandas (spark/records.py), so their
-        # tasks pay only the fork. The idle watchdog below turns any
+        # 38 MB on the same host); every per-row stage is a mapInArrow
+        # stage that never imports pandas (spark/records.py row_stage),
+        # so their tasks pay only the fork. Only the vector, grouped
+        # and streaming pandas stages still pay that import. The idle watchdog below turns any
         # residual stall into a log line instead of a silent hang.
         .config("spark.python.worker.reuse", "false")
         .config("spark.python.worker.idleTimeoutSeconds", "600")

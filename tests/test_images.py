@@ -94,6 +94,28 @@ def test_corrupt_image_is_isolated(spark, tmp_path):
     assert spans == {"ok.png"}
     errs = records_df.filter("status = 'error'").select("doc_id").collect()
     assert {r["doc_id"] for r in errs} == {"broken.png"}
+    rotated = {r["image_id"]: r for r in
+               rotate_image_folder(read_image_folder(spark, str(d)), 90).collect()}
+    assert rotated["ok.png"]["status"] == "written" and rotated["ok.png"]["error"] is None
+    assert rotated["broken.png"]["status"] == "error"
+    assert rotated["broken.png"]["png"] is None and rotated["broken.png"]["error"]
+
+
+def test_images_plan_shuffles_span_rows_once(spark, image_dir):
+    """The span branch rides ONE doc_id exchange after the UDF (shared
+    with the PDF pipeline): no separate strip-window exchange."""
+
+    import re
+
+    from pdf_toolkit_spark.spark.session import explain_str
+
+    path, _ = image_dir
+    spans_df, _ = extract_image_folder(spark, read_image_folder(spark, path), CFG)
+    plan = explain_str(spans_df, "formatted")
+    assert plan.count("MapInArrow") >= 1 and "MapInPandas" not in plan
+    keys = re.findall(r"hashpartitioning\(([^)]*)\)", plan)
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 2
+    assert sorted(k.split("#")[0] for k in keys) == ["doc_id", "image_id"]
 
 
 def test_images_job_cli_rotate_and_page_images(spark, image_dir, tmp_path):

@@ -1,6 +1,6 @@
-"""The extraction UDFs' Arrow boundary: buffer-built RECORDS batches
-equal pyarrow's own row conversion, and the PDF extraction UDF runs
-without importing pandas."""
+"""The per-row Arrow boundary: buffer-built batches equal pyarrow's own
+row conversion, and the PDF extraction UDF, every per-row stage module
+and an ops stage run without importing pandas."""
 
 from __future__ import annotations
 
@@ -37,8 +37,9 @@ def test_record_batch_equals_from_pylist():
 
 
 def test_record_batch_nullable_columns_of_other_schemas():
-    schema = pa.schema([("image_id", pa.string()), ("png", pa.binary())])
-    rows = [("a", b"x" * 20), (None, None), ("ü", b"")]
+    schema = pa.schema([("image_id", pa.string()), ("png", pa.binary()),
+                        ("phash", pa.int64())])
+    rows = [("a", b"x" * 20, (1 << 59) + 3), (None, None, None), ("ü", b"", -(1 << 40))]
     got = record_batch(rows, schema)
     got.validate(full=True)
     assert got.equals(pa.RecordBatch.from_pylist(_as_dicts(rows, schema), schema=schema))
@@ -65,10 +66,21 @@ _PANDAS_FREE_RUN = textwrap.dedent("""
                         ("n_pages", pa.int32()), ("chunk_start", pa.int32()),
                         ("chunk_end", pa.int32())])
     out = list(make_extract_batch(corpus_config())(iter([record_batch(rows, schema)])))
+
+    # every per-row stage module, and one ops stage driven through the helper
+    import pdf_toolkit_spark.ops
+    import pdf_toolkit_spark.spark.html_job, pdf_toolkit_spark.spark.input
+    import pdf_toolkit_spark.spark.pdfjobs, pdf_toolkit_spark.spark.render
+    from pdf_toolkit_spark.ops.multimodal import PHASH_SCHEMA, _phash_row
+    from pdf_toolkit_spark.spark.records import row_stage
+    docs = pa.schema([("doc_id", pa.int64()), ("payload", pa.binary())])
+    payloads = record_batch([(7, b"seven"), (8, b"eight")], docs)
+    phashes = [b.to_pylist() for b in row_stage(_phash_row, PHASH_SCHEMA)(iter([payloads]))]
     print(json.dumps({
         "chunks": len(rows),
         "batches": [(b.column("doc_id").to_pylist(), b.column("status").to_pylist())
                     for b in out],
+        "phashes": phashes,
         "pandas": "pandas" in sys.modules,
     }))
 """)
@@ -91,4 +103,10 @@ def test_extract_batch_runs_without_pandas():
     assert bad_ids == ["truncated"] and bad_statuses == ["error"]
     for _, statuses in good:
         assert "error" not in statuses and "ok" in statuses
+    from pdf_toolkit_spark.ops.multimodal import _phash_row
+
+    assert result["phashes"] == [
+        [{"doc_id": i, "phash": fp} for i, fp in _phash_row(i, payload)]
+        for i, payload in ((7, b"seven"), (8, b"eight"))
+    ]
     assert result["pandas"] is False

@@ -241,6 +241,20 @@ def test_dry_run_writes_nothing_and_reports_plan(spark, tmp_path):
     assert not os.path.exists(f"{out}/spans")
 
 
+def test_run_leaves_session_arrow_batch_size_alone(spark):
+    """run_extraction does not rewrite session-wide Arrow conf that
+    every later Python stage inherits."""
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    spark.conf.set(key, "8")
+    try:
+        input_df = corpus_dataframe(spark, 2, seed=42, mega_every=0)
+        run_extraction(spark, input_df, dict(CFG, dry_run=True))
+        assert spark.conf.get(key) == "8"
+    finally:
+        spark.conf.set(key, "16")
+
+
 def test_corrupt_documents_are_isolated_not_fatal(spark):
     """One malformed PDF must not kill the stage: it becomes an error
     lineage row, emits no spans, and healthy docs still extract."""
@@ -266,9 +280,9 @@ def test_corrupt_documents_are_isolated_not_fatal(spark):
 
 
 def test_plan_has_single_python_stage(spark):
-    """Plan hygiene: exactly one Python boundary (mapInPandas for the
+    """Plan hygiene: exactly one Python boundary (a mapInArrow for the
     corpus gen is input-side; extraction adds one mapInArrow), no
-    per-row PythonUDF nodes."""
+    per-row PythonUDF nodes and no pandas stage."""
 
     from pdf_toolkit_spark.spark.session import explain_str
 
@@ -278,8 +292,8 @@ def test_plan_has_single_python_stage(spark):
     assert "BatchEvalPython" not in plan        # no row-at-a-time Python
     # exactly two Python stages: corpus generation (input-side) and the
     # extraction UDF — crucially NOT duplicated by the strip stage
-    assert plan.count("MapInPandas") == 1
-    assert plan.count("MapInArrow") == 1
+    assert plan.count("MapInPandas") == 0
+    assert plan.count("MapInArrow") == 2
     assert "Aggregate" in plan
 
 
