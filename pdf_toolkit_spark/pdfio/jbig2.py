@@ -25,10 +25,10 @@ MMR-coded generic regions (T.88 §6.2.6 delegates verbatim to T.6;
 decoded with pdfio/ccitt.py's JDK-cross-validated Group 4 coder),
 immediate generic REFINEMENT regions (T.88 §6.3: GR templates 0/1 at
 nominal GRAT against the page buffer, with TPGRON typical prediction
-— the lossy-base + refine-to-lossless flow), and the MQ arithmetic
-coder of T.88 Annex E
-(the same coder JPEG 2000 uses; the Qe state table is the published
-Table E.1). Generic regions accept ARBITRARY adaptive-pixel offsets
+— the lossy-base + refine-to-lossless flow), all over the MQ
+arithmetic coder of T.88 Annex E (pdfio/mq.py, the one coder JPEG 2000
+uses too; it fails closed once a corrupted stream has run out of coded
+data). Generic regions accept ARBITRARY adaptive-pixel offsets
 (nominal AT rides the fast windowed coder; anything else the general
 per-pixel path — bitstream-identical at nominal AT, which is pinned).
 HALFTONE regions land too (§6.6/§6.7: pattern
@@ -77,6 +77,7 @@ import struct
 import numpy as np
 
 from ..errors import UserError
+from .mq import QE, MQDecoder, MQEncoder, decide
 
 # Fail-closed cap for corrupted streams: T.88 imposes no limit on
 # header-declared bitmap dimensions, so a flipped byte can ask for a
@@ -89,26 +90,6 @@ def _sane_dims(w: int, h: int, what: str) -> None:
     if w * h > _MAX_REGION_PIXELS:
         raise UserError(f"JBIG2: implausible {what} size {w}x{h}.")
 
-
-# T.88 Table E.1: (Qe, NMPS, NLPS, SWITCH)
-_QE = [
-    (0x5601, 1, 1, 1), (0x3401, 2, 6, 0), (0x1801, 3, 9, 0),
-    (0x0AC1, 4, 12, 0), (0x0521, 5, 29, 0), (0x0221, 38, 33, 0),
-    (0x5601, 7, 6, 1), (0x5401, 8, 14, 0), (0x4801, 9, 14, 0),
-    (0x3801, 10, 14, 0), (0x3001, 11, 17, 0), (0x2401, 12, 18, 0),
-    (0x1C01, 13, 20, 0), (0x1601, 29, 21, 0), (0x5601, 15, 14, 1),
-    (0x5401, 16, 14, 0), (0x5101, 17, 15, 0), (0x4801, 18, 16, 0),
-    (0x3801, 19, 17, 0), (0x3401, 20, 18, 0), (0x3001, 21, 19, 0),
-    (0x2801, 22, 19, 0), (0x2401, 23, 20, 0), (0x2201, 24, 21, 0),
-    (0x1C01, 25, 22, 0), (0x1801, 26, 23, 0), (0x1601, 27, 24, 0),
-    (0x1401, 28, 25, 0), (0x1201, 29, 26, 0), (0x1101, 30, 27, 0),
-    (0x0AC1, 31, 28, 0), (0x09C1, 32, 29, 0), (0x08A1, 33, 30, 0),
-    (0x0521, 34, 31, 0), (0x0441, 35, 32, 0), (0x02A1, 36, 33, 0),
-    (0x0221, 37, 34, 0), (0x0141, 38, 35, 0), (0x0111, 39, 36, 0),
-    (0x0085, 40, 37, 0), (0x0049, 41, 38, 0), (0x0025, 42, 39, 0),
-    (0x0015, 43, 40, 0), (0x0009, 44, 41, 0), (0x0005, 45, 42, 0),
-    (0x0001, 45, 43, 0), (0x5601, 46, 46, 0),
-]
 
 #: TPGDON pseudo-pixel context per GB template (T.88 6.2.5.7)
 _TPGD_CX_OF = (0x9B25, 0x0795, 0x00E5, 0x0195)
@@ -136,237 +117,6 @@ _TEMPLATE_SPAN = (
     (1, 1, 2, 2, 2),   # template 2: 10-bit
     (0, -1, 3, 2, 4),  # template 3: 10-bit, single reference row
 )
-
-_N_CX = 1 << 16
-
-
-class MQDecoder:
-    """T.88 Annex E arithmetic decoder (software registers)."""
-
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.bp = 0
-        self.c = self._b(0) << 16
-        self._bytein()
-        self.c = (self.c << 7) & 0xFFFFFFFF
-        self.ct -= 7
-        self.a = 0x8000
-        self.cx_i = bytearray(_N_CX)
-        self.cx_mps = bytearray(_N_CX)
-
-    def _b(self, off: int = 0) -> int:
-        i = self.bp + off
-        return self.data[i] if i < len(self.data) else 0xFF
-
-    def _bytein(self) -> None:
-        if self._b() == 0xFF:
-            if self._b(1) > 0x8F:
-                self.c += 0xFF00
-                self.ct = 8
-            else:
-                self.bp += 1
-                self.c += self._b() << 9
-                self.ct = 7
-        else:
-            self.bp += 1
-            self.c += self._b() << 8
-            self.ct = 8
-
-    def decode(self, cx: int) -> int:
-        i = self.cx_i[cx]
-        mps = self.cx_mps[cx]
-        qe, nmps, nlps, switch = _QE[i]
-        self.a -= qe
-        if ((self.c >> 16) & 0xFFFF) < qe:
-            if self.a < qe:  # LPS exchange: MPS decision
-                d = mps
-                self.cx_i[cx] = nmps
-            else:
-                d = 1 - mps
-                if switch:
-                    self.cx_mps[cx] = 1 - mps
-                self.cx_i[cx] = nlps
-            self.a = qe
-        else:
-            self.c -= qe << 16
-            if self.a & 0x8000:
-                return mps
-            if self.a < qe:  # MPS exchange: LPS decision
-                d = 1 - mps
-                if switch:
-                    self.cx_mps[cx] = 1 - mps
-                self.cx_i[cx] = nlps
-            else:
-                d = mps
-                self.cx_i[cx] = nmps
-        while True:  # RENORMD
-            if self.ct == 0:
-                self._bytein()
-            self.a = (self.a << 1) & 0xFFFF
-            self.c = (self.c << 1) & 0xFFFFFFFF
-            self.ct -= 1
-            if self.a & 0x8000:
-                break
-        return d
-
-    def decode_ctx(self, ctx: "ArithCtx", idx: int) -> int:
-        """decode() against an EXTERNAL context table (the Annex A
-        integer procedures each own one, chronologically interleaved
-        with the GB contexts on the same MQ bitstream). Deliberate
-        duplicate of decode()'s body: decode() is the per-pixel hot
-        loop and must not pay an indirection for the rare IA bits."""
-
-        i = ctx.i[idx]
-        mps = ctx.mps[idx]
-        qe, nmps, nlps, switch = _QE[i]
-        self.a -= qe
-        if ((self.c >> 16) & 0xFFFF) < qe:
-            if self.a < qe:
-                d = mps
-                ctx.i[idx] = nmps
-            else:
-                d = 1 - mps
-                if switch:
-                    ctx.mps[idx] = 1 - mps
-                ctx.i[idx] = nlps
-            self.a = qe
-        else:
-            self.c -= qe << 16
-            if self.a & 0x8000:
-                return mps
-            if self.a < qe:
-                d = 1 - mps
-                if switch:
-                    ctx.mps[idx] = 1 - mps
-                ctx.i[idx] = nlps
-            else:
-                d = mps
-                ctx.i[idx] = nmps
-        while True:  # RENORMD
-            if self.ct == 0:
-                self._bytein()
-            self.a = (self.a << 1) & 0xFFFF
-            self.c = (self.c << 1) & 0xFFFFFFFF
-            self.ct -= 1
-            if self.a & 0x8000:
-                break
-        return d
-
-
-class MQEncoder:
-    """T.88 Annex E arithmetic encoder (dummy leading byte absorbs the
-    BPST-1 convention; stripped at flush)."""
-
-    def __init__(self) -> None:
-        self.a = 0x8000
-        self.c = 0
-        self.ct = 12
-        self.out = bytearray([0x00])  # dummy BPST-1 byte
-        self.cx_i = bytearray(_N_CX)
-        self.cx_mps = bytearray(_N_CX)
-
-    def _byteout(self) -> None:
-        out = self.out
-        if out[-1] == 0xFF:
-            out.append((self.c >> 20) & 0xFF)
-            self.c &= 0xFFFFF
-            self.ct = 7
-        elif not (self.c & 0x8000000):
-            out.append((self.c >> 19) & 0xFF)
-            self.c &= 0x7FFFF
-            self.ct = 8
-        else:
-            out[-1] += 1
-            if out[-1] == 0xFF:
-                self.c &= 0x7FFFFFF
-                out.append((self.c >> 20) & 0xFF)
-                self.c &= 0xFFFFF
-                self.ct = 7
-            else:
-                out.append((self.c >> 19) & 0xFF)
-                self.c &= 0x7FFFF
-                self.ct = 8
-
-    def encode(self, d: int, cx: int) -> None:
-        i = self.cx_i[cx]
-        mps = self.cx_mps[cx]
-        qe, nmps, nlps, switch = _QE[i]
-        if d == mps:  # CODEMPS
-            self.a -= qe
-            if self.a & 0x8000:
-                self.c += qe
-                return
-            if self.a < qe:
-                self.a = qe
-            else:
-                self.c += qe
-            self.cx_i[cx] = nmps
-        else:  # CODELPS
-            self.a -= qe
-            if self.a < qe:
-                self.c += qe
-            else:
-                self.a = qe
-            if switch:
-                self.cx_mps[cx] = 1 - mps
-            self.cx_i[cx] = nlps
-        while True:  # RENORME
-            self.a = (self.a << 1) & 0xFFFF
-            self.c = (self.c << 1) & 0xFFFFFFFF
-            self.ct -= 1
-            if self.ct == 0:
-                self._byteout()
-            if self.a & 0x8000:
-                break
-
-    def encode_ctx(self, d: int, ctx: "ArithCtx", idx: int) -> None:
-        """encode() against an external context table — the encoder
-        twin of MQDecoder.decode_ctx (same hot-loop rationale)."""
-
-        i = ctx.i[idx]
-        mps = ctx.mps[idx]
-        qe, nmps, nlps, switch = _QE[i]
-        if d == mps:  # CODEMPS
-            self.a -= qe
-            if self.a & 0x8000:
-                self.c += qe
-                return
-            if self.a < qe:
-                self.a = qe
-            else:
-                self.c += qe
-            ctx.i[idx] = nmps
-        else:  # CODELPS
-            self.a -= qe
-            if self.a < qe:
-                self.c += qe
-            else:
-                self.a = qe
-            if switch:
-                ctx.mps[idx] = 1 - mps
-            ctx.i[idx] = nlps
-        while True:  # RENORME
-            self.a = (self.a << 1) & 0xFFFF
-            self.c = (self.c << 1) & 0xFFFFFFFF
-            self.ct -= 1
-            if self.ct == 0:
-                self._byteout()
-            if self.a & 0x8000:
-                break
-
-    def flush(self) -> bytes:
-        # SETBITS + two byteouts, in the same register convention as
-        # _byteout (integer window at bits 19-26, carry at bit 27)
-        tempc = self.c + self.a
-        self.c |= 0xFFFF
-        if self.c >= tempc:
-            self.c -= 0x8000
-        self.c = (self.c << self.ct) & 0xFFFFFFFF
-        self._byteout()
-        self.c = (self.c << self.ct) & 0xFFFFFFFF
-        self._byteout()
-        self.out += b"\xff\xac"  # T.88 E.3.8 terminator
-        return bytes(self.out[1:])  # drop the dummy BPST-1 byte
 
 
 # ---------------------------------------------------------------------------
@@ -398,7 +148,7 @@ def decode_int(mq: MQDecoder, ctx: ArithCtx) -> "int | None":
 
     def bit() -> int:
         nonlocal prev
-        b = mq.decode_ctx(ctx, prev)
+        b = mq.decode(prev, ctx.i, ctx.mps)
         prev = ((prev << 1) | b) if prev < 256 else (
             (((prev << 1) | b) & 511) | 256
         )
@@ -426,7 +176,7 @@ def encode_int(mq: MQEncoder, ctx: ArithCtx, value: "int | None") -> None:
 
     def bit(b: int) -> None:
         nonlocal prev
-        mq.encode_ctx(b, ctx, prev)
+        mq.encode(b, prev, ctx.i, ctx.mps)
         prev = ((prev << 1) | b) if prev < 256 else (
             (((prev << 1) | b) & 511) | 256
         )
@@ -457,7 +207,7 @@ def decode_iaid(mq: MQDecoder, ctx: ArithCtx, symcodelen: int) -> int:
 
     prev = 1
     for _ in range(symcodelen):
-        prev = (prev << 1) | mq.decode_ctx(ctx, prev)
+        prev = (prev << 1) | mq.decode(prev, ctx.i, ctx.mps)
     return prev - (1 << symcodelen)
 
 
@@ -465,7 +215,7 @@ def encode_iaid(mq: MQEncoder, ctx: ArithCtx, value: int, symcodelen: int) -> No
     prev = 1
     for i in range(symcodelen - 1, -1, -1):
         b = (value >> i) & 1
-        mq.encode_ctx(b, ctx, prev)
+        mq.encode(b, prev, ctx.i, ctx.mps)
         prev = (prev << 1) | b
 
 
@@ -493,11 +243,12 @@ def decode_generic(
     _sane_dims(w, h, "generic region")
     if mq is None:
         mq = MQDecoder(data)
-    a2, b2, a1, b1, c = _TEMPLATE_SPAN[template]
+    coded, n, cxi, cxm = mq.data, mq.n, mq.cxi, mq.cxm
+    a2, b2, a1, b1, nc = _TEMPLATE_SPAN[template]
     n1 = a1 + b1 + 1
     n2 = a2 + b2 + 1
-    m0, m1, m2 = (1 << c) - 1, (1 << n1) - 1, (1 << n2) - 1
-    s1, s2 = c, c + n1
+    m0, m1, m2 = (1 << nc) - 1, (1 << n1) - 1, (1 << n2) - 1
+    s1, s2 = nc, nc + n1
     tpgd_cx = _TPGD_CX_OF[template]
     j1, j2 = b1 + 1, b2 + 1
     pad = max(j1, j2, 1)
@@ -517,12 +268,25 @@ def decode_generic(
         w1 = sum(up1[i] << (b1 - i) for i in range(j1))
         w2 = sum(up2[i] << (b2 - i) for i in range(j2))
         if skip is None:
+            # mq.decode inlined: registers in locals, MPS fast path here
+            bp, c, ct, a = mq.bp, mq.c, mq.ct, mq.a
             for x in range(w):
-                bit = mq.decode((w2 << s2) | (w1 << s1) | w0)
+                cx = (w2 << s2) | (w1 << s1) | w0
+                i = cxi[cx]
+                qe = QE[i]
+                a -= qe
+                ch = c >> 16
+                if ch >= qe and a & 0x8000:
+                    c -= qe << 16
+                    bit = cxm[cx]
+                else:
+                    bit, a, c, ct, bp = decide(
+                        coded, n, bp, c, ct, a, qe, i, cx, cxi, cxm, ch)
                 row[x] = bit
                 w0 = ((w0 << 1) | bit) & m0
                 w1 = ((w1 << 1) | up1[x + j1]) & m1
                 w2 = ((w2 << 1) | up2[x + j2]) & m2
+            mq.bp, mq.c, mq.ct, mq.a = bp, c, ct, a
         else:
             skip_row = skip[y]
             for x in range(w):
@@ -781,7 +545,7 @@ def decode_refinement(
         mq = MQDecoder(data)
         dec = mq.decode
     else:
-        dec = lambda c: mq.decode_ctx(grctx, c)  # noqa: E731
+        dec = lambda c: mq.decode(c, grctx.i, grctx.mps)  # noqa: E731
     out = np.zeros((h, w), np.uint8)
     rh, rw = ref.shape
     ltp = 0
@@ -828,7 +592,7 @@ def encode_refinement(
         mq = MQEncoder()
         enc = mq.encode
     else:
-        enc = lambda d, c: mq.encode_ctx(d, grctx, c)  # noqa: E731
+        enc = lambda d, c: mq.encode(d, c, grctx.i, grctx.mps)  # noqa: E731
     h, w = img.shape
     rh, rw = ref.shape
     ltp = 0

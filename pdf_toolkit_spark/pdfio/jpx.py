@@ -35,7 +35,7 @@ layout), and RGN maxshift regions of interest (Annex H: ROI
 coefficients upshifted past every background magnitude, undone by the
 decoder's per-coefficient magnitude test)
 driven by the MQ arithmetic coder shared with the JBIG2 codec
-(pdfio/jbig2.py — T.88 Annex E and T.800 Annex C publish the
+(pdfio/mq.py — T.88 Annex E and T.800 Annex C publish the
 identical coder). Grayscale and RGB 8-bit (3 components with the
 reversible RCT or irreversible ICT of Annex G, or none; 4:2:0 and
 4:2:2 chroma subsampling on both wavelet paths — SIZ XRsiz/YRsiz of
@@ -75,7 +75,8 @@ reversible path; quantization-bounded error on the 9/7 path) across
 sizes, level counts and content classes — no JPEG 2000 reference
 codec exists in this container to cross-validate against (same
 disclosure as JBIG2; the shared MQ coder itself is stress-tested in
-test_jbig2).
+test_jbig2.py, and golden bytes in test_codec_golden.py pin the
+encoders' output).
 
 Reference parity: the reference pipeline inherits JPX support from
 PyMuPDF (reference render.py:89 ``fitz.open``); this engine owns the
@@ -90,7 +91,7 @@ import struct
 import numpy as np
 
 from ..errors import UserError
-from .jbig2 import MQDecoder, MQEncoder
+from .mq import QE, MQDecoder, MQEncoder, decide
 
 # ---------------------------------------------------------------------------
 # Tier-1 context assignment (T.800 Annex D)
@@ -101,8 +102,9 @@ from .jbig2 import MQDecoder, MQEncoder
 _CX_RUN = 17
 _CX_UNI = 18
 
-#: T.800 Table D.7 initial MQ states: UNIFORM=46, RUN=3, ZC(0)=4
-_INIT_STATES = ((0, 4), (_CX_RUN, 3), (_CX_UNI, 46))
+#: T.800 Table D.7 initial MQ state per Tier-1 context: UNIFORM=46,
+#: RUN=3, ZC(0)=4, the rest 0
+_T1_STATES = bytes([4] + [0] * 16 + [3, 46])
 
 #: band orientations
 _LL, _HL, _LH, _HH = 0, 1, 2, 3
@@ -164,23 +166,6 @@ for (_hc, _vc), (_cx, _xr) in _SC_TABLE.items():
     _SC_CTXL[(_hc + 1) * 3 + (_vc + 1)] = _cx
     _SC_XORL[(_hc + 1) * 3 + (_vc + 1)] = _xr
 
-#: MQ state tables as flat lists (from the shared T.88/T.800 Table E.1)
-from .jbig2 import _QE as _QE_TBL  # noqa: E402
-
-_QE_Q = [q for q, _, _, _ in _QE_TBL]
-_QE_NMPS = [n for _, n, _, _ in _QE_TBL]
-_QE_NLPS = [n for _, _, n, _ in _QE_TBL]
-_QE_SW = [s for _, _, _, s in _QE_TBL]
-
-
-def _fresh_cx() -> tuple[list, list]:
-    """Tier-1 context state: 19 contexts at the T.800 Table D.7 initial
-    MQ states (UNIFORM=46, RUN=3, ZC(0)=4, rest 0)."""
-
-    cxi = [0] * 19
-    cxi[0], cxi[_CX_RUN], cxi[_CX_UNI] = 4, 3, 46
-    return cxi, [0] * 19
-
 
 def _set_sig(sig, sgn, nbr, j, stride, neg) -> None:
     """Mark coefficient at padded index j significant and bump the
@@ -208,176 +193,6 @@ def _sc(sgn, j, stride) -> int:
     return (hc + 1) * 3 + (vc + 1)
 
 
-# --- MQ driver: encoder batch loop and decoder fast path + helper ---
-
-def _mq_encode_all(decisions, marks=None):
-    """Encode a (cx | d<<8) decision stream with the T.88/T.800 MQ
-    encoder (inlined hot loop; byteout/flush as in jbig2.MQEncoder,
-    cross-checked against it in tests). Returns the codeword segment
-    incl. the 0xFFAC terminator; with ``marks`` (sorted decision
-    indices, typically coding-pass boundaries) also returns the SETTLED
-    output length at each mark — every byte before a watermark is
-    final (the MQ carry can only mutate the newest byte), so layers
-    may split the segment there and a concatenating decoder sees the
-    identical stream."""
-
-    a, c, ct = 0x8000, 0, 12
-    out = bytearray([0])  # dummy BPST-1 byte, stripped at the end
-    cxi, cxm = _fresh_cx()
-    qeq, nmps, nlps, sw = _QE_Q, _QE_NMPS, _QE_NLPS, _QE_SW
-    watermarks: list[int] = []
-    mark_at = list(marks) if marks is not None else []
-    mark_i = 0
-
-    def byteout():
-        nonlocal c, ct
-        if out[-1] == 0xFF:
-            out.append((c >> 20) & 0xFF)
-            c &= 0xFFFFF
-            ct = 7
-        elif not (c & 0x8000000):
-            out.append((c >> 19) & 0xFF)
-            c &= 0x7FFFF
-            ct = 8
-        else:
-            out[-1] += 1
-            if out[-1] == 0xFF:
-                c &= 0x7FFFFFF
-                out.append((c >> 20) & 0xFF)
-                c &= 0xFFFFF
-                ct = 7
-            else:
-                out.append((c >> 19) & 0xFF)
-                c &= 0x7FFFF
-                ct = 8
-
-    for di, v in enumerate(decisions):
-        while mark_i < len(mark_at) and mark_at[mark_i] <= di:
-            watermarks.append(max(0, len(out) - 2))
-            mark_i += 1
-        cx = v & 0xFF
-        i = cxi[cx]
-        mps = cxm[cx]
-        qe = qeq[i]
-        a -= qe
-        if (v >> 8) == mps:
-            if a & 0x8000:
-                c += qe
-                continue
-            if a < qe:
-                a = qe
-            else:
-                c += qe
-            cxi[cx] = nmps[i]
-        else:
-            if a < qe:
-                c += qe
-            else:
-                a = qe
-            if sw[i]:
-                cxm[cx] = 1 - mps
-            cxi[cx] = nlps[i]
-        while True:
-            a = (a << 1) & 0xFFFF
-            c = (c << 1) & 0xFFFFFFFF
-            ct -= 1
-            if ct == 0:
-                byteout()
-            if a & 0x8000:
-                break
-    # flush (T.88 E.3.8, register convention of jbig2.MQEncoder)
-    tempc = c + a
-    c |= 0xFFFF
-    if c >= tempc:
-        c -= 0x8000
-    c = (c << ct) & 0xFFFFFFFF
-    byteout()
-    c = (c << ct) & 0xFFFFFFFF
-    byteout()
-    out += b"\xff\xac"
-    seg = bytes(out[1:])
-    if marks is None:
-        return seg
-    while mark_i < len(mark_at):  # marks at/after the end: full length
-        watermarks.append(len(seg))
-        mark_i += 1
-    return seg, watermarks
-
-
-def _mqd_init(data: bytes) -> list:
-    """MQ decoder INITDEC -> mutable state [bp, c, ct, a]."""
-
-    n = len(data)
-    bp = 0
-    c = (data[0] if n else 0xFF) << 16
-    # first BYTEIN
-    b0 = data[bp] if bp < n else 0xFF
-    if b0 == 0xFF:
-        b1 = data[bp + 1] if bp + 1 < n else 0xFF
-        if b1 > 0x8F:
-            c += 0xFF00
-            ct = 8
-        else:
-            bp += 1
-            c += (data[bp] if bp < n else 0xFF) << 9
-            ct = 7
-    else:
-        bp += 1
-        c += (data[bp] if bp < n else 0xFF) << 8
-        ct = 8
-    c = (c << 7) & 0xFFFFFFFF
-    ct -= 7
-    return [bp, c, ct, 0x8000]
-
-
-def _mqd_slow(data, n, bp, c, ct, a, qe, i, cx, cxi, cxm, ch):
-    """Slow half of a decode step (LPS band or renormalisation); the
-    caller already subtracted qe from a. Mirrors jbig2.MQDecoder."""
-
-    if ch < qe:
-        if a < qe:  # LPS exchange: MPS decision
-            d = cxm[cx]
-            cxi[cx] = _QE_NMPS[i]
-        else:
-            d = 1 - cxm[cx]
-            if _QE_SW[i]:
-                cxm[cx] = 1 - cxm[cx]
-            cxi[cx] = _QE_NLPS[i]
-        a = qe
-    else:
-        c -= qe << 16
-        if a < qe:  # MPS exchange: LPS decision
-            d = 1 - cxm[cx]
-            if _QE_SW[i]:
-                cxm[cx] = 1 - cxm[cx]
-            cxi[cx] = _QE_NLPS[i]
-        else:
-            d = cxm[cx]
-            cxi[cx] = _QE_NMPS[i]
-    while True:  # RENORMD
-        if ct == 0:
-            b0 = data[bp] if bp < n else 0xFF
-            if b0 == 0xFF:
-                b1 = data[bp + 1] if bp + 1 < n else 0xFF
-                if b1 > 0x8F:
-                    c += 0xFF00
-                    ct = 8
-                else:
-                    bp += 1
-                    c += (data[bp] if bp < n else 0xFF) << 9
-                    ct = 7
-            else:
-                bp += 1
-                c += (data[bp] if bp < n else 0xFF) << 8
-                ct = 8
-        a = (a << 1) & 0xFFFF
-        c = (c << 1) & 0xFFFFFFFF
-        ct -= 1
-        if a & 0x8000:
-            break
-    return d, a, c, ct, bp
-
-
 # --- Tier-1 entry points -------------------------------------------------
 
 def t1_encode(
@@ -387,7 +202,7 @@ def t1_encode(
     """EBCOT Tier-1 encode of one codeblock (signed int coefficients)
     -> (codeword segment, number of coding passes, numbps). With
     ``return_marks`` a fourth element carries the settled byte length
-    at each coding-pass boundary (see _mq_encode_all) so a multi-layer
+    at each coding-pass boundary (MQEncoder.settled) so a multi-layer
     encoder can split the segment across quality layers. numbps == 0
     means an all-zero block (caller signals it as not included).
     ``segsym`` appends the segmentation symbol 1010 (UNIFORM context)
@@ -514,10 +329,17 @@ def t1_encode(
                 push(_CX_UNI | (b << 8))
         npasses += 1
         pass_marks.append(len(dec))
-    if return_marks:
-        seg, wm = _mq_encode_all(dec, marks=pass_marks)
-        return seg, npasses, numbps, wm
-    return _mq_encode_all(dec), npasses, numbps
+    enc = MQEncoder(_T1_STATES)
+    wm, lo = [], 0
+    for hi in pass_marks:
+        enc.encode_many(dec[lo:hi])
+        wm.append(enc.settled() if hi < len(dec) else -1)
+        lo = hi
+    seg = enc.flush()
+    if not return_marks:
+        return seg, npasses, numbps
+    # a pass that ends the decision stream settles at the full length
+    return seg, npasses, numbps, [len(seg) if m < 0 else m for m in wm]
 
 
 def t1_decode(
@@ -526,7 +348,7 @@ def t1_decode(
 ) -> np.ndarray:
     """EBCOT Tier-1 decode of one codeword segment -> signed int32
     coefficients. MQ decode is inlined on the fast path (MPS without
-    renormalisation); everything else goes through _mqd_slow.
+    renormalisation); everything else goes through mq.decide.
     ``segsym`` verifies the 1010 segmentation symbol closing every
     cleanup pass (D.5) and fails closed on mismatch."""
 
@@ -537,10 +359,10 @@ def t1_decode(
     refined = bytearray(h * w)
     mag = [0] * (h * w)
     zlut = _ZC_LUTS[orient]
-    cxi, cxm = _fresh_cx()
-    n = len(data)
-    bp_, c, ct, a = _mqd_init(data)
-    qeq = _QE_Q
+    mq = MQDecoder(data, _T1_STATES)
+    cxi, cxm, n = mq.cxi, mq.cxm, mq.n
+    bp_, c, ct, a = mq.bp, mq.c, mq.ct, mq.a
+    qeq = QE
 
     done = 0
     plane = numbps - 1
@@ -574,7 +396,7 @@ def t1_decode(
                                 c -= qe << 16
                                 d = cxm[cx]
                             else:
-                                d, a, c, ct, bp_ = _mqd_slow(
+                                d, a, c, ct, bp_ = decide(
                                     data, n, bp_, c, ct, a, qe, ii, cx,
                                     cxi, cxm, ch)
                             if d:
@@ -588,7 +410,7 @@ def t1_decode(
                                     c -= qe << 16
                                     sb = cxm[cx]
                                 else:
-                                    sb, a, c, ct, bp_ = _mqd_slow(
+                                    sb, a, c, ct, bp_ = decide(
                                         data, n, bp_, c, ct, a, qe, ii, cx,
                                         cxi, cxm, ch)
                                 neg = bool(sb ^ _SC_XORL[k])
@@ -619,7 +441,7 @@ def t1_decode(
                                 c -= qe << 16
                                 d = cxm[cx]
                             else:
-                                d, a, c, ct, bp_ = _mqd_slow(
+                                d, a, c, ct, bp_ = decide(
                                     data, n, bp_, c, ct, a, qe, ii, cx,
                                     cxi, cxm, ch)
                             if d:
@@ -648,7 +470,7 @@ def t1_decode(
                                     c -= qe << 16
                                     d = cxm[cx]
                                 else:
-                                    d, a, c, ct, bp_ = _mqd_slow(
+                                    d, a, c, ct, bp_ = decide(
                                         data, n, bp_, c, ct, a, qe, ii, cx,
                                         cxi, cxm, ch)
                                 if not d:
@@ -664,7 +486,7 @@ def t1_decode(
                                         c -= qe << 16
                                         d = cxm[cx]
                                     else:
-                                        d, a, c, ct, bp_ = _mqd_slow(
+                                        d, a, c, ct, bp_ = decide(
                                             data, n, bp_, c, ct, a, qe, ii,
                                             cx, cxi, cxm, ch)
                                     r = (r << 1) | d
@@ -680,7 +502,7 @@ def t1_decode(
                                     c -= qe << 16
                                     sb = cxm[cx]
                                 else:
-                                    sb, a, c, ct, bp_ = _mqd_slow(
+                                    sb, a, c, ct, bp_ = decide(
                                         data, n, bp_, c, ct, a, qe, ii, cx,
                                         cxi, cxm, ch)
                                 neg = bool(sb ^ _SC_XORL[k])
@@ -704,7 +526,7 @@ def t1_decode(
                                 c -= qe << 16
                                 d = cxm[cx]
                             else:
-                                d, a, c, ct, bp_ = _mqd_slow(
+                                d, a, c, ct, bp_ = decide(
                                     data, n, bp_, c, ct, a, qe, ii, cx,
                                     cxi, cxm, ch)
                             if d:
@@ -718,7 +540,7 @@ def t1_decode(
                                     c -= qe << 16
                                     sb = cxm[cx]
                                 else:
-                                    sb, a, c, ct, bp_ = _mqd_slow(
+                                    sb, a, c, ct, bp_ = decide(
                                         data, n, bp_, c, ct, a, qe, ii, cx,
                                         cxi, cxm, ch)
                                 neg = bool(sb ^ _SC_XORL[k])
@@ -736,7 +558,7 @@ def t1_decode(
                             c -= qe << 16
                             d = cxm[cx]
                         else:
-                            d, a, c, ct, bp_ = _mqd_slow(
+                            d, a, c, ct, bp_ = decide(
                                 data, n, bp_, c, ct, a, qe, ii, cx,
                                 cxi, cxm, ch)
                         sym = (sym << 1) | d
@@ -886,139 +708,6 @@ class _RawReader:
             self.nb = 7 if stuffed else 8
         self.nb -= 1
         return (self.cur >> self.nb) & 1
-
-
-class _MQSegEncoder:
-    """MQ encoder whose CONTEXT state survives segment terminations
-    (T.800 termination without the reset mode keeps the probability
-    estimates; the a/c/ct registers restart per segment)."""
-
-    def __init__(self) -> None:
-        self.cxi, self.cxm = _fresh_cx()
-        self._restart()
-
-    def _restart(self) -> None:
-        self.a, self.c, self.ct = 0x8000, 0, 12
-        self.out = bytearray([0])  # dummy BPST-1 byte, stripped
-
-    def reset_ctx(self) -> None:
-        self.cxi, self.cxm = _fresh_cx()
-
-    def _byteout(self) -> None:
-        out = self.out
-        if out[-1] == 0xFF:
-            out.append((self.c >> 20) & 0xFF)
-            self.c &= 0xFFFFF
-            self.ct = 7
-        elif not (self.c & 0x8000000):
-            out.append((self.c >> 19) & 0xFF)
-            self.c &= 0x7FFFF
-            self.ct = 8
-        else:
-            out[-1] += 1
-            if out[-1] == 0xFF:
-                self.c &= 0x7FFFFFF
-                out.append((self.c >> 20) & 0xFF)
-                self.c &= 0xFFFFF
-                self.ct = 7
-            else:
-                out.append((self.c >> 19) & 0xFF)
-                self.c &= 0x7FFFF
-                self.ct = 8
-
-    def encode_many(self, decisions) -> None:
-        cxi, cxm = self.cxi, self.cxm
-        qeq, nmps, nlps, sw = _QE_Q, _QE_NMPS, _QE_NLPS, _QE_SW
-        a, c, ct = self.a, self.c, self.ct
-        for v in decisions:
-            cx = v & 0xFF
-            i = cxi[cx]
-            mps = cxm[cx]
-            qe = qeq[i]
-            a -= qe
-            if (v >> 8) == mps:
-                if a & 0x8000:
-                    c += qe
-                    continue
-                if a < qe:
-                    a = qe
-                else:
-                    c += qe
-                cxi[cx] = nmps[i]
-            else:
-                if a < qe:
-                    c += qe
-                else:
-                    a = qe
-                if sw[i]:
-                    cxm[cx] = 1 - mps
-                cxi[cx] = nlps[i]
-            while True:
-                a = (a << 1) & 0xFFFF
-                c = (c << 1) & 0xFFFFFFFF
-                ct -= 1
-                if ct == 0:
-                    self.c, self.ct = c, ct
-                    self._byteout()
-                    c, ct = self.c, self.ct
-                if a & 0x8000:
-                    break
-        self.a, self.c, self.ct = a, c, ct
-
-    def terminate(self, pterm: bool = False) -> bytes:
-        # this IS the Annex D FLUSH (SETBITS + two byteouts + drop a
-        # terminal 0xFF), which is exactly what "predictable
-        # termination" (Scb 0x10) mandates for every termination —
-        # the mode forbids the optimal-truncation shortenings some
-        # encoders apply, it does not define a different flush; so
-        # pterm needs no separate MQ branch (raw segments differ:
-        # see _RawWriter.flush)
-        tempc = self.c + self.a
-        self.c |= 0xFFFF
-        if self.c >= tempc:
-            self.c -= 0x8000
-        self.c = (self.c << self.ct) & 0xFFFFFFFF
-        self._byteout()
-        self.c = (self.c << self.ct) & 0xFFFFFFFF
-        self._byteout()
-        seg = bytes(self.out[1:])
-        # a trailing 0xFF would emulate a marker with whatever byte
-        # follows; the decoder's BYTEIN feeds 1s past the end anyway
-        while seg and seg[-1] == 0xFF:
-            seg = seg[:-1]
-        self._restart()
-        return seg
-
-
-class _MQSegReader:
-    """MQ decoder twin of _MQSegEncoder: INITDEC per segment, context
-    state shared across segments."""
-
-    def __init__(self) -> None:
-        self.cxi, self.cxm = _fresh_cx()
-        self.start(b"")
-
-    def start(self, data: bytes) -> None:
-        self.data = data
-        self.n = len(data)
-        self.bp, self.c, self.ct, self.a = _mqd_init(data)
-
-    def reset_ctx(self) -> None:
-        self.cxi, self.cxm = _fresh_cx()
-
-    def bit(self, cx: int) -> int:
-        ii = self.cxi[cx]
-        qe = _QE_Q[ii]
-        self.a -= qe
-        ch = (self.c >> 16) & 0xFFFF
-        if ch >= qe and self.a & 0x8000:
-            self.c -= qe << 16
-            return self.cxm[cx]
-        d, self.a, self.c, self.ct, self.bp = _mqd_slow(
-            self.data, self.n, self.bp, self.c, self.ct, self.a, qe, ii,
-            cx, self.cxi, self.cxm, ch,
-        )
-        return d
 
 
 def t1_encode_styled(
@@ -1186,7 +875,7 @@ def t1_encode_styled(
 
     npasses = pass_i
     segments: "list[bytes]" = []
-    enc = _MQSegEncoder()
+    enc = MQEncoder(_T1_STATES)
     rawbuf: "_RawWriter | None" = None
     for i, (is_raw, data) in enumerate(passes):
         if is_raw:
@@ -1201,9 +890,9 @@ def t1_encode_styled(
                 segments.append(rawbuf.flush(pterm=bool(style & _CB_PREDTERM)))
                 rawbuf = None
             else:
-                segments.append(enc.terminate(pterm=bool(style & _CB_PREDTERM)))
+                segments.append(enc.terminate())
         if style & _CB_RESET:
-            enc.reset_ctx()
+            enc.reset_contexts()
     return segments, npasses, numbps
 
 
@@ -1240,7 +929,7 @@ def t1_decode_styled(
         vc = -1 if vc < -1 else (1 if vc > 1 else vc)
         return (hc + 1) * 3 + (vc + 1)
 
-    mq = _MQSegReader()
+    mq = MQDecoder(b"", _T1_STATES)
     rawr: "_RawReader | None" = None
     seg_i = 0
     need_new = True
@@ -1263,7 +952,7 @@ def t1_decode_styled(
     def end_pass(i: int) -> None:
         nonlocal need_new
         if style & _CB_RESET:
-            mq.reset_ctx()
+            mq.reset_contexts()
         if _term_after(style, i):
             need_new = True
 
@@ -1299,10 +988,10 @@ def t1_decode_styled(
                                     _set_sig(sig, sgn, nbr, j, stride, neg)
                                     mag[i] = bit
                             else:
-                                d = mq.bit(zlut[hn * 15 + vn * 5 + dn])
+                                d = mq.decode(zlut[hn * 15 + vn * 5 + dn])
                                 if d:
                                     k = scx(j, last)
-                                    sb = mq.bit(_SC_CTXL[k])
+                                    sb = mq.decode(_SC_CTXL[k])
                                     neg = bool(sb ^ _SC_XORL[k])
                                     _set_sig(sig, sgn, nbr, j, stride, neg)
                                     mag[i] = bit
@@ -1326,7 +1015,7 @@ def t1_decode_styled(
                                 else:
                                     hn, vn, dn = zc(j, causal and y - y0 == 3)
                                     cx = 15 if hn + vn + dn else 14
-                                d = mq.bit(cx)
+                                d = mq.decode(cx)
                             refined[i] = 1
                             if d:
                                 mag[i] |= bit
@@ -1349,13 +1038,13 @@ def t1_decode_styled(
                                     run_ok = False
                                     break
                             if run_ok:
-                                if not mq.bit(_CX_RUN):
+                                if not mq.decode(_CX_RUN):
                                     continue
-                                r = (mq.bit(_CX_UNI) << 1) | mq.bit(_CX_UNI)
+                                r = (mq.decode(_CX_UNI) << 1) | mq.decode(_CX_UNI)
                                 i = i0 + r * w
                                 j = j0 + r * stride
                                 k = scx(j, causal and r == 3)
-                                sb = mq.bit(_SC_CTXL[k])
+                                sb = mq.decode(_SC_CTXL[k])
                                 neg = bool(sb ^ _SC_XORL[k])
                                 _set_sig(sig, sgn, nbr, j, stride, neg)
                                 mag[i] = bit
@@ -1367,17 +1056,17 @@ def t1_decode_styled(
                                 continue
                             last = causal and yy - y0 == 3
                             hn, vn, dn = zc(j, last)
-                            d = mq.bit(zlut[hn * 15 + vn * 5 + dn])
+                            d = mq.decode(zlut[hn * 15 + vn * 5 + dn])
                             if d:
                                 k = scx(j, last)
-                                sb = mq.bit(_SC_CTXL[k])
+                                sb = mq.decode(_SC_CTXL[k])
                                 neg = bool(sb ^ _SC_XORL[k])
                                 _set_sig(sig, sgn, nbr, j, stride, neg)
                                 mag[i] = bit
                 if segsym:
                     sym = 0
                     for _four in range(4):
-                        sym = (sym << 1) | mq.bit(_CX_UNI)
+                        sym = (sym << 1) | mq.decode(_CX_UNI)
                     if sym != 0b1010:
                         raise UserError("JPX: segmentation symbol mismatch.")
             end_pass(done)

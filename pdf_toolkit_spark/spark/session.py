@@ -13,6 +13,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _half_of_ram() -> str:
+    """Half of the host's RAM (MemTotal in /proc/meminfo) as a JVM size."""
+
+    with open("/proc/meminfo") as f:
+        kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    return f"{kib // 2048}m"
+
+
 def get_spark(
     app_name: str = "pdf-toolkit-spark",
     cores: int | None = None,
@@ -73,9 +81,12 @@ def get_spark(
         # ~32 GiB of PDF rows, which overflows a 48g heap's storage
         # pool (0.6 x heap) and silently spills the cache to disk —
         # the extraction arm then re-reads the corpus from spill files.
-        # 80g keeps the cache resident on this 128 GiB sandbox; on a
-        # real cluster this knob is per-executor memory instead.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "80g"))
+        # Half of RAM keeps that cache resident on a 128 GiB host and
+        # leaves the other half to the Python workers on a small one
+        # (a fixed 80g let the heap grow past 10 GB on a 16 GB host
+        # without swap); on a real cluster this knob is per-executor
+        # memory instead.
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _half_of_ram())
         .config("spark.ui.enabled", "false")
     )
     # Local-mode shuffle dir on tmpfs (stand-in for cluster NVMe): the

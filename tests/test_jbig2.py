@@ -50,6 +50,10 @@ def _cases() -> dict[str, np.ndarray]:
 
 
 def test_mq_coder_stress_roundtrip():
+    import copy
+
+    from pdf_toolkit_spark.pdfio.mq import FILL_BUDGET
+
     rng = np.random.default_rng(11)
     for trial in range(10):
         n = int(rng.integers(1, 4000))
@@ -60,6 +64,80 @@ def test_mq_coder_stress_roundtrip():
             enc.encode(int(b), int(c))
         dec = MQDecoder(enc.flush())
         assert [dec.decode(int(c)) for c in ctxs] == bits, trial
+
+    # the batch encoder, an external context table beside the coder's
+    # own (the Annex A procedures), and segment restarts that keep or
+    # reset the contexts, each segment ended by terminate(), the last
+    # one by flush()
+    states = bytes([4] + [0] * 16 + [3, 46])  # JPX Tier-1 initial states
+    for trial, reset in enumerate([False, True] * 3):
+        segs_in = [
+            [int(cx) | (int(b) << 8) for cx, b in zip(
+                rng.integers(0, 19, k), (rng.random(k) < 0.2))]
+            for k in rng.integers(0, 600, 4)
+        ]
+        ext = [rng.integers(0, 512, 50).tolist(),
+               rng.integers(0, 2, 50).tolist()]
+        enc = MQEncoder(states)
+        one = MQEncoder(states)
+        etab = (bytearray(512), bytearray(512))
+        otab = (bytearray(512), bytearray(512))
+        segs = []
+        for k, dec_in in enumerate(segs_in):
+            enc.encode_many(dec_in)
+            for v in dec_in:
+                one.encode(v >> 8, v & 0xFF)
+            for cx, b in zip(*ext):
+                enc.encode(b, cx, *etab)
+                one.encode(b, cx, *otab)
+            last = k == len(segs_in) - 1
+            segs.append(enc.flush() if last else enc.terminate())
+            seg1 = one.flush() if last else one.terminate()
+            assert seg1 == segs[-1], trial
+            if reset:
+                enc.reset_contexts()
+                one.reset_contexts()
+        assert segs[-1].endswith(b"\xff\xac")
+        assert not any(s.endswith(b"\xff") for s in segs[:-1])
+        dec = MQDecoder(b"", states)
+        dti, dtm = bytearray(512), bytearray(512)
+        for dec_in, seg in zip(segs_in, segs):
+            dec.start(seg)
+            assert [dec.decode(v & 0xFF) for v in dec_in] == [
+                v >> 8 for v in dec_in], trial
+            assert [dec.decode(cx, dti, dtm) for cx in ext[0]] == ext[1]
+            if reset:
+                dec.reset_contexts()
+
+    # a settled watermark is a safe split point: the bytes before it
+    # never change, so a stream cut there and concatenated again (the
+    # JPX quality-layer layout) decodes unchanged
+    for trial in range(5):
+        dec_in = [int(cx) | (int(b) << 8) for cx, b in zip(
+            rng.integers(0, 19, 3000), (rng.random(3000) < 0.3))]
+        enc = MQEncoder(states)
+        cuts = sorted(rng.integers(0, len(dec_in), 3).tolist())
+        marks, lo = [], 0
+        for hi in cuts:
+            enc.encode_many(dec_in[lo:hi])
+            lo = hi
+            marks.append((enc.settled(), copy.deepcopy(enc).flush()))
+        enc.encode_many(dec_in[lo:])
+        seg = enc.flush()
+        for wm, early in marks:
+            assert seg[:wm] == early[:wm], trial
+        cut_at = [0] + [wm for wm, _ in marks] + [len(seg)]
+        parts = [seg[a:b] for a, b in zip(cut_at, cut_at[1:])]
+        dec = MQDecoder(b"".join(parts), states)
+        assert [dec.decode(v & 0xFF) for v in dec_in] == [v >> 8 for v in dec_in]
+
+    # no coded data: a decoder fed only 1-bits (an empty stream, or a
+    # marker at once) gives up after FILL_BUDGET fill bytes
+    for data in (b"", b"\xff" * 64):
+        dec = MQDecoder(data)
+        with pytest.raises(UserError, match="exhausted"):
+            for i in range(FILL_BUDGET * 8 * 1024):
+                dec.decode(i & 0xFFFF)
 
 
 @pytest.mark.parametrize("name", sorted(_cases()))

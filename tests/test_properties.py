@@ -414,6 +414,39 @@ def test_jbig2_corrupted_streams_fail_closed(data):
         pass
 
 
+def test_jbig2_huge_declared_region_fails_fast():
+    """A generic-region header that declares 16384 x 16384 px (2^28,
+    the size cap) over a 304-byte MQ payload: once the coded data is
+    used up the decoder is fed only fill bytes, and it must give up
+    then instead of walking the whole region pixel by pixel."""
+
+    import struct
+    import time
+
+    from pdf_toolkit_spark.errors import UserError
+    from pdf_toolkit_spark.pdfio.jbig2 import (
+        decode_jbig2_embedded, encode_generic,
+    )
+
+    def segment(num: int, seg_type: int, payload: bytes) -> bytes:
+        return (struct.pack(">IB", num, seg_type) + b"\x00\x01"
+                + struct.pack(">I", len(payload)) + payload)
+
+    rng = np.random.default_rng(3)
+    coded = encode_generic((rng.random((40, 60)) < 0.3).astype(np.uint8))
+    assert len(coded) == 304
+    region = (
+        struct.pack(">IIII", 1 << 14, 1 << 14, 0, 0) + b"\x00"
+        + b"\x00" + bytes([3, 0xFF, 0xFD, 0xFF, 2, 0xFE, 0xFE, 0xFE])
+        + coded
+    )  # region info, GB template 0 without TPGDON, nominal AT
+    stream = segment(0, 38, region) + segment(1, 49, b"")
+    t0 = time.perf_counter()
+    with pytest.raises(UserError):
+        decode_jbig2_embedded(stream)
+    assert time.perf_counter() - t0 < 1.0
+
+
 @given(st.data())
 @settings(max_examples=120, deadline=None)
 def test_image_codecs_corrupted_streams_fail_closed(data):
