@@ -413,6 +413,7 @@ def decode_generic_at(
     streams whose adaptive pixels are NOT at the nominal positions
     (T.88 §6.2.5.3 allows any offset in [-128, 127]²)."""
 
+    _sane_dims(w, h, "generic region")
     offsets = _at_offsets(template, at)
     mq = MQDecoder(data)
     tpgd_cx = _TPGD_CX_OF[template]

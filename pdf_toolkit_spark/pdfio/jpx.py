@@ -53,8 +53,12 @@ on decode), selective arithmetic bypass (D.6: raw SPP/MRP from the
 termination, and vertically causal contexts — the multi-segment
 B.10.7 packet layout those modes force is carried on both ends — and
 predictable termination (0x10: the D.4.2.2 MQ flush and alternating
-raw spacer pad on encode; decode is layout-neutral so the plain
-readers handle it, without the optional corruption check).
+raw spacer pad on encode; decode is layout-neutral, without the
+optional corruption check). One Tier-1 pair codes every style:
+``t1_encode``/``t1_decode`` take the block's style as an input and
+handle the modes at pass boundaries, so style 0 keeps its inlined
+loop. Both ends refuse blocks past 31 magnitude bitplanes (the
+coefficients are int32).
 Chroma subsampling composes with explicit precincts, position-major
 progressions (anchors project through the sampling factors) and ROI.
 Tile-part-header coding overrides decode too: COD/COC/QCD/QCC/RGN/POC
@@ -114,6 +118,9 @@ _GAIN = {_LL: 0, _HL: 1, _LH: 1, _HH: 2}
 
 _GUARD_BITS = 2
 _CB_EXP = 6  # default 64x64 code-blocks
+#: Tier-1 codes at most 31 magnitude bitplanes: the decoded
+#: coefficients are int32
+_MAX_BITPLANES = 31
 
 
 def _zc_ctx(orient: int, h: int, v: int, d: int) -> int:
@@ -167,28 +174,40 @@ for (_hc, _vc), (_cx, _xr) in _SC_TABLE.items():
     _SC_XORL[(_hc + 1) * 3 + (_vc + 1)] = _xr
 
 
-def _set_sig(sig, sgn, nbr, j, stride, neg) -> None:
+def _set_sig(sig, sgn, sigb, sgnb, nbr, j, stride, neg) -> None:
     """Mark coefficient at padded index j significant and bump the
-    8-neighborhood significance counters (incremental eligibility)."""
+    8-neighborhood significance counters (incremental eligibility).
 
+    ``sigb``/``sgnb`` are what a coefficient reads from the row below
+    it. They are ``sig``/``sgn`` themselves except in vertically causal
+    mode, where they are copies in which the first row of every stripe
+    never turns significant, and that row bumps no counter of the
+    stripe above: the last row of a stripe sees nothing below it."""
+
+    s = -1 if neg else 1
     sig[j] = 1
-    sgn[j] = -1 if neg else 1
+    sgn[j] = s
     nbr[j - 1] += 1
     nbr[j + 1] += 1
-    nbr[j - stride] += 1
-    nbr[j + stride] += 1
-    nbr[j - stride - 1] += 1
-    nbr[j - stride + 1] += 1
     nbr[j + stride - 1] += 1
+    nbr[j + stride] += 1
     nbr[j + stride + 1] += 1
+    if sigb is not sig:
+        if (j // stride) & 3 == 1:  # padded row y + 1: y % 4 == 0
+            return
+        sigb[j] = 1
+        sgnb[j] = s
+    nbr[j - stride - 1] += 1
+    nbr[j - stride] += 1
+    nbr[j - stride + 1] += 1
 
 
-def _sc(sgn, j, stride) -> int:
+def _sc(sgn, sgnb, j, stride) -> int:
     """Flat sign-context LUT index from the four axial neighbors."""
 
     hc = sgn[j - 1] + sgn[j + 1]
     hc = -1 if hc < -1 else (1 if hc > 1 else hc)
-    vc = sgn[j - stride] + sgn[j + stride]
+    vc = sgn[j - stride] + sgnb[j + stride]
     vc = -1 if vc < -1 else (1 if vc > 1 else vc)
     return (hc + 1) * 3 + (vc + 1)
 
@@ -196,33 +215,49 @@ def _sc(sgn, j, stride) -> int:
 # --- Tier-1 entry points -------------------------------------------------
 
 def t1_encode(
-    coeffs: np.ndarray, orient: int, return_marks: bool = False,
-    segsym: bool = False,
+    coeffs: np.ndarray, orient: int, style: int = 0, segsym: bool = False,
+    return_marks: bool = False,
 ):
     """EBCOT Tier-1 encode of one codeblock (signed int coefficients)
-    -> (codeword segment, number of coding passes, numbps). With
-    ``return_marks`` a fourth element carries the settled byte length
-    at each coding-pass boundary (MQEncoder.settled) so a multi-layer
-    encoder can split the segment across quality layers. numbps == 0
-    means an all-zero block (caller signals it as not included).
+    -> (codeword segments, number of coding passes, numbps). numbps == 0
+    means an all-zero block (caller signals it as not included); more
+    than 31 bitplanes raise UserError.
+
+    ``style`` is the block's code-block style (Table A.19 bits 0x01-
+    0x10). At style 0 the block is one segment, returned as bytes and
+    ended with the ``FF AC`` flush; otherwise a list with one bytes
+    object per terminated segment (Tier-2 signals a length per segment,
+    B.10.7), each ended by MQEncoder.terminate or the raw-bit flush.
     ``segsym`` appends the segmentation symbol 1010 (UNIFORM context)
     to every cleanup pass (D.5 — the error-detection mode).
 
+    With ``return_marks`` the segments come back concatenated into one
+    bytes object, with a fourth element: per coding pass, the byte
+    length that no later pass changes (the segment end at a terminated
+    pass, MQEncoder.settled inside an MQ segment), so that Tier-2 can
+    cut the stream at pass boundaries for quality layers and segments.
+
     The coding-pass walk is a pure state machine producing a (context,
     decision) stream (flat bytearray state, incremental neighbor
-    counters); the MQ coder consumes that stream in one tight loop —
-    the encoder needs no feedback from the arithmetic coder, unlike
-    the decoder below."""
+    counters; raw passes push bare bits); the MQ coder consumes that
+    stream in one tight loop — the encoder needs no feedback from the
+    arithmetic coder, unlike the decoder below."""
 
     h, w = coeffs.shape
     maxmag = int(np.abs(coeffs).max(initial=0))
     if maxmag == 0:
         return (b"", 0, 0, []) if return_marks else (b"", 0, 0)
     numbps = maxmag.bit_length()
+    if numbps > _MAX_BITPLANES:
+        raise UserError("JPX encoder: magnitude needs more than 31 bitplanes.")
     stride = w + 2
-    sig = bytearray((h + 2) * stride)
-    sgn = [0] * ((h + 2) * stride)
-    nbr = bytearray((h + 2) * stride)
+    size = (h + 2) * stride
+    sig = bytearray(size)
+    sgn = [0] * size
+    nbr = bytearray(size)
+    sigb, sgnb = sig, sgn
+    if style & _CB_CAUSAL:
+        sigb, sgnb = bytearray(size), [0] * size
     refined = bytearray(h * w)
     tmag = np.abs(coeffs).ravel().tolist()
     tneg = (coeffs < 0).ravel().tolist()
@@ -237,6 +272,7 @@ def t1_encode(
         first = bp_i == numbps - 1
         if not first:
             # significance propagation
+            raw = _is_raw_pass(style, npasses)
             for y0 in range(0, h, 4):
                 y1 = min(y0 + 4, h)
                 for x in range(w):
@@ -247,19 +283,28 @@ def t1_encode(
                         if sig[j] or not nbr[j]:
                             continue
                         i = i0 + (y - y0) * w
-                        hn = sig[j - 1] + sig[j + 1]
-                        vn = sig[j - stride] + sig[j + stride]
-                        dn = nbr[j] - hn - vn
+                        visited[i] = 1
                         d = 1 if tmag[i] & bit else 0
+                        if raw:
+                            push(d)
+                            if d:
+                                push(1 if tneg[i] else 0)
+                                _set_sig(sig, sgn, sigb, sgnb, nbr, j, stride,
+                                         tneg[i])
+                            continue
+                        hn = sig[j - 1] + sig[j + 1]
+                        vn = sig[j - stride] + sigb[j + stride]
+                        dn = nbr[j] - hn - vn
                         push(zlut[hn * 15 + vn * 5 + dn] | (d << 8))
                         if d:
-                            k = _sc(sgn, j, stride)
+                            k = _sc(sgn, sgnb, j, stride)
                             push(_SC_CTXL[k] | ((tneg[i] ^ _SC_XORL[k]) << 8))
-                            _set_sig(sig, sgn, nbr, j, stride, tneg[i])
-                        visited[i] = 1
+                            _set_sig(sig, sgn, sigb, sgnb, nbr, j, stride,
+                                     tneg[i])
             npasses += 1
             pass_marks.append(len(dec))
             # magnitude refinement
+            raw = _is_raw_pass(style, npasses)
             for y0 in range(0, h, 4):
                 y1 = min(y0 + 4, h)
                 for x in range(w):
@@ -275,7 +320,8 @@ def t1_encode(
                         else:
                             cx = 15 if nbr[j] else 14
                             refined[i] = 1
-                        push(cx | ((1 if tmag[i] & bit else 0) << 8))
+                        d = 1 if tmag[i] & bit else 0
+                        push(d if raw else cx | (d << 8))
             npasses += 1
             pass_marks.append(len(dec))
         # cleanup
@@ -306,9 +352,9 @@ def t1_encode(
                         push(_CX_UNI | ((r & 1) << 8))
                         i = i0 + r * w
                         j = j0 + r * stride
-                        k = _sc(sgn, j, stride)
+                        k = _sc(sgn, sgnb, j, stride)
                         push(_SC_CTXL[k] | ((tneg[i] ^ _SC_XORL[k]) << 8))
-                        _set_sig(sig, sgn, nbr, j, stride, tneg[i])
+                        _set_sig(sig, sgn, sigb, sgnb, nbr, j, stride, tneg[i])
                         y = y0 + r + 1
                 for yy in range(y, y0 + nrows):
                     j = j0 + (yy - y0) * stride
@@ -316,53 +362,96 @@ def t1_encode(
                     if sig[j] or visited[i]:
                         continue
                     hn = sig[j - 1] + sig[j + 1]
-                    vn = sig[j - stride] + sig[j + stride]
+                    vn = sig[j - stride] + sigb[j + stride]
                     dn = nbr[j] - hn - vn
                     d = 1 if tmag[i] & bit else 0
                     push(zlut[hn * 15 + vn * 5 + dn] | (d << 8))
                     if d:
-                        k = _sc(sgn, j, stride)
+                        k = _sc(sgn, sgnb, j, stride)
                         push(_SC_CTXL[k] | ((tneg[i] ^ _SC_XORL[k]) << 8))
-                        _set_sig(sig, sgn, nbr, j, stride, tneg[i])
+                        _set_sig(sig, sgn, sigb, sgnb, nbr, j, stride, tneg[i])
         if segsym:
             for b in (1, 0, 1, 0):
                 push(_CX_UNI | (b << 8))
         npasses += 1
         pass_marks.append(len(dec))
     enc = MQEncoder(_T1_STATES)
-    wm, lo = [], 0
-    for hi in pass_marks:
-        enc.encode_many(dec[lo:hi])
-        wm.append(enc.settled() if hi < len(dec) else -1)
+    rawbuf = _RawWriter()
+    segs: list[bytes] = []
+    wm: list[int] = []
+    base, lo = 0, 0  # bytes in finished segments, decisions coded
+    for i, hi in enumerate(pass_marks):
+        raw = _is_raw_pass(style, i)
+        if raw:
+            for b in dec[lo:hi]:
+                rawbuf.put(b)
+        else:
+            enc.encode_many(dec[lo:hi])
         lo = hi
-    seg = enc.flush()
+        if style and (_term_after(style, i) or i == npasses - 1):
+            if raw:
+                segs.append(rawbuf.flush(pterm=bool(style & _CB_PREDTERM)))
+                rawbuf = _RawWriter()
+            else:
+                segs.append(enc.terminate())
+            base += len(segs[-1])
+            wm.append(base)
+        elif hi == len(dec):
+            # a pass that ends the decision stream settles at the full
+            # length
+            wm.append(-1)
+        else:
+            wm.append(base + (0 if raw else enc.settled()))
+        if style & _CB_RESET:
+            enc.reset_contexts()
+    if not style:
+        segs.append(enc.flush())
     if not return_marks:
-        return seg, npasses, numbps
-    # a pass that ends the decision stream settles at the full length
+        return (segs if style else segs[0]), npasses, numbps
+    seg = b"".join(segs)
     return seg, npasses, numbps, [len(seg) if m < 0 else m for m in wm]
 
 
 def t1_decode(
-    data: bytes, h: int, w: int, orient: int, numbps: int, npasses: int,
-    segsym: bool = False,
+    segs, h: int, w: int, orient: int, numbps: int, npasses: int,
+    style: int = 0, segsym: bool = False,
 ) -> np.ndarray:
-    """EBCOT Tier-1 decode of one codeword segment -> signed int32
-    coefficients. MQ decode is inlined on the fast path (MPS without
-    renormalisation); everything else goes through mq.decide.
-    ``segsym`` verifies the 1010 segmentation symbol closing every
-    cleanup pass (D.5) and fails closed on mismatch."""
+    """EBCOT Tier-1 decode of one code-block's codeword segments (a
+    list, or one bytes object when there is one segment) -> signed
+    int32 coefficients. ``style`` is the block's code-block style as
+    the COD/COC signals it; more than 31 bitplanes raise UserError.
 
+    MQ decode is inlined on the fast path (MPS without renormalisation);
+    everything else goes through mq.decide. The style modes act at pass
+    boundaries: after a terminated pass the next segment starts (MQ
+    INITDEC with the contexts kept, or a raw bit list), and reset mode
+    re-initialises the contexts after every pass. Inside a pass, bypass
+    costs one flag test per coded coefficient and causal mode none (it
+    lives in the ``sigb``/``sgnb`` views, see _set_sig). ``segsym``
+    verifies the 1010 segmentation symbol closing every cleanup pass
+    (D.5) and fails closed on mismatch."""
+
+    if numbps > _MAX_BITPLANES:
+        raise UserError("JPX: more than 31 magnitude bitplanes.")
+    if isinstance(segs, (bytes, bytearray)):
+        segs = [segs]
     stride = w + 2
-    sig = bytearray((h + 2) * stride)
-    sgn = [0] * ((h + 2) * stride)
-    nbr = bytearray((h + 2) * stride)
+    size = (h + 2) * stride
+    sig = bytearray(size)
+    sgn = [0] * size
+    nbr = bytearray(size)
+    sigb, sgnb = sig, sgn
+    if style & _CB_CAUSAL:
+        sigb, sgnb = bytearray(size), [0] * size
     refined = bytearray(h * w)
     mag = [0] * (h * w)
     zlut = _ZC_LUTS[orient]
-    mq = MQDecoder(data, _T1_STATES)
-    cxi, cxm, n = mq.cxi, mq.cxm, mq.n
-    bp_, c, ct, a = mq.bp, mq.c, mq.ct, mq.a
+    mq = MQDecoder(b"", _T1_STATES)
+    cxi, cxm = mq.cxi, mq.cxm
     qeq = QE
+    nxt = next
+    seg_i = 0
+    need_seg = True
 
     done = 0
     plane = numbps - 1
@@ -373,6 +462,19 @@ def t1_decode(
         for which in passes:
             if done >= npasses:
                 break
+            raw = _is_raw_pass(style, done)
+            if need_seg:
+                if seg_i >= len(segs):
+                    raise UserError("JPX: missing codeword segment.")
+                seg = bytes(segs[seg_i])
+                seg_i += 1
+                if raw:
+                    rbits = iter(_raw_bits(seg))
+                else:
+                    mq.start(seg)
+                    data, n, bp_ = mq.data, mq.n, mq.bp
+                    c, ct, a = mq.c, mq.ct, mq.a
+                need_seg = False
             if which == "spp":
                 for y0 in range(0, h, 4):
                     y1 = min(y0 + 4, h)
@@ -384,8 +486,15 @@ def t1_decode(
                             if sig[j] or not nbr[j]:
                                 continue
                             i = i0 + (y - y0) * w
+                            visited[i] = 1
+                            if raw:
+                                if nxt(rbits, 0):
+                                    _set_sig(sig, sgn, sigb, sgnb, nbr, j,
+                                             stride, nxt(rbits, 0))
+                                    mag[i] = bit
+                                continue
                             hn = sig[j - 1] + sig[j + 1]
-                            vn = sig[j - stride] + sig[j + stride]
+                            vn = sig[j - stride] + sigb[j + stride]
                             dn = nbr[j] - hn - vn
                             cx = zlut[hn * 15 + vn * 5 + dn]
                             ii = cxi[cx]
@@ -400,7 +509,7 @@ def t1_decode(
                                     data, n, bp_, c, ct, a, qe, ii, cx,
                                     cxi, cxm, ch)
                             if d:
-                                k = _sc(sgn, j, stride)
+                                k = _sc(sgn, sgnb, j, stride)
                                 cx = _SC_CTXL[k]
                                 ii = cxi[cx]
                                 qe = qeq[ii]
@@ -413,10 +522,9 @@ def t1_decode(
                                     sb, a, c, ct, bp_ = decide(
                                         data, n, bp_, c, ct, a, qe, ii, cx,
                                         cxi, cxm, ch)
-                                neg = bool(sb ^ _SC_XORL[k])
-                                _set_sig(sig, sgn, nbr, j, stride, neg)
+                                _set_sig(sig, sgn, sigb, sgnb, nbr, j, stride,
+                                         sb ^ _SC_XORL[k])
                                 mag[i] = bit
-                            visited[i] = 1
             elif which == "mrp":
                 for y0 in range(0, h, 4):
                     y1 = min(y0 + 4, h)
@@ -433,17 +541,20 @@ def t1_decode(
                             else:
                                 cx = 15 if nbr[j] else 14
                                 refined[i] = 1
-                            ii = cxi[cx]
-                            qe = qeq[ii]
-                            a -= qe
-                            ch = (c >> 16) & 0xFFFF
-                            if ch >= qe and a & 0x8000:
-                                c -= qe << 16
-                                d = cxm[cx]
+                            if raw:
+                                d = nxt(rbits, 0)
                             else:
-                                d, a, c, ct, bp_ = decide(
-                                    data, n, bp_, c, ct, a, qe, ii, cx,
-                                    cxi, cxm, ch)
+                                ii = cxi[cx]
+                                qe = qeq[ii]
+                                a -= qe
+                                ch = (c >> 16) & 0xFFFF
+                                if ch >= qe and a & 0x8000:
+                                    c -= qe << 16
+                                    d = cxm[cx]
+                                else:
+                                    d, a, c, ct, bp_ = decide(
+                                        data, n, bp_, c, ct, a, qe, ii, cx,
+                                        cxi, cxm, ch)
                             if d:
                                 mag[i] |= bit
             else:  # cleanup
@@ -492,7 +603,7 @@ def t1_decode(
                                     r = (r << 1) | d
                                 i = i0 + r * w
                                 j = j0 + r * stride
-                                k = _sc(sgn, j, stride)
+                                k = _sc(sgn, sgnb, j, stride)
                                 cx = _SC_CTXL[k]
                                 ii = cxi[cx]
                                 qe = qeq[ii]
@@ -505,8 +616,8 @@ def t1_decode(
                                     sb, a, c, ct, bp_ = decide(
                                         data, n, bp_, c, ct, a, qe, ii, cx,
                                         cxi, cxm, ch)
-                                neg = bool(sb ^ _SC_XORL[k])
-                                _set_sig(sig, sgn, nbr, j, stride, neg)
+                                _set_sig(sig, sgn, sigb, sgnb, nbr, j, stride,
+                                         sb ^ _SC_XORL[k])
                                 mag[i] = bit
                                 y = y0 + r + 1
                         for yy in range(y, y0 + nrows):
@@ -515,7 +626,7 @@ def t1_decode(
                             if sig[j] or visited[i]:
                                 continue
                             hn = sig[j - 1] + sig[j + 1]
-                            vn = sig[j - stride] + sig[j + stride]
+                            vn = sig[j - stride] + sigb[j + stride]
                             dn = nbr[j] - hn - vn
                             cx = zlut[hn * 15 + vn * 5 + dn]
                             ii = cxi[cx]
@@ -530,7 +641,7 @@ def t1_decode(
                                     data, n, bp_, c, ct, a, qe, ii, cx,
                                     cxi, cxm, ch)
                             if d:
-                                k = _sc(sgn, j, stride)
+                                k = _sc(sgn, sgnb, j, stride)
                                 cx = _SC_CTXL[k]
                                 ii = cxi[cx]
                                 qe = qeq[ii]
@@ -543,8 +654,8 @@ def t1_decode(
                                     sb, a, c, ct, bp_ = decide(
                                         data, n, bp_, c, ct, a, qe, ii, cx,
                                         cxi, cxm, ch)
-                                neg = bool(sb ^ _SC_XORL[k])
-                                _set_sig(sig, sgn, nbr, j, stride, neg)
+                                _set_sig(sig, sgn, sigb, sgnb, nbr, j, stride,
+                                         sb ^ _SC_XORL[k])
                                 mag[i] = bit
                 if segsym:
                     sym = 0
@@ -564,6 +675,10 @@ def t1_decode(
                         sym = (sym << 1) | d
                     if sym != 0b1010:
                         raise UserError("JPX: segmentation symbol mismatch.")
+            if style & _CB_RESET:
+                mq.reset_contexts()
+                cxi, cxm = mq.cxi, mq.cxm
+            need_seg = _term_after(style, done)
             done += 1
         plane -= 1
         passes = ("spp", "mrp", "cup")
@@ -578,20 +693,18 @@ def t1_decode(
 # ---------------------------------------------------------------------------
 # Code-block style modes (T.800 Table A.19): selective arithmetic
 # bypass, per-pass context reset, per-pass termination, vertically
-# causal contexts. These change the ENTROPY-STREAM LAYOUT (multiple
-# codeword segments per block, raw bit runs), so they get their own
-# Tier-1 twin — the style-0 hot path above stays fully inlined.
-# Predictable termination (0x10) is layout-neutral: it only pins the
-# spacer bits each termination emits (D.4.2.2 for MQ segments, the
-# alternating raw pad), so decode needs no twin — the encoder emits
-# the predictable flush and round-trips pin it.
+# causal contexts. Bypass and termination change the codeword-segment
+# layout (several segments per block, raw bit runs); both Tier-1 ends
+# handle them at pass boundaries, so the per-coefficient loops stay the
+# style-0 ones. Predictable termination (0x10) only pins the spacer
+# bits each termination emits (D.4.2.2 for MQ segments, the alternating
+# raw pad), so decode reads it like any terminated stream.
 # ---------------------------------------------------------------------------
 
 _CB_BYPASS, _CB_RESET, _CB_TERMALL, _CB_CAUSAL = 0x01, 0x02, 0x04, 0x08
 _CB_PREDTERM, _CB_SEGSYM = 0x10, 0x20
 #: the modes that change the codeword-segment layout / contexts
 _CB_STYLED = _CB_BYPASS | _CB_RESET | _CB_TERMALL | _CB_CAUSAL
-
 
 def _pass_kind(i: int) -> int:
     """Coding-pass type by absolute index: 0=SPP, 1=MRP, 2=CUP (the
@@ -686,399 +799,23 @@ class _RawWriter:
         return bytes(self.out)
 
 
-class _RawReader:
-    """Decoder twin of _RawWriter; reads 0 past the end (the encoder
-    zero-pads its final byte)."""
-
-    __slots__ = ("data", "pos", "cur", "nb")
-
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-        self.cur = 0
-        self.nb = 0
-
-    def get(self) -> int:
-        if self.nb == 0:
-            if self.pos >= len(self.data):
-                return 0
-            stuffed = self.pos > 0 and self.data[self.pos - 1] == 0xFF
-            self.cur = self.data[self.pos] & (0x7F if stuffed else 0xFF)
-            self.pos += 1
-            self.nb = 7 if stuffed else 8
-        self.nb -= 1
-        return (self.cur >> self.nb) & 1
+#: MSB-first bits of every byte value
+_BYTE_BITS = [
+    tuple((v >> k) & 1 for k in range(7, -1, -1)) for v in range(256)
+]
 
 
-def t1_encode_styled(
-    coeffs: np.ndarray, orient: int, style: int, segsym: bool = False,
-) -> "tuple[list[bytes], int, int]":
-    """EBCOT Tier-1 encode with code-block style modes -> (codeword
-    segments, npasses, numbps). One bytes object per terminated unit
-    (Tier-2 signals a length per segment, B.10.7). Vertically causal
-    mode codes every 4-row stripe as if the next stripe were entirely
-    insignificant (contexts, eligibility, run mode, and sign contexts
-    all mask the below-stripe row)."""
+def _raw_bits(seg: bytes) -> "list[int]":
+    """Data bits of one raw (bypass) segment, the decoder side of
+    _RawWriter: MSB first, the stuffed MSB of every byte after an 0xFF
+    dropped."""
 
-    h, w = coeffs.shape
-    maxmag = int(np.abs(coeffs).max(initial=0))
-    if maxmag == 0:
-        return [], 0, 0
-    numbps = maxmag.bit_length()
-    stride = w + 2
-    sig = bytearray((h + 2) * stride)
-    sgn = [0] * ((h + 2) * stride)
-    nbr = bytearray((h + 2) * stride)
-    refined = bytearray(h * w)
-    tmag = np.abs(coeffs).ravel().tolist()
-    tneg = (coeffs < 0).ravel().tolist()
-    zlut = _ZC_LUTS[orient]
-    causal = bool(style & _CB_CAUSAL)
-
-    def zc(j: int, last: bool):
-        hn = sig[j - 1] + sig[j + 1]
-        vn = sig[j - stride] + (0 if last else sig[j + stride])
-        dn = sig[j - stride - 1] + sig[j - stride + 1] + (
-            0 if last else sig[j + stride - 1] + sig[j + stride + 1]
-        )
-        return hn, vn, dn
-
-    def scx(j: int, last: bool) -> int:
-        hc = sgn[j - 1] + sgn[j + 1]
-        hc = -1 if hc < -1 else (1 if hc > 1 else hc)
-        vc = sgn[j - stride] + (0 if last else sgn[j + stride])
-        vc = -1 if vc < -1 else (1 if vc > 1 else vc)
-        return (hc + 1) * 3 + (vc + 1)
-
-    passes: "list[tuple[bool, list[int]]]" = []
-    pass_i = 0
-    for bp_i in range(numbps - 1, -1, -1):
-        bit = 1 << bp_i
-        visited = bytearray(h * w)
-        if bp_i != numbps - 1:
-            # significance propagation
-            raw = _is_raw_pass(style, pass_i)
-            dec: list[int] = []
-            push = dec.append
-            for y0 in range(0, h, 4):
-                y1 = min(y0 + 4, h)
-                for x in range(w):
-                    i0 = y0 * w + x
-                    j0 = (y0 + 1) * stride + x + 1
-                    for y in range(y0, y1):
-                        j = j0 + (y - y0) * stride
-                        if sig[j]:
-                            continue
-                        last = causal and y - y0 == 3
-                        hn, vn, dn = zc(j, last)
-                        if hn + vn + dn == 0:
-                            continue
-                        i = i0 + (y - y0) * w
-                        d = 1 if tmag[i] & bit else 0
-                        if raw:
-                            push(d)
-                            if d:
-                                push(1 if tneg[i] else 0)
-                        else:
-                            push(zlut[hn * 15 + vn * 5 + dn] | (d << 8))
-                            if d:
-                                k = scx(j, last)
-                                push(_SC_CTXL[k] | ((tneg[i] ^ _SC_XORL[k]) << 8))
-                        if d:
-                            _set_sig(sig, sgn, nbr, j, stride, tneg[i])
-                        visited[i] = 1
-            passes.append((raw, dec))
-            pass_i += 1
-            # magnitude refinement
-            raw = _is_raw_pass(style, pass_i)
-            dec = []
-            push = dec.append
-            for y0 in range(0, h, 4):
-                y1 = min(y0 + 4, h)
-                for x in range(w):
-                    i0 = y0 * w + x
-                    j0 = (y0 + 1) * stride + x + 1
-                    for y in range(y0, y1):
-                        j = j0 + (y - y0) * stride
-                        i = i0 + (y - y0) * w
-                        if not sig[j] or visited[i]:
-                            continue
-                        b_ = 1 if tmag[i] & bit else 0
-                        if raw:
-                            push(b_)
-                        else:
-                            if refined[i]:
-                                cx = 16
-                            else:
-                                hn, vn, dn = zc(j, causal and y - y0 == 3)
-                                cx = 15 if hn + vn + dn else 14
-                            push(cx | (b_ << 8))
-                        refined[i] = 1
-            passes.append((raw, dec))
-            pass_i += 1
-        # cleanup (always MQ)
-        dec = []
-        push = dec.append
-        for y0 in range(0, h, 4):
-            for x in range(w):
-                i0 = y0 * w + x
-                j0 = (y0 + 1) * stride + x + 1
-                y = y0
-                nrows = min(4, h - y0)
-                if nrows == 4:
-                    run_ok = True
-                    for k in range(4):
-                        j = j0 + k * stride
-                        if sig[j] or visited[i0 + k * w]:
-                            run_ok = False
-                            break
-                        hn, vn, dn = zc(j, causal and k == 3)
-                        if hn + vn + dn:
-                            run_ok = False
-                            break
-                    if run_ok:
-                        r = -1
-                        for k in range(4):
-                            if tmag[i0 + k * w] & bit:
-                                r = k
-                                break
-                        if r < 0:
-                            push(_CX_RUN)
-                            continue
-                        push(_CX_RUN | (1 << 8))
-                        push(_CX_UNI | (((r >> 1) & 1) << 8))
-                        push(_CX_UNI | ((r & 1) << 8))
-                        i = i0 + r * w
-                        j = j0 + r * stride
-                        k = scx(j, causal and r == 3)
-                        push(_SC_CTXL[k] | ((tneg[i] ^ _SC_XORL[k]) << 8))
-                        _set_sig(sig, sgn, nbr, j, stride, tneg[i])
-                        y = y0 + r + 1
-                for yy in range(y, y0 + nrows):
-                    j = j0 + (yy - y0) * stride
-                    i = i0 + (yy - y0) * w
-                    if sig[j] or visited[i]:
-                        continue
-                    last = causal and yy - y0 == 3
-                    hn, vn, dn = zc(j, last)
-                    d = 1 if tmag[i] & bit else 0
-                    push(zlut[hn * 15 + vn * 5 + dn] | (d << 8))
-                    if d:
-                        k = scx(j, last)
-                        push(_SC_CTXL[k] | ((tneg[i] ^ _SC_XORL[k]) << 8))
-                        _set_sig(sig, sgn, nbr, j, stride, tneg[i])
-        if segsym:
-            for b_ in (1, 0, 1, 0):
-                push(_CX_UNI | (b_ << 8))
-        passes.append((False, dec))
-        pass_i += 1
-
-    npasses = pass_i
-    segments: "list[bytes]" = []
-    enc = MQEncoder(_T1_STATES)
-    rawbuf: "_RawWriter | None" = None
-    for i, (is_raw, data) in enumerate(passes):
-        if is_raw:
-            if rawbuf is None:
-                rawbuf = _RawWriter()
-            for b_ in data:
-                rawbuf.put(b_)
-        else:
-            enc.encode_many(data)
-        if _term_after(style, i) or i == npasses - 1:
-            if is_raw:
-                segments.append(rawbuf.flush(pterm=bool(style & _CB_PREDTERM)))
-                rawbuf = None
-            else:
-                segments.append(enc.terminate())
-        if style & _CB_RESET:
-            enc.reset_contexts()
-    return segments, npasses, numbps
-
-
-def t1_decode_styled(
-    segs: "list[bytes]", h: int, w: int, orient: int, numbps: int,
-    npasses: int, style: int, segsym: bool = False,
-) -> np.ndarray:
-    """Decoder twin of t1_encode_styled: walks the same pass
-    structure, starting a fresh codeword segment (MQ INITDEC or raw
-    reader) after every termination; MQ context state persists across
-    segments unless the reset mode clears it per pass."""
-
-    stride = w + 2
-    sig = bytearray((h + 2) * stride)
-    sgn = [0] * ((h + 2) * stride)
-    nbr = bytearray((h + 2) * stride)
-    refined = bytearray(h * w)
-    mag = [0] * (h * w)
-    zlut = _ZC_LUTS[orient]
-    causal = bool(style & _CB_CAUSAL)
-
-    def zc(j: int, last: bool):
-        hn = sig[j - 1] + sig[j + 1]
-        vn = sig[j - stride] + (0 if last else sig[j + stride])
-        dn = sig[j - stride - 1] + sig[j - stride + 1] + (
-            0 if last else sig[j + stride - 1] + sig[j + stride + 1]
-        )
-        return hn, vn, dn
-
-    def scx(j: int, last: bool) -> int:
-        hc = sgn[j - 1] + sgn[j + 1]
-        hc = -1 if hc < -1 else (1 if hc > 1 else hc)
-        vc = sgn[j - stride] + (0 if last else sgn[j + stride])
-        vc = -1 if vc < -1 else (1 if vc > 1 else vc)
-        return (hc + 1) * 3 + (vc + 1)
-
-    mq = MQDecoder(b"", _T1_STATES)
-    rawr: "_RawReader | None" = None
-    seg_i = 0
-    need_new = True
-
-    def begin_pass(i: int) -> bool:
-        nonlocal seg_i, need_new, rawr
-        is_raw = _is_raw_pass(style, i)
-        if need_new:
-            if seg_i >= len(segs):
-                raise UserError("JPX: missing codeword segment.")
-            s = bytes(segs[seg_i])
-            seg_i += 1
-            if is_raw:
-                rawr = _RawReader(s)
-            else:
-                mq.start(s)
-            need_new = False
-        return is_raw
-
-    def end_pass(i: int) -> None:
-        nonlocal need_new
-        if style & _CB_RESET:
-            mq.reset_contexts()
-        if _term_after(style, i):
-            need_new = True
-
-    done = 0
-    plane = numbps - 1
-    kinds = ("cup",)
-    while done < npasses and plane >= 0:
-        bit = 1 << plane
-        visited = bytearray(h * w)
-        for which in kinds:
-            if done >= npasses:
-                break
-            is_raw = begin_pass(done)
-            if which == "spp":
-                for y0 in range(0, h, 4):
-                    y1 = min(y0 + 4, h)
-                    for x in range(w):
-                        i0 = y0 * w + x
-                        j0 = (y0 + 1) * stride + x + 1
-                        for y in range(y0, y1):
-                            j = j0 + (y - y0) * stride
-                            if sig[j]:
-                                continue
-                            last = causal and y - y0 == 3
-                            hn, vn, dn = zc(j, last)
-                            if hn + vn + dn == 0:
-                                continue
-                            i = i0 + (y - y0) * w
-                            if is_raw:
-                                d = rawr.get()
-                                if d:
-                                    neg = bool(rawr.get())
-                                    _set_sig(sig, sgn, nbr, j, stride, neg)
-                                    mag[i] = bit
-                            else:
-                                d = mq.decode(zlut[hn * 15 + vn * 5 + dn])
-                                if d:
-                                    k = scx(j, last)
-                                    sb = mq.decode(_SC_CTXL[k])
-                                    neg = bool(sb ^ _SC_XORL[k])
-                                    _set_sig(sig, sgn, nbr, j, stride, neg)
-                                    mag[i] = bit
-                            visited[i] = 1
-            elif which == "mrp":
-                for y0 in range(0, h, 4):
-                    y1 = min(y0 + 4, h)
-                    for x in range(w):
-                        i0 = y0 * w + x
-                        j0 = (y0 + 1) * stride + x + 1
-                        for y in range(y0, y1):
-                            j = j0 + (y - y0) * stride
-                            i = i0 + (y - y0) * w
-                            if not sig[j] or visited[i]:
-                                continue
-                            if is_raw:
-                                d = rawr.get()
-                            else:
-                                if refined[i]:
-                                    cx = 16
-                                else:
-                                    hn, vn, dn = zc(j, causal and y - y0 == 3)
-                                    cx = 15 if hn + vn + dn else 14
-                                d = mq.decode(cx)
-                            refined[i] = 1
-                            if d:
-                                mag[i] |= bit
-            else:  # cleanup — always MQ
-                for y0 in range(0, h, 4):
-                    for x in range(w):
-                        i0 = y0 * w + x
-                        j0 = (y0 + 1) * stride + x + 1
-                        y = y0
-                        nrows = min(4, h - y0)
-                        if nrows == 4:
-                            run_ok = True
-                            for k in range(4):
-                                j = j0 + k * stride
-                                if sig[j] or visited[i0 + k * w]:
-                                    run_ok = False
-                                    break
-                                hn, vn, dn = zc(j, causal and k == 3)
-                                if hn + vn + dn:
-                                    run_ok = False
-                                    break
-                            if run_ok:
-                                if not mq.decode(_CX_RUN):
-                                    continue
-                                r = (mq.decode(_CX_UNI) << 1) | mq.decode(_CX_UNI)
-                                i = i0 + r * w
-                                j = j0 + r * stride
-                                k = scx(j, causal and r == 3)
-                                sb = mq.decode(_SC_CTXL[k])
-                                neg = bool(sb ^ _SC_XORL[k])
-                                _set_sig(sig, sgn, nbr, j, stride, neg)
-                                mag[i] = bit
-                                y = y0 + r + 1
-                        for yy in range(y, y0 + nrows):
-                            j = j0 + (yy - y0) * stride
-                            i = i0 + (yy - y0) * w
-                            if sig[j] or visited[i]:
-                                continue
-                            last = causal and yy - y0 == 3
-                            hn, vn, dn = zc(j, last)
-                            d = mq.decode(zlut[hn * 15 + vn * 5 + dn])
-                            if d:
-                                k = scx(j, last)
-                                sb = mq.decode(_SC_CTXL[k])
-                                neg = bool(sb ^ _SC_XORL[k])
-                                _set_sig(sig, sgn, nbr, j, stride, neg)
-                                mag[i] = bit
-                if segsym:
-                    sym = 0
-                    for _four in range(4):
-                        sym = (sym << 1) | mq.decode(_CX_UNI)
-                    if sym != 0b1010:
-                        raise UserError("JPX: segmentation symbol mismatch.")
-            end_pass(done)
-            done += 1
-        plane -= 1
-        kinds = ("spp", "mrp", "cup")
-    out = np.array(mag, np.int64).reshape(h, w)
-    signs = np.array(
-        [sgn[(y + 1) * stride + 1 : (y + 1) * stride + 1 + w] for y in range(h)],
-        np.int64,
-    )
-    return (out * np.where(signs == 0, 1, signs)).astype(np.int32)
+    bits: list[int] = []
+    prev = 0
+    for b in seg:
+        bits.extend(_BYTE_BITS[b][1:] if prev == 0xFF else _BYTE_BITS[b])
+        prev = b
+    return bits
 
 
 # ---------------------------------------------------------------------------
@@ -2130,22 +1867,10 @@ def encode_jpx(
                         for bi, (y0, x0, ch, cw, _by, _bx) in enumerate(
                             blocks
                         ):
-                            blk_arr = np.ascontiguousarray(
-                                arr[y0 : y0 + ch, x0 : x0 + cw]
-                            ).astype(np.int32)
-                            segments = None
-                            if style_of[ci]:
-                                segments, npasses, numbps = t1_encode_styled(
-                                    blk_arr, orient, style_of[ci],
-                                    segsym=segsym,
-                                )
-                                seg = b"".join(segments)
-                                wm = [len(seg)]
-                            else:
-                                seg, npasses, numbps, wm = t1_encode(
-                                    blk_arr, orient, return_marks=True,
-                                    segsym=segsym,
-                                )
+                            seg, npasses, numbps, wm = t1_encode(
+                                arr[y0 : y0 + ch, x0 : x0 + cw], orient,
+                                style_of[ci], segsym, return_marks=True,
+                            )
                             if numbps > mb:
                                 raise UserError(
                                     "JPX encoder: magnitude exceeds Mb."
@@ -2167,8 +1892,9 @@ def encode_jpx(
                                 zbp_vals[ly, lx] = mb - numbps
                             coded.append(
                                 {"seg": seg, "npasses": npasses,
-                                 "numbps": numbps, "wm": wm, "cuts": cuts,
-                                 "segments": segments,
+                                 "numbps": numbps, "cuts": cuts,
+                                 # byte offset at each pass boundary
+                                 "marks": [0, *wm],
                                  "lblock": 3, "included": False}
                             )
                         st = {"nx": nxp, "ny": nyp, "coded": coded, "mb": mb}
@@ -2192,21 +1918,12 @@ def encode_jpx(
             bands = res_list_of[ci][_ri]
             bw = _BitWriter()
             body = bytearray()
-            contribs = []  # (block, np_l, lo, hi)
-            for orient, nb in bands:
-                st = prec_state[(ci, orient, nb, p)]
-                for blk in st["coded"]:
-                    if not blk["numbps"]:
-                        continue
-                    prev = blk["cuts"][layer - 1] if layer else 0
-                    cut = blk["cuts"][layer]
-                    if cut > prev:
-                        lo = blk["wm"][prev - 1] if prev else 0
-                        hi = (blk["wm"][cut - 1]
-                              if cut < blk["npasses"]
-                              else len(blk["seg"]))
-                        contribs.append((blk, cut - prev, lo, hi))
-            if not contribs:
+            if not any(
+                blk["numbps"]
+                and blk["cuts"][layer] > (blk["cuts"][layer - 1] if layer else 0)
+                for orient, nb in bands
+                for blk in prec_state[(ci, orient, nb, p)]["coded"]
+            ):
                 bw.put(0)  # empty packet: no tag-tree advance
                 packets.append((bw.flush(), b""))
                 continue
@@ -2239,45 +1956,26 @@ def encode_jpx(
                             bw.put(1 if np_l else 0)
                             if np_l == 0:
                                 continue
-                        lo = blk["wm"][prev - 1] if prev else 0
-                        hi = (blk["wm"][cut - 1]
-                              if cut < blk["npasses"]
-                              else len(blk["seg"]))
                         _encode_npasses(bw, np_l)
-                        if blk["segments"] is not None:
-                            # styled block (single layer): one length
-                            # per codeword segment (B.10.7), all read
-                            # with this block's shared Lblock
-                            parts = _seg_partition(style_of[ci], prev, np_l)
-                            lens = [len(s) for s in blk["segments"]]
-                            while any(
-                                max(1, ln).bit_length()
-                                > blk["lblock"]
-                                + int(math.floor(math.log2(cnt)))
-                                for ln, (cnt, _t) in zip(lens, parts)
-                            ):
-                                bw.put(1)
-                                blk["lblock"] += 1
-                            bw.put(0)
-                            for ln, (cnt, _t) in zip(lens, parts):
-                                bw.put_bits(
-                                    ln,
-                                    blk["lblock"]
-                                    + int(math.floor(math.log2(cnt))),
-                                )
-                            body += b"".join(blk["segments"])
-                            continue
-                        nbits = blk["lblock"] + int(
-                            math.floor(math.log2(np_l))
-                        )
-                        need = max(1, hi - lo).bit_length()
-                        while need > nbits:
+                        # one length per codeword segment (B.10.7), all
+                        # read with this block's shared Lblock; style 0
+                        # is one segment, cut at the pass marks
+                        marks = blk["marks"]
+                        parts, end = [], prev
+                        for cnt, _t in _seg_partition(style_of[ci], prev, np_l):
+                            lg = cnt.bit_length() - 1
+                            parts.append((marks[end + cnt] - marks[end], lg))
+                            end += cnt
+                        while any(
+                            max(1, ln).bit_length() > blk["lblock"] + lg
+                            for ln, lg in parts
+                        ):
                             bw.put(1)
                             blk["lblock"] += 1
-                            nbits += 1
                         bw.put(0)
-                        bw.put_bits(hi - lo, nbits)
-                        body += blk["seg"][lo:hi]
+                        for ln, lg in parts:
+                            bw.put_bits(ln, blk["lblock"] + lg)
+                        body += blk["seg"][marks[prev] : marks[cut]]
             packets.append((bw.flush(), bytes(body)))
         # SOP before each packet (body side), EPH after each header
         # (A.8; with packed headers the EPH lives in the PPM/PPT
@@ -3095,18 +2793,10 @@ def _decode_jpx_impl(data: bytes) -> np.ndarray:
             ):
                 if not blk["npasses"]:
                     continue
-                if style_of[ci]:
-                    coeffs = t1_decode_styled(
-                        [bytes(s) for s in blk["segs"]], ch, cw, orient,
-                        blk["numbps"], blk["npasses"], style_of[ci],
-                        segsym=segsym_of[ci],
-                    )
-                else:
-                    coeffs = t1_decode(
-                        bytes(blk["segs"][0]), ch, cw, orient,
-                        blk["numbps"], blk["npasses"], segsym=segsym_of[ci],
-                    )
-                arr[y0 : y0 + ch, x0 : x0 + cw] = coeffs
+                arr[y0 : y0 + ch, x0 : x0 + cw] = t1_decode(
+                    blk["segs"], ch, cw, orient, blk["numbps"],
+                    blk["npasses"], style_of[ci], segsym_of[ci],
+                )
 
         def band(ci: int, orient: int, nb: int) -> np.ndarray:
             q = band_arrays[(ci, orient, nb)]

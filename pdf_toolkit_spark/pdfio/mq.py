@@ -9,7 +9,8 @@ and calls ``decide`` for everything else. ``MQDecoder.decode`` is that
 pattern; ``jpx.t1_decode`` and ``jbig2.decode_generic`` inline it on
 an ``MQDecoder``'s registers. ``MQDecoder.start`` (INITDEC) restarts
 on a new codeword segment with the contexts kept; ``reset_contexts``
-resets them.
+resets them. ``jpx.t1_decode`` calls both at coding-pass boundaries
+and reloads its local registers and context tables after each.
 
 Encoding: ``MQEncoder`` codes one decision at a time (``encode``) or a
 packed ``cx | d << 8`` batch (``encode_many``); ``settled`` is the

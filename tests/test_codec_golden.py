@@ -78,6 +78,22 @@ GOLDEN = {
         lambda: encode_jpx(_gray(), 2, cblk_style=0x1F, cb_exp=4),
         "46abe00a631fe1aa2df8bfd51e549800d6160f1e7607298cd0db74018ae979b1",
     ),
+    "jpx_cblk_style_bypass": (
+        lambda: encode_jpx(_gray(), 2, cblk_style=0x01),
+        "a51dad718b29613c835967b2d0a64e8043cc67332ebc2fb27bbdefc710a0daf0",
+    ),
+    "jpx_cblk_style_causal": (
+        lambda: encode_jpx(_gray(), 2, cblk_style=0x08),
+        "2f08f36fc90d3f87a04b485b1b4d35b7434f0297963bc7caeaa654ed24f6956a",
+    ),
+    # the writer's "jpxbyp" profile: 9/7, bypass + causal + predictable
+    # termination
+    "jpx_cblk_style_jpxbyp": (
+        lambda: encode_jpx(
+            _gray(), 2, irreversible=True, qstep=1 / 16, cblk_style=0x19,
+        ),
+        "a581600630a71dcea0fdd69f98533852cc28e8d45fb34f1d7324823ff77776d1",
+    ),
 }
 
 

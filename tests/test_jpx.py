@@ -70,13 +70,36 @@ def test_dwt53_band_shapes():
     assert lh2.shape == (24, 33) and hh2.shape == (24, 33)
 
 
-@pytest.mark.parametrize("orient", [0, 1, 2, 3])
-def test_tier1_roundtrip(orient):
+#: (code-block style, segsym) pairs: each Table A.19 mode alone, all
+#: of them together, with and without segmentation symbols
+_T1_MODES = [
+    (style, segsym)
+    for style in (0, 0x01, 0x02, 0x04, 0x08, 0x10, 0x1F)
+    for segsym in (False, True)
+]
+
+
+@pytest.mark.parametrize(
+    "orient,style,segsym",
+    [
+        pytest.param(
+            orient, style, segsym,
+            id=str(orient) if (style, segsym) == (0, False)
+            else f"{orient}-{style:#04x}" + ("-segsym" if segsym else ""),
+        )
+        for orient in range(4)
+        for style, segsym in _T1_MODES
+    ],
+)
+def test_tier1_roundtrip(orient, style, segsym):
+    """Heights 5, 7 and 10 end in a partial stripe (causal mode); the
+    +-500 magnitudes give over 10 passes, so bypass reaches raw ones."""
+
     rng = np.random.default_rng(13 + orient)
     for shape in ((4, 4), (7, 3), (64, 64), (10, 64), (1, 1), (5, 1)):
         coeffs = rng.integers(-500, 501, shape).astype(np.int32)
-        seg, npasses, numbps = t1_encode(coeffs, orient)
-        out = t1_decode(seg, *shape, orient, numbps, npasses)
+        seg, npasses, numbps = t1_encode(coeffs, orient, style, segsym)
+        out = t1_decode(seg, *shape, orient, numbps, npasses, style, segsym)
         assert np.array_equal(out, coeffs), (orient, shape)
 
 
@@ -92,6 +115,49 @@ def test_tier1_sparse_block():
     coeffs[37, 22] = -9
     seg, npasses, numbps = t1_encode(coeffs, 3)
     assert np.array_equal(t1_decode(seg, 64, 64, 3, numbps, npasses), coeffs)
+
+
+def test_tier1_missing_segment_fails_closed():
+    """A TERMALL block is one codeword segment per pass; one fewer
+    than its passes need raises instead of decoding from nothing."""
+
+    coeffs = np.random.default_rng(3).integers(-500, 501, (16, 16))
+    segs, npasses, numbps = t1_encode(coeffs.astype(np.int32), 0, 0x04)
+    assert len(segs) == npasses
+    with pytest.raises(UserError, match="missing codeword segment"):
+        t1_decode(segs[:-1], 16, 16, 0, numbps, npasses, 0x04)
+
+
+def test_tier1_segsym_mismatch_fails_closed():
+    coeffs = np.random.default_rng(0).integers(-500, 501, (16, 16))
+    seg, npasses, numbps = t1_encode(coeffs.astype(np.int32), 0)
+    with pytest.raises(UserError, match="segmentation symbol mismatch"):
+        t1_decode(seg, 16, 16, 0, numbps, npasses, segsym=True)
+
+
+def _gray48() -> np.ndarray:
+    return np.random.default_rng(5).integers(0, 256, (48, 48), dtype=np.uint8)
+
+
+def test_encoder_more_than_31_bitplanes_fails_closed():
+    """Coefficients are int32: the ROI upshift of qstep=1/256 band
+    values needs more than 31 magnitude bitplanes, which is refused
+    instead of wrapping to wrong pixels."""
+
+    with pytest.raises(UserError, match="31 bitplanes"):
+        encode_jpx(_gray48(), 2, irreversible=True, qstep=1 / 256, roi=True)
+
+
+def test_decoder_more_than_31_bitplanes_fails_closed():
+    """An RGN maxshift of 40 (Crgn=0, Srgn=0) declares 40 more
+    bitplanes than the blocks carry: refused, not decoded to int32
+    garbage."""
+
+    cs = encode_jpx(_gray48(), 1)
+    at = cs.find(b"\xff\x90")  # first SOT ends the main header
+    rgn = b"\xff\x5e\x00\x05\x00\x00\x28"
+    with pytest.raises(UserError, match="31 magnitude bitplanes"):
+        decode_jpx(cs[:at] + rgn + cs[at:])
 
 
 @pytest.mark.parametrize("levels", [0, 1, 2])

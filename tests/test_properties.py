@@ -447,6 +447,28 @@ def test_jbig2_huge_declared_region_fails_fast():
     assert time.perf_counter() - t0 < 1.0
 
 
+def test_jbig2_huge_region_with_custom_at_fails_closed():
+    """A generic region whose AT pixels are not the nominal ones takes
+    the per-pixel decoder, which must apply the same 2^28 px cap: a
+    corrupted header declaring 2621440 x 1966080 px (found by the
+    property test above) raises UserError, not a 4.7 TiB allocation."""
+
+    import struct
+
+    from pdf_toolkit_spark.errors import UserError
+    from pdf_toolkit_spark.pdfio.jbig2 import decode_jbig2_embedded
+
+    region = (
+        struct.pack(">IIII", 2621440, 1966080, 0, 0) + b"\x00"
+        + b"\x00" + bytes([2, 0xFF, 0xFD, 0xFF, 2, 0xFE, 0xFE, 0xFE])
+        + bytes(8)
+    )  # GB template 0, A1 at (2, -1) in place of the nominal (3, -1)
+    stream = (struct.pack(">IB", 0, 38) + b"\x00\x01"
+              + struct.pack(">I", len(region)) + region)
+    with pytest.raises(UserError, match="implausible generic region"):
+        decode_jbig2_embedded(stream)
+
+
 @given(st.data())
 @settings(max_examples=120, deadline=None)
 def test_image_codecs_corrupted_streams_fail_closed(data):
