@@ -53,7 +53,7 @@ SQL_HASH60 = "(('0x' || substr(md5({e}),1,15))::BIGINT)"
 SQL_NORM = "trim(regexp_replace(lower({e}), '[^a-z0-9]+', ' ', 'g'))"
 
 #: The ops cache registry, the only one: relations persisted for reuse
-#: and memoized scalars (row counts, embedding width), keyed by
+#: and memoized scalars (row counts), keyed by
 #: (kind, sf_dir), plus keyless per-query pins. Spark has no
 #: cross-branch subplan sharing, so a relation feeding N plan branches
 #: (or N queries) would otherwise be recomputed N times.

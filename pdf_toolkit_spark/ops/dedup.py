@@ -18,10 +18,10 @@ Spark-first shapes (all built-in functions, no Python in the hot path):
              come from the join's own group-by counts (light shingles)
              plus a candidate-bounded join over the few capped heavy
              shingles — exact Jaccard with no per-doc set arrays.
-- embedding: exact all-pairs cosine via block-pair dgemm
-             (applyInPandas) — no driver-side collect; the approximate
-             path at extreme scale is the LSH bucket join in
-             ops/similarity.py.
+- embedding: exact all-pairs cosine via block-pair dgemm (a grouped
+             applyInArrow numpy stage) — no driver-side collect; the
+             approximate path at extreme scale is the LSH bucket join
+             in ops/similarity.py.
 
 hash32/hash60 are md5-derived and engine-portable, so every operator
 has an exact DuckDB oracle (verified value-for-value in
@@ -36,9 +36,13 @@ them between corpora in a long-lived session.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..spark.records import batch_stage
 from .common import (
     MINHASH_SALTS,
     SQL_HASH32,
@@ -593,17 +597,14 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dgemm. Output: (vec_a, vec_b, cos_sim) with cos_sim >= 0.4.
 
     Vectors are assigned to B = NEARDUP_BLOCKS blocks by vec_id; each
-    unordered block pair (bi <= bj) becomes one applyInPandas task that
-    runs a bucket-local normalized matrix product. Exact all-pairs
-    (identical to the brute-force oracle) with NO driver-side collect:
-    replication factor B per row, per-task memory 2*(N/B) vectors, and
-    B(B+1)/2 independent tasks — the shape survives a 100x scale-up by
-    raising B (work stays O(n^2) because exact all-pairs is O(n^2); the
-    sub-quadratic approximate path is the LSH bucket join in
-    ops/similarity.py)."""
-
-    import numpy as np
-    import pandas as pd
+    unordered block pair (bi <= bj) becomes one grouped applyInArrow
+    task that runs a bucket-local normalized matrix product. Exact
+    all-pairs (identical to the brute-force oracle) with NO driver-side
+    collect: replication factor B per row, per-task memory 2*(N/B)
+    vectors, and B(B+1)/2 independent tasks — the shape survives a 100x
+    scale-up by raising B (work stays O(n^2) because exact all-pairs is
+    O(n^2); the sub-quadratic approximate path is the LSH bucket join
+    in ops/similarity.py)."""
 
     B = NEARDUP_BLOCKS
     emb = table(spark, sf_dir, "embeddings").select(
@@ -620,29 +621,29 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.greatest("blk", "other").alias("bj"),
     )
 
-    def block_pairs(key, pdf):
-        bi, bj = int(key[0]), int(key[1])
-        ids = pdf["vec_id"].to_numpy()
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
+    def block_pairs(ids, mat, blk, bi, bj):
+        bi, bj = int(bi[0]), int(bj[0])
         mat /= np.linalg.norm(mat, axis=1, keepdims=True)
         if bi == bj:
             sims = mat @ mat.T
             sims = np.sign(sims) * np.floor(np.abs(sims) * 1e6 + 0.5) / 1e6
             ii, jj = np.nonzero((sims >= NEARDUP_COS) & (ids[:, None] < ids[None, :]))
-            va, vb, cs = ids[ii], ids[jj], sims[ii, jj]
-        else:
-            lm = pdf["blk"].to_numpy() == bi
-            l_ids, r_ids = ids[lm], ids[~lm]
-            sims = mat[lm] @ mat[~lm].T
-            # HALF_UP rounding to match Spark/DuckDB round() semantics
-            sims = np.sign(sims) * np.floor(np.abs(sims) * 1e6 + 0.5) / 1e6
-            ii, jj = np.nonzero(sims >= NEARDUP_COS)
-            la, rb = l_ids[ii], r_ids[jj]
-            va, vb, cs = np.minimum(la, rb), np.maximum(la, rb), sims[ii, jj]
-        return pd.DataFrame({"vec_a": va, "vec_b": vb, "cos_sim": cs})
+            return ids[ii], ids[jj], sims[ii, jj]
+        lm = blk == bi
+        l_ids, r_ids = ids[lm], ids[~lm]
+        sims = mat[lm] @ mat[~lm].T
+        # HALF_UP rounding to match Spark/DuckDB round() semantics
+        sims = np.sign(sims) * np.floor(np.abs(sims) * 1e6 + 0.5) / 1e6
+        ii, jj = np.nonzero(sims >= NEARDUP_COS)
+        la, rb = l_ids[ii], r_ids[jj]
+        return np.minimum(la, rb), np.maximum(la, rb), sims[ii, jj]
 
-    return tasks.groupBy("bi", "bj").applyInPandas(
-        block_pairs, "vec_a long, vec_b long, cos_sim double"
+    schema = T.StructType.fromDDL("vec_a long, vec_b long, cos_sim double")
+    stage = batch_stage(block_pairs, schema)
+    # One group is one pa.Table; its rows go to the stage as one batch.
+    return tasks.groupBy("bi", "bj").applyInArrow(
+        lambda group: pa.Table.from_batches(stage(group.combine_chunks().to_batches())),
+        schema,
     )
 
 
@@ -658,7 +659,7 @@ def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bucket recall < 1), but fully deterministic: the oracle reproduces
     the identical md5-derived buckets, so the check is still exact."""
 
-    from .similarity import _buckets, _dim, _dot_expr, _emb, _norm_expr
+    from .similarity import _buckets, _cosine, _emb
 
     b = _buckets(spark, sf_dir)
     pairs = (
@@ -668,19 +669,13 @@ def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
     )
     e = _emb(spark, sf_dir)
-    dim = _dim(spark, sf_dir)
     ea = e.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"))
     eb = e.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"))
-    # Unrolled dot/norms (bit-identical to the _cosine fold — see
-    # similarity._dot_expr) keep the candidate rerank in flat codegen
-    # arithmetic instead of interpreted higher-order lambdas.
-    cos = _dot_expr(F.col("va"), F.col("vb"), dim) / (
-        _norm_expr(F.col("va"), dim) * _norm_expr(F.col("vb"), dim)
-    )
     return (
         pairs.join(ea, "vec_a")
         .join(eb, "vec_b")
-        .select("vec_a", "vec_b", F.round(cos, 6).alias("cos_sim"))
+        .select("vec_a", "vec_b",
+                F.round(_cosine(F.col("va"), F.col("vb")), 6).alias("cos_sim"))
         .filter(F.col("cos_sim") >= NEARDUP_COS)
     )
 

@@ -12,11 +12,16 @@
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import math
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..spark.records import batch_stage
 from .common import SQL_HASH32, cached, table
 from .common import release_caches  # noqa: F401  (re-exported: the ops-wide release)
 
@@ -70,47 +75,11 @@ def _n_vecs(spark: SparkSession, sf_dir: str) -> int:
     return cached(("n_vecs", sf_dir), lambda: table(spark, sf_dir, "embeddings").count())
 
 
-def _dim(spark: SparkSession, sf_dir: str) -> int:
-    """Embedding dimensionality (one-row probe, cached per sf_dir).
-    Knowing the width at plan time lets the hot dot/L2 expressions
-    unroll into flat codegen arithmetic instead of interpreted
-    higher-order folds (same additions in the same order)."""
-
-    def probe() -> int:
-        return table(spark, sf_dir, "embeddings").select(
-            F.size("embedding").alias("d")
-        ).first()["d"]
-
-    return cached(("dim", sf_dir), probe)
-
-
-def _dot_expr(va, vb, dim: int):
-    """Unrolled dot product, bit-identical to the ``aggregate(zip_with)``
-    left fold (((0.0 + p_0) + p_1) + ... with per-step IEEE rounding):
-    plain codegen arithmetic, no per-row array allocation, no
-    interpreted lambda evaluation."""
-
-    acc = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + va.getItem(i) * vb.getItem(i)
-    return acc
-
-
-def _norm_expr(v, dim: int):
-    """Unrolled L2 norm — the same left fold as ``_cosine``'s
-    ``sqrt(aggregate(transform(v, x -> x*x), 0.0, +))``."""
-
-    acc = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + v.getItem(i) * v.getItem(i)
-    return F.sqrt(acc)
-
-
 def _cosine_scores_np(e: DataFrame, cents_rows: list) -> DataFrame:
     """(vec_id, cell, sim_raw): UNROUNDED cosine of every vector in
     ``e`` against every collected centroid, computed with vectorized
-    numpy inside one mapInPandas stage (guide-§4.2 shape: Spark moves
-    the rows, BLAS-class native code does the arithmetic).
+    numpy in one Arrow batch stage (``records.batch_stage``: Spark
+    moves the rows, native code does the arithmetic).
 
     Bit-exactness contract: accumulation loops run over dimensions in
     index order with a 0.0 start, so every partial sum performs the
@@ -123,8 +92,15 @@ def _cosine_scores_np(e: DataFrame, cents_rows: list) -> DataFrame:
     bounded by MAX_CELLS (4096), so collecting it to the driver is
     O(cells x dim) at any corpus size."""
 
-    import numpy as np
-    import pandas as pd
+    schema = T.StructType.fromDDL("vec_id long, cell int, sim_raw double")
+    return e.select("vec_id", "v").mapInArrow(
+        batch_stage(_cosine_scorer(cents_rows), schema), schema
+    )
+
+
+def _cosine_scorer(cents_rows: list):
+    """The numpy body of :func:`_cosine_scores_np`: ``score(ids, V)``
+    -> (vec_id, cell, sim_raw) columns."""
 
     cells = np.array([r["cell"] for r in cents_rows], dtype=np.int32)
     C = np.stack([np.asarray(r["cv"], dtype=np.float64) for r in cents_rows])
@@ -134,29 +110,18 @@ def _cosine_scores_np(e: DataFrame, cents_rows: list) -> DataFrame:
         ncv += C[:, d] * C[:, d]
     ncv = np.sqrt(ncv)
 
-    def score(batches):
-        for b in batches:
-            n = len(b)
-            if n == 0:
-                continue
-            V = np.stack([np.asarray(x, dtype=np.float64) for x in b["v"]])
-            acc = np.zeros((n, len(cells)))
-            nv = np.zeros(n)
-            for d in range(dim):
-                acc += V[:, d : d + 1] * C[None, :, d]
-                nv += V[:, d] * V[:, d]
-            nv = np.sqrt(nv)
-            sim = acc / (nv[:, None] * ncv[None, :])
-            ids = b["vec_id"].to_numpy()
-            yield pd.DataFrame({
-                "vec_id": np.repeat(ids, len(cells)),
-                "cell": np.tile(cells, n),
-                "sim_raw": sim.ravel(),
-            })
+    def score(ids, V):
+        n = len(ids)
+        acc = np.zeros((n, len(cells)))
+        nv = np.zeros(n)
+        for d in range(dim):
+            acc += V[:, d : d + 1] * C[None, :, d]
+            nv += V[:, d] * V[:, d]
+        nv = np.sqrt(nv)
+        sim = acc / (nv[:, None] * ncv[None, :])
+        return np.repeat(ids, len(cells)), np.tile(cells, n), sim.ravel()
 
-    return e.select("vec_id", "v").mapInPandas(
-        score, "vec_id long, cell int, sim_raw double"
-    )
+    return score
 
 
 def _l2_scores_np(parts: DataFrame, book_rows: list) -> DataFrame:
@@ -166,9 +131,6 @@ def _l2_scores_np(parts: DataFrame, book_rows: list) -> DataFrame:
     bit-exactness contract: the (a_i - b_i)^2 terms accumulate in
     index order from 0.0, reproducing :func:`_l2sq`'s fold exactly;
     rounding and the argmin stay in Spark."""
-
-    import numpy as np
-    import pandas as pd
 
     books: dict[int, tuple] = {}
     for r in book_rows:
@@ -181,37 +143,36 @@ def _l2_scores_np(parts: DataFrame, book_rows: list) -> DataFrame:
         for sub, rows in books.items()
     }
 
-    def score(batches):
-        for b in batches:
-            if len(b) == 0:
-                continue
-            subs = b["sub"].to_numpy()
-            ids = b["vec_id"].to_numpy()
-            for sub in np.unique(subs):
-                codes, CB = packed[int(sub)]
-                m = subs == sub
-                SV = np.stack([np.asarray(x, dtype=np.float64) for x in b["sv"][m]])
-                acc = np.zeros((SV.shape[0], len(codes)))
-                for d in range(SV.shape[1]):
-                    t = SV[:, d : d + 1] - CB[None, :, d]
-                    acc += t * t
-                yield pd.DataFrame({
-                    "vec_id": np.repeat(ids[m], len(codes)),
-                    "sub": np.full(int(m.sum()) * len(codes), sub, dtype=np.int32),
-                    "code": np.tile(codes, int(m.sum())),
-                    "d2_raw": acc.ravel(),
-                })
+    def score(ids, subs, SV_all):
+        out = []
+        for sub in np.unique(subs):
+            codes, CB = packed[int(sub)]
+            m = subs == sub
+            SV = SV_all[m]
+            acc = np.zeros((SV.shape[0], len(codes)))
+            for d in range(SV.shape[1]):
+                t = SV[:, d : d + 1] - CB[None, :, d]
+                acc += t * t
+            out.append((
+                np.repeat(ids[m], len(codes)),
+                np.full(int(m.sum()) * len(codes), sub, dtype=np.int32),
+                np.tile(codes, int(m.sum())),
+                acc.ravel(),
+            ))
+        return [np.concatenate(col) for col in zip(*out)]
 
-    return parts.select("vec_id", "sub", "sv").mapInPandas(
-        score, "vec_id long, sub int, code int, d2_raw double"
+    schema = T.StructType.fromDDL("vec_id long, sub int, code int, d2_raw double")
+    return parts.select("vec_id", "sub", "sv").mapInArrow(
+        batch_stage(score, schema), schema
     )
+
 
 # Relations feeding several plan branches (buckets: candidate join +
 # query bucket; centroids: probe list + cell assignment) are held in
-# the ops cache registry (ops/common.py ``cached``), as are the vector
-# count and width. Spark has no cross-branch subplan sharing, so
-# without a persist the whole subtree (k-means chain / hyperplane
-# aggregation) executes once per branch.
+# the ops cache registry (ops/common.py ``cached``), as is the vector
+# count. Spark has no cross-branch subplan sharing, so without a
+# persist the whole subtree (k-means chain / hyperplane aggregation)
+# executes once per branch.
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -260,12 +221,13 @@ def _buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _buckets_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One vectorized-numpy mapInPandas stage: the n_planes x dim
+    """One vectorized-numpy Arrow batch stage: the n_planes x dim
     hyperplane weights are md5-derived CONSTANTS (the same integers the
-    oracle recomputes), computed once on the driver instead of being
-    re-hashed once per (vector, dim, plane) row — the previous explode
-    shape evaluated ~n_vecs * dim * n_planes md5s and shuffled twice;
-    this one evaluates zero md5s at run time and never shuffles at all.
+    oracle recomputes), computed once per Python worker at the width
+    of the vectors it reads instead of being re-hashed once per
+    (vector, dim, plane) row — the previous explode shape evaluated
+    ~n_vecs * dim * n_planes md5s and shuffled twice; this one
+    evaluates n_planes * dim md5s per worker and never shuffles at all.
     Per-plane dot products accumulate in dimension order (0.0 start),
     exactly the order the old (vec_id, p) hash aggregate summed its
     exploded rows, and numpy's element-wise IEEE-754 ops match the
@@ -273,39 +235,29 @@ def _buckets_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     test either side of a +-0.0 boundary agrees too) — is
     bit-identical."""
 
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
     n_planes = planes_for(_n_vecs(spark, sf_dir))
-    dim = _dim(spark, sf_dir)
-    e = _emb(spark, sf_dir)
-    W = np.array(
-        [
-            [
-                int(hashlib.md5(f"{p}:{i}".encode()).hexdigest()[:8], 16)
-                / 2147483648.0
-                - 1.0
-                for i in range(dim)
-            ]
-            for p in range(n_planes)
-        ]
-    )
     powers = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
 
-    def assign(batches):
-        for b in batches:
-            if len(b) == 0:
-                continue
-            V = np.stack([np.asarray(x, dtype=np.float64) for x in b["v"]])
-            acc = np.zeros((V.shape[0], n_planes))
-            for d in range(dim):
-                acc += V[:, d : d + 1] * W[None, :, d]
-            bucket = ((acc >= 0) @ powers).astype(np.int32)
-            yield pd.DataFrame({"vec_id": b["vec_id"].to_numpy(), "bucket": bucket})
+    def assign(ids, V):
+        W = _hyperplanes(n_planes, V.shape[1])
+        acc = np.zeros((V.shape[0], n_planes))
+        for d in range(V.shape[1]):
+            acc += V[:, d : d + 1] * W[None, :, d]
+        return ids, ((acc >= 0) @ powers).astype(np.int32)
 
-    return e.select("vec_id", "v").mapInPandas(assign, "vec_id long, bucket int")
+    schema = T.StructType.fromDDL("vec_id long, bucket int")
+    return _emb(spark, sf_dir).mapInArrow(batch_stage(assign, schema), schema)
+
+
+@functools.cache
+def _hyperplanes(n_planes: int, dim: int) -> np.ndarray:
+    """(n_planes, dim) LSH weights w(p, i) = md5("p:i")[:8] / 2^31 - 1."""
+
+    return np.array([
+        [int(hashlib.md5(f"{p}:{i}".encode()).hexdigest()[:8], 16) / 2147483648.0 - 1.0
+         for i in range(dim)]
+        for p in range(n_planes)
+    ])
 
 
 def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -429,7 +381,7 @@ def cell_assign_relation(e: DataFrame, cents: DataFrame) -> DataFrame:
     if cents_rows:
         # The full-corpus assignment is the single most expensive IVF
         # step; its dot products run as vectorized numpy in one
-        # mapInPandas stage (bit-identical doubles — see
+        # Arrow batch stage (bit-identical doubles — see
         # _cosine_scores_np) while the 6-dp rounding and the
         # (sim desc, cell asc) argmax tie-break stay in Spark exactly
         # as before. Collecting the centroid relation is bounded by

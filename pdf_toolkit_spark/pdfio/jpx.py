@@ -91,6 +91,8 @@ from __future__ import annotations
 
 import math
 import struct
+from itertools import chain, repeat
+from typing import Iterator
 
 import numpy as np
 
@@ -469,7 +471,7 @@ def t1_decode(
                 seg = bytes(segs[seg_i])
                 seg_i += 1
                 if raw:
-                    rbits = iter(_raw_bits(seg))
+                    rbits = _raw_bits(seg)
                 else:
                     mq.start(seg)
                     data, n, bp_ = mq.data, mq.n, mq.bp
@@ -488,9 +490,9 @@ def t1_decode(
                             i = i0 + (y - y0) * w
                             visited[i] = 1
                             if raw:
-                                if nxt(rbits, 0):
+                                if nxt(rbits):
                                     _set_sig(sig, sgn, sigb, sgnb, nbr, j,
-                                             stride, nxt(rbits, 0))
+                                             stride, nxt(rbits))
                                     mag[i] = bit
                                 continue
                             hn = sig[j - 1] + sig[j + 1]
@@ -542,7 +544,7 @@ def t1_decode(
                                 cx = 15 if nbr[j] else 14
                                 refined[i] = 1
                             if raw:
-                                d = nxt(rbits, 0)
+                                d = nxt(rbits)
                             else:
                                 ii = cxi[cx]
                                 qe = qeq[ii]
@@ -805,17 +807,31 @@ _BYTE_BITS = [
 ]
 
 
-def _raw_bits(seg: bytes) -> "list[int]":
+#: Zero bits a raw (bypass) segment may supply past its last byte
+#: before the decoder gives up on it as truncated or corrupted. None
+#: of the 4,491 raw segments of the codec tests, the tier-1 corpora and
+#: the benchmark's archive corpus reads a bit past its end; a stream
+#: with its bypass flag flipped on reads up to 139.
+RAW_FILL_BITS = 0
+
+
+def _raw_bits(seg: bytes) -> "Iterator[int]":
     """Data bits of one raw (bypass) segment, the decoder side of
     _RawWriter: MSB first, the stuffed MSB of every byte after an 0xFF
-    dropped."""
+    dropped, then RAW_FILL_BITS zero bits; one bit more raises
+    UserError."""
 
     bits: list[int] = []
     prev = 0
     for b in seg:
         bits.extend(_BYTE_BITS[b][1:] if prev == 0xFF else _BYTE_BITS[b])
         prev = b
-    return bits
+    return chain(bits, repeat(0, RAW_FILL_BITS), _raw_exhausted())
+
+
+def _raw_exhausted() -> "Iterator[int]":
+    raise UserError("JPX: raw segment exhausted (corrupted or truncated stream).")
+    yield 0
 
 
 # ---------------------------------------------------------------------------

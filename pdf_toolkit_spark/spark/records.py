@@ -1,13 +1,16 @@
 """The engine's one Python boundary: per-row ``mapInArrow`` stages
-(:func:`row_stage`), the Arrow batches they emit (:func:`record_batch`),
-and the RECORDS rows of the extraction UDFs (``spark/job.py`` over PDF
-chunks, ``spark/images.py`` over image files).
+(:func:`row_stage`), whole-batch numpy stages (:func:`batch_stage`),
+the Arrow batches they emit (:func:`record_batch`), and the RECORDS
+rows of the extraction UDFs (``spark/job.py`` over PDF chunks,
+``spark/images.py`` over image files).
 
-Batches are assembled from buffers (numpy offsets and validity bits
-wrapped by ``pa.py_buffer``, then ``pa.Array.from_buffers``). pyarrow's
-``pa.array``, ``pa.scalar`` and ``RecordBatch.from_pylist`` import
-pandas on first use; a forked Python worker that never calls them never
-pays that import (about 0.33 s and 38 MB per worker).
+Batches are read and assembled through buffers (``np.frombuffer`` over
+``Array.buffers()``; numpy offsets and validity bits wrapped by
+``pa.py_buffer``, then ``pa.Array.from_buffers``). pyarrow's
+``pa.array``, ``pa.scalar``, ``Array.to_numpy`` and
+``RecordBatch.from_pylist`` import pandas on first use; a forked Python
+worker that never calls them never pays that import (about 0.33 s and
+38 MB per worker).
 """
 
 from __future__ import annotations
@@ -119,6 +122,49 @@ def row_stage(
     return stage
 
 
+def batch_stage(
+    fn: Callable[..., tuple[np.ndarray, ...]], schema: T.StructType
+) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
+    """A whole-batch numpy function as a ``mapInArrow`` function.
+
+    ``fn`` gets each non-empty input batch's columns, in order, as
+    numpy arrays read from the Arrow buffers: an int or float column as
+    a 1-D array, a list<float|double> column as a 2-D float64
+    ``(rows, width)`` array. A null, or vectors of unequal width within
+    a batch, raise. ``fn`` returns int32, int64 or float64 columns in
+    ``schema`` field order, which become one output batch."""
+
+    def stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        arrow = to_arrow_schema(schema)
+        for batch in batches:
+            if batch.num_rows:
+                out = fn(*map(_numpy, batch.columns))
+                yield pa.RecordBatch.from_arrays(
+                    [_from_numpy(f.type, col) for f, col in zip(arrow, out)], schema=arrow
+                )
+
+    return stage
+
+
+def _numpy(col: pa.Array) -> np.ndarray:
+    if col.null_count:
+        raise ValueError(f"null in a {col.type} column")
+    if pa.types.is_list(col.type):
+        offsets, values = _numpy(col.offsets), _numpy(col.values)
+        n = len(col)
+        width = int(offsets[1] - offsets[0]) if n else 0
+        if (np.diff(offsets) != width).any():
+            raise ValueError(f"vectors of unequal width in a {col.type} column")
+        return values[offsets[0]:offsets[-1]].reshape(n, width).astype(np.float64)
+    data = np.frombuffer(col.buffers()[1], dtype=_NUMPY[col.type])
+    return data[col.offset:col.offset + len(col)]
+
+
+def _from_numpy(typ: pa.DataType, values: np.ndarray) -> pa.Array:
+    data = np.ascontiguousarray(values, dtype=_NUMPY[typ])
+    return pa.Array.from_buffers(typ, len(data), [None, pa.py_buffer(data)])
+
+
 def fetch_pdf(pdf_bytes: Optional[bytes], pdf_locator: Optional[str]) -> bytes:
     """A document's PDF from whichever carrier column its row has: the
     inline bytes, or the file its locator names (an object-store GET on
@@ -147,7 +193,8 @@ def record_batch(rows: list[tuple], schema: pa.Schema) -> pa.RecordBatch:
     )
 
 
-_INTS = {pa.int32(): np.int32, pa.int64(): np.int64}
+_NUMPY = {pa.int32(): np.int32, pa.int64(): np.int64,
+          pa.float32(): np.float32, pa.float64(): np.float64}
 
 
 def _column(typ: pa.DataType, values: tuple, n: int) -> pa.Array:
@@ -166,8 +213,8 @@ def _column(typ: pa.DataType, values: tuple, n: int) -> pa.Array:
     elif typ == pa.bool_():
         bits = np.fromiter((bool(v) for v in values), dtype=bool, count=n)
         buffers = [validity, pa.py_buffer(np.packbits(bits, bitorder="little"))]
-    elif typ in _INTS:
-        data = np.fromiter((0 if v is None else v for v in values), dtype=_INTS[typ],
+    elif typ in _NUMPY:
+        data = np.fromiter((0 if v is None else v for v in values), dtype=_NUMPY[typ],
                            count=n)
         buffers = [validity, pa.py_buffer(data)]
     else:

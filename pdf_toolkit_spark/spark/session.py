@@ -69,11 +69,12 @@ def get_spark(
         # 4-core host at local[4] over 64 trivial mapInPandas tasks
         # (6.5-9.4 s without reuse against 3.1-3.8 s with it). Most of
         # that is each fresh worker's pandas import (about 0.33 s and
-        # 38 MB on the same host); every per-row stage is a mapInArrow
-        # stage that never imports pandas (spark/records.py row_stage),
-        # so their tasks pay only the fork. Only the vector, grouped
-        # and streaming pandas stages still pay that import. The idle watchdog below turns any
-        # residual stall into a log line instead of a silent hang.
+        # 38 MB on the same host); every per-row and vector stage is an
+        # Arrow stage that never imports pandas (spark/records.py
+        # row_stage and batch_stage), so their tasks pay only the fork.
+        # Only the streaming pandas stages still pay that import. The
+        # idle watchdog below turns any residual stall into a log line
+        # instead of a silent hang.
         .config("spark.python.worker.reuse", "false")
         .config("spark.python.worker.idleTimeoutSeconds", "600")
         # Local mode: the driver JVM IS the executor, so size its heap

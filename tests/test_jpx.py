@@ -128,6 +128,20 @@ def test_tier1_missing_segment_fails_closed():
         t1_decode(segs[:-1], 16, 16, 0, numbps, npasses, 0x04)
 
 
+def test_tier1_truncated_raw_segment_fails_closed():
+    """In bypass mode (style 0x01) the first raw segment follows the
+    first MQ segment. Cut to half its bytes, it runs out of bits long
+    before its passes end: the decoder raises instead of reading
+    0-bits past the end."""
+
+    coeffs = np.random.default_rng(7).integers(-500, 501, (32, 32))
+    segs, npasses, numbps = t1_encode(coeffs.astype(np.int32), 0, 0x01)
+    assert np.array_equal(t1_decode(segs, 32, 32, 0, numbps, npasses, 0x01), coeffs)
+    cut = [segs[0], segs[1][: len(segs[1]) // 2], *segs[2:]]
+    with pytest.raises(UserError, match="raw segment exhausted"):
+        t1_decode(cut, 32, 32, 0, numbps, npasses, 0x01)
+
+
 def test_tier1_segsym_mismatch_fails_closed():
     coeffs = np.random.default_rng(0).integers(-500, 501, (16, 16))
     seg, npasses, numbps = t1_encode(coeffs.astype(np.int32), 0)

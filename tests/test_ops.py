@@ -66,6 +66,21 @@ def test_query_matches_oracle(name, spark):
     _assert_matches_oracle(spark, name)
 
 
+#: The vector-math queries (numpy batch stages, folds, grouped dgemm),
+#: checked at every scale factor: their capacity parameters (planes,
+#: cells, codebook sizes) and batch shapes change with corpus size.
+EMBEDDING_QUERIES = sorted(
+    n for n in ORACLES if n.startswith("sim_") or n in (
+        "dedup_embedding_neardup", "dedup_embedding_neardup_lsh", "dedup_semantic")
+)
+
+
+@pytest.mark.parametrize("sf", ["sf0.01", "sf0.1"])
+@pytest.mark.parametrize("name", EMBEDDING_QUERIES)
+def test_embedding_query_matches_oracle_at_scale(name, sf, spark):
+    _assert_matches_oracle(spark, name, SF_DIR.replace("sf0.001", sf))
+
+
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
 def test_non_sql_queries_run_and_return_rows(name, spark):
     df = QUERIES[name](spark, SF_DIR)
@@ -244,8 +259,8 @@ def test_dsir_log2_quantization_agrees_across_engines_at_boundaries(spark):
 
 
 def test_release_caches_forgets_embedding_width(spark, tmp_path):
-    """The embedding width is memoized per sf_dir to unroll the vector
-    math; release_caches() must forget it with the relations. Rewrite
+    """The LSH hyperplanes take their width from each batch of vectors,
+    so nothing width-dependent may outlive release_caches(). Rewrite
     one directory from 8-wide to 64-wide embeddings, releasing in
     between: both widths must still hash like the oracle."""
 

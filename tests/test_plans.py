@@ -66,9 +66,15 @@ def test_resume_anti_join_degrades_to_sort_merge_when_large(spark):
 
 
 def test_no_row_at_a_time_python_in_any_query(spark):
+    """No per-row Python UDF, and no pandas stage: every Python stage of
+    the ops queries is an Arrow stage (``records.row_stage`` or
+    ``records.batch_stage``)."""
+
     for name, fn in QUERIES.items():
         plan = explain_str(fn(spark, SF_DIR), "simple")
         assert "BatchEvalPython" not in plan, f"{name} uses row-at-a-time Python"
+        for node in ("MapInPandas", "FlatMapGroupsInPandas"):
+            assert node not in plan, f"{name} runs {node}"
 
 
 def test_relational_queries_use_whole_stage_codegen(spark):
@@ -86,12 +92,12 @@ def test_relational_queries_use_whole_stage_codegen(spark):
 
 def test_embedding_neardup_is_distributed_block_dgemm(spark):
     """The exact embedding near-dup must be a grouped-map plan (block-
-    pair dgemm via applyInPandas) reading straight from the parquet
-    scan — no cartesian product, no driver-side collect feeding a
-    broadcast variable."""
+    pair dgemm via a grouped applyInArrow) reading straight from the
+    parquet scan — no cartesian product, no driver-side collect feeding
+    a broadcast variable."""
 
     plan = explain_str(QUERIES["dedup_embedding_neardup"](spark, SF_DIR), "simple")
-    assert "FlatMapGroupsInPandas" in plan
+    assert "FlatMapGroupsInArrow" in plan
     assert "CartesianProduct" not in plan
     assert "Scan parquet" in plan
 

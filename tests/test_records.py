@@ -1,19 +1,23 @@
-"""The per-row Arrow boundary: buffer-built batches equal pyarrow's own
-row conversion, and the PDF extraction UDF, every per-row stage module
-and an ops stage run without importing pandas."""
+"""The Arrow boundary: buffer-built batches equal pyarrow's own row
+conversion, the PDF extraction UDF, every per-row stage module, a
+per-row ops stage and a whole-batch vector stage run without importing
+pandas, and the vector stage rejects a null or ragged vector."""
 
 from __future__ import annotations
 
 import json
+import math
 import subprocess
 import sys
 import textwrap
 
 import pyarrow as pa
+import pytest
+from pyspark.sql import types as T
 
 from conftest import REPO_ROOT
 
-from pdf_toolkit_spark.spark.records import RECORDS_ARROW, record_batch
+from pdf_toolkit_spark.spark.records import RECORDS_ARROW, batch_stage, record_batch
 
 
 def _as_dicts(rows: list[tuple], schema: pa.Schema) -> list[dict]:
@@ -76,22 +80,66 @@ _PANDAS_FREE_RUN = textwrap.dedent("""
     docs = pa.schema([("doc_id", pa.int64()), ("payload", pa.binary())])
     payloads = record_batch([(7, b"seven"), (8, b"eight")], docs)
     phashes = [b.to_pylist() for b in row_stage(_phash_row, PHASH_SCHEMA)(iter([payloads]))]
+
+    # one vector scorer through the whole-batch helper, on a sliced
+    # list<double> batch (its offsets start past zero)
+    import numpy as np
+    from pyspark.sql import types as T
+    from pdf_toolkit_spark.ops.similarity import _cosine_scorer
+    from pdf_toolkit_spark.spark.records import batch_stage
+    ids, vecs, cents = %(ids)r, %(vecs)r, %(cents)r
+    def buf(typ, xs, dtype):
+        return pa.Array.from_buffers(typ, len(xs), [None, pa.py_buffer(np.array(xs, dtype))])
+    width = len(vecs[0])
+    offsets = buf(pa.int32(), range(0, len(vecs) * width + 1, width), np.int32)
+    flat = buf(pa.float64(), [x for v in vecs for x in v], np.float64)
+    batch = pa.RecordBatch.from_arrays(
+        [buf(pa.int64(), ids, np.int64), pa.ListArray.from_arrays(offsets, flat)],
+        ["vec_id", "v"]).slice(1)
+    schema = T.StructType([T.StructField("vec_id", T.LongType()),
+                           T.StructField("cell", T.IntegerType()),
+                           T.StructField("sim_raw", T.DoubleType())])
+    scorer = batch_stage(_cosine_scorer([{"cell": c, "cv": v} for c, v in cents]), schema)
+    cosines = [(r["vec_id"], r["cell"], r["sim_raw"].hex())
+               for b in scorer(iter([batch])) for r in b.to_pylist()]
     print(json.dumps({
         "chunks": len(rows),
         "batches": [(b.column("doc_id").to_pylist(), b.column("status").to_pylist())
                     for b in out],
         "phashes": phashes,
+        "cosines": cosines,
         "pandas": "pandas" in sys.modules,
     }))
 """)
 
+_IDS = [3, 5, 8, 13]
+_VECS = [[math.sin(7 * i + d) * (d + 1) for d in range(6)] for i in range(len(_IDS))]
+_CENTS = [(c, [math.cos(3 * c + d) for d in range(6)]) for c in (2, 0, 1)]
+
+
+def _fold_cosine(a: list[float], b: list[float]) -> float:
+    """Spark's ``aggregate(zip_with)`` cosine: dimension-order sums from
+    0.0, one IEEE-754 rounding per operation."""
+
+    dot = na = nb = 0.0
+    for x, y in zip(a, b):
+        dot += x * y
+    for x in a:
+        na += x * x
+    for y in b:
+        nb += y * y
+    return dot / (math.sqrt(na) * math.sqrt(nb))
+
 
 def test_extract_batch_runs_without_pandas():
     """A fresh interpreter runs the extraction UDF over one Arrow batch
-    (chunked docs plus a truncated doc) and never imports pandas."""
+    (chunked docs plus a truncated doc), a per-row ops stage and a
+    vector scorer through ``batch_stage`` and never imports pandas; the
+    scorer's cosines equal the dimension-order fold bit for bit."""
 
+    script = _PANDAS_FREE_RUN % {"ids": _IDS, "vecs": _VECS, "cents": _CENTS}
     proc = subprocess.run(
-        [sys.executable, "-c", _PANDAS_FREE_RUN], cwd=REPO_ROOT,
+        [sys.executable, "-c", script], cwd=REPO_ROOT,
         capture_output=True, text=True, timeout=300, check=True,
     )
     result = json.loads(proc.stdout.strip().splitlines()[-1])
@@ -109,4 +157,25 @@ def test_extract_batch_runs_without_pandas():
         [{"doc_id": i, "phash": fp} for i, fp in _phash_row(i, payload)]
         for i, payload in ((7, b"seven"), (8, b"eight"))
     ]
+    assert result["cosines"] == [
+        [vec_id, cell, _fold_cosine(vec, cv).hex()]
+        for vec_id, vec in zip(_IDS[1:], _VECS[1:]) for cell, cv in _CENTS
+    ]
     assert result["pandas"] is False
+
+
+_VEC_SCHEMA = T.StructType([T.StructField("vec_id", T.LongType())])
+
+
+@pytest.mark.parametrize("vectors", [
+    [[1.0, 2.0], [3.0]],        # ragged
+    [[1.0, 2.0], None],         # null vector
+    [[1.0, 2.0], [3.0, None]],  # null component
+])
+def test_batch_stage_rejects_null_and_ragged_vectors(vectors):
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([1, 2], pa.int64()), pa.array(vectors, pa.list_(pa.float64()))],
+        ["vec_id", "v"])
+    stage = batch_stage(lambda ids, vecs: (ids,), _VEC_SCHEMA)
+    with pytest.raises(ValueError):
+        list(stage(iter([batch])))
